@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
 from ..functions.joins import corpus_rows, scale_pin
+from .dedup import _shingle_index_h12
 
 # ---------------------------------------------------------------------------
 # Decontamination: n-gram overlap against a held-out benchmark slice.
@@ -1240,15 +1241,13 @@ NOVELTY_NGRAM = 3
 
 
 def doc_ngram_novelty(
-    docs: DataFrame,
-    shd_docs: DataFrame | None = None,
-    n_docs: int | None = None,
+    docs: DataFrame, shd_docs: DataFrame | None = None
 ) -> DataFrame:
     """Per-doc novelty: fraction of its distinct 3-grams it PIONEERED.
 
     ``shd_docs`` — optional caller-materialized DISTINCT hashed shingle
-    index of ``docs`` (exact ``(doc_id, h1, h2)`` schema, the
-    dedup._shingle_h12 contract; shared by the curation cascade). Its
+    index of ``docs`` (the dedup._shingle_index_h12 schema contract;
+    shared by the curation cascade). Its
     ``h1`` is definitionally :func:`md5_long` of the same 3-word
     shingle string, so ``distinct (doc_id, h1)`` is set-identical to
     this op's own ``distinct (doc_id, g)`` — the re-distinct collapses
@@ -1269,8 +1268,9 @@ def doc_ngram_novelty(
     hash -> per-doc counts; every shuffle carries hashes, never text.
     """
     if shd_docs is not None:
-        assert set(shd_docs.columns) == {"doc_id", "h1", "h2"}, shd_docs.columns
-        sh = shd_docs.select("doc_id", F.col("h1").alias("g")).distinct()
+        sh = _shingle_index_h12(shd_docs).select(
+            "doc_id", F.col("h1").alias("g")
+        ).distinct()
     else:
         sh = (
             _shingle_rows(docs, NOVELTY_NGRAM)
@@ -1279,15 +1279,9 @@ def doc_ngram_novelty(
         )
     pioneer = sh.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     # pioneer is SHINGLE-grain (scales with the corpus, not a dim): the
-    # static planner's size estimate under explode+distinct+agg sits
-    # under the broadcast threshold long after the driver-side build
-    # stops fitting (the r11 300x curation_yield_report OOM traced to
-    # exactly this join) — merge-pin it past the size gate
+    # r11 300x curation_yield_report OOM traced to exactly this join
     return (
-        sh.join(
-            scale_pin(pioneer, corpus_rows(docs) if n_docs is None else n_docs),
-            "g",
-        )
+        sh.join(scale_pin(pioneer, corpus_rows(docs)), "g")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),

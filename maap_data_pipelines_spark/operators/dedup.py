@@ -34,8 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_31, md5_long_sql, minhash_coeffs
+from ..functions.joins import checkpoint_small as _checkpoint_small
 from ..functions.joins import corpus_join_hint as _corpus_join_hint
 from ..functions.joins import corpus_rows as _corpus_rows
+from ..functions.joins import materialize as _materialize
+from ..functions.joins import run_chains as _run_chains
+from ..functions.joins import scale_pin as _scale_pin
 
 NUM_PERM = 64
 BANDS = 16
@@ -77,13 +81,6 @@ def _shingles_df(docs: DataFrame) -> DataFrame:
         docs.withColumn("w", F.split(F.col("text"), " "))
         .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("s"))
     )
-
-
-# Concurrent eager-materialization chains (two CC fixpoints on scheduler
-# threads) compete for the one unified execution-memory pool; the r10
-# 300x sweep measured the crossover (clean at 500k docs, OOM at 1.5M).
-# Above this, run fixpoints sequentially — each gets the whole pool.
-_CONCURRENT_FIXPOINT_MAX_DOCS = 600_000
 
 
 # --- exact dedup ----------------------------------------------------------
@@ -167,6 +164,22 @@ def _shingle_h12(sh: DataFrame) -> DataFrame:
             "CAST(conv(substring(md5(s), 16, 15), 16, 10) AS BIGINT)"
         ).alias("h2"),
     )
+
+
+def _shingle_index_h12(shd: DataFrame) -> DataFrame:
+    """A caller-supplied shingle index in its hashed ``(doc_id, h1, h2)``
+    form: taken as is, or hashed from the ``(doc_id, s)`` string form.
+
+    Exact-schema check (ADVICE r11): a frame carrying an unrelated
+    ``h1`` must be rejected, never silently joined on wrong keys — and a
+    raised ValueError, unlike an assert, survives ``python -O``.
+    """
+    cols = set(shd.columns)
+    if cols == {"doc_id", "h1", "h2"}:
+        return shd
+    if cols == {"doc_id", "s"}:
+        return _shingle_h12(shd)
+    raise ValueError(f"unexpected shingle-index schema: {shd.columns}")
 
 
 def _shingle_hashes(docs: DataFrame, sh: DataFrame | None = None) -> DataFrame:
@@ -510,38 +523,25 @@ def ngram_jaccard(docs: DataFrame, shd: DataFrame | None = None) -> DataFrame:
     # 120-bit (h1, h2) key right after the explode ships two int64s
     # instead — the dedup_prefix_filter key discipline, same
     # collision-free-by-construction width.
-    from ..functions.joins import scale_pin
-
     if shd is None:
         shh = _shingle_h12(_shingles_df(docs)).distinct()
-    elif set(shd.columns) == {"doc_id", "h1", "h2"}:
-        shh = shd  # caller-materialized hashed index (strategy_comparison)
-    elif set(shd.columns) == {"doc_id", "s"}:
-        shh = _shingle_h12(shd)
     else:
-        # ADVICE r11: never guess from a partial column match — a frame
-        # carrying an unrelated h1 would silently join on wrong keys
-        raise ValueError(f"unexpected shingle-index schema: {shd.columns}")
+        shh = _shingle_index_h12(shd)  # caller-materialized (strategy_comparison)
     df_ok = (
         shh.groupBy("h1", "h2")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") <= NGRAM_MAX_DF)
         .select("h1", "h2")
     )
-    # df_ok and the self-join sides are SHINGLE-grain (corpus-scaled):
-    # the slimmer hashed rows drop AQE's size estimate under the
-    # broadcast threshold long after the build stops fitting (the r11
-    # 100x dedup_containment OOM — "Could not allocate memory to grow
-    # BytesToBytesMap" — caught exactly this), so merge-pin past the
-    # functions/joins gate like every other corpus-grain side.
+    # df_ok and the self-join sides are SHINGLE-grain (corpus-scaled)
     n_corpus = _corpus_rows(docs)
     shf = shh.join(
-        scale_pin(df_ok, n_corpus), ["h1", "h2"], "left_semi"
+        _scale_pin(df_ok, n_corpus), ["h1", "h2"], "left_semi"
     ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     a, b = shf.alias("a"), shf.alias("b")
     common = (
         a.join(
-            scale_pin(b, n_corpus),
+            _scale_pin(b, n_corpus),
             (F.col("a.h1") == F.col("b.h1"))
             & (F.col("a.h2") == F.col("b.h2"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
@@ -982,28 +982,14 @@ def dedup_rand_index(docs: DataFrame, max_iter: int = 15) -> DataFrame:
     near-dup mass), a full-outer join of two label frames, three
     aggregate-sized groupBys, then 1-row broadcast crosses to combine
     scalars. Nothing corpus-quadratic. r10: the two pipelines share ONE
-    localCheckpointed md5 shingle-hash pass, and the two CC fixpoints
-    (driver-synced iterative rounds — the scheduling floor that
-    dominates at local scale) run on concurrent scheduler threads, the
-    dedup_strategy_comparison lever; measured ~8.3 s -> ~5.3 s at
-    sf0.1, values unchanged. r11: the concurrency is gated on corpus
-    size — the r10 300x sweep showed the two chains' concurrent eager
-    localCheckpoint materializations exceeding the unified execution
-    memory pool (UNABLE_TO_ACQUIRE_MEMORY at 1.5M docs; clean at 500k),
-    so past :data:`_CONCURRENT_FIXPOINT_MAX_DOCS` the chains run
-    sequentially — the scheduling-floor overlap is a LOCAL-scale win
-    only; at scale each fixpoint deserves the whole memory pool — and
-    the shared shingle-hash pass stays LAZY (codegen recompute per
-    consumer): the r11 300x re-run showed the corpus-sized occurrence
-    frame (78M rows at 1.5M docs) itself OOMs the checkpoint store;
-    recompute is linear, a memory pin is not.
+    md5 shingle-hash pass, and the two CC fixpoints (job-synced
+    iterative rounds — the scheduling floor that dominates at local
+    scale) run as concurrent chains; measured ~8.3 s -> ~5.3 s at sf0.1,
+    values unchanged. Both follow the functions/joins scale policy
+    (:func:`checkpoint_small`, :func:`run_chains`).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    small = _corpus_rows(docs) <= _CONCURRENT_FIXPOINT_MAX_DOCS
-    hashed = _shingle_hashes(docs)
-    if small:
-        hashed = hashed.localCheckpoint()
+    n_corpus = _corpus_rows(docs)
+    hashed = _checkpoint_small(_shingle_hashes(docs), n_corpus)
 
     def _chain_minhash():
         return dedup_clusters(docs, max_iter=max_iter, hashed=hashed).select(
@@ -1018,15 +1004,7 @@ def dedup_rand_index(docs: DataFrame, max_iter: int = 15) -> DataFrame:
         s_labels, _ = connected_components(und, max_iter=max_iter)
         return s_labels.select("doc_id", F.col("cluster_id").alias("c2"))
 
-    if small:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_m = ex.submit(_chain_minhash)
-            f_s = ex.submit(_chain_simhash)
-            m = f_m.result()
-            s = f_s.result()
-    else:
-        m = _chain_minhash()
-        s = _chain_simhash()
+    m, s = _run_chains(n_corpus, _chain_minhash, _chain_simhash)
     u = (
         m.join(s, "doc_id", "full_outer")
         .select(
@@ -1217,15 +1195,13 @@ CONTAIN_EXCERPT_OFFSET = 1_000_000
 
 
 def dedup_containment(
-    docs: DataFrame,
-    shd_docs: DataFrame | None = None,
-    n_docs: int | None = None,
+    docs: DataFrame, shd_docs: DataFrame | None = None
 ) -> DataFrame:
     """Containment detection: the duplicate class Jaccard misses.
 
     ``shd_docs`` — optional caller-materialized DISTINCT hashed shingle
-    index of ``docs`` alone (exact ``(doc_id, h1, h2)`` schema, the
-    :func:`_shingle_h12` contract). The excerpt twins' shingles are
+    index of ``docs`` alone (the :func:`_shingle_index_h12` schema
+    contract). The excerpt twins' shingles are
     always derived here and unioned in; the final ``distinct`` runs
     over (already-distinct docs rows ∪ raw excerpt rows), which is
     set-identical to the unshared ``distinct`` over the full corpus
@@ -1256,8 +1232,6 @@ def dedup_containment(
         (F.col("doc_id") + CONTAIN_EXCERPT_OFFSET).alias("doc_id"),
         F.expr("substring(text, 1, CAST(n_chars div 2 AS INT))").alias("text"),
     )
-    from ..functions.joins import scale_pin
-
     # r11: 120-bit (h1, h2) keys from the explode onward — no exchange
     # carries the shingle string (guide §2.3; the ngram_jaccard /
     # dedup_prefix_filter key discipline). r12 (guide §2.4, VERDICT #1):
@@ -1266,8 +1240,9 @@ def dedup_containment(
     # novelty), only the small excerpt side (1/37 of docs at half
     # length) is exploded+hashed here.
     if shd_docs is not None:
-        assert set(shd_docs.columns) == {"doc_id", "h1", "h2"}, shd_docs.columns
-        shh = shd_docs.unionByName(_shingle_h12(_shingles_df(excerpts))).distinct()
+        shh = _shingle_index_h12(shd_docs).unionByName(
+            _shingle_h12(_shingles_df(excerpts))
+        ).distinct()
     else:
         corpus = docs.select("doc_id", "text").unionByName(excerpts)
         shh = _shingle_h12(_shingles_df(corpus)).distinct()
@@ -1277,22 +1252,20 @@ def dedup_containment(
         .filter(F.col("df") <= NGRAM_MAX_DF)
         .select("h1", "h2")
     )
-    # shingle-grain sides merge-pinned past the gate: the hashed rows'
-    # smaller size estimate invited an AQE hash build of a corpus-scaled
-    # relation (r11 100x OOM caught on this op) — see ngram_jaccard.
-    # r12 (ADVICE r11 / VERDICT #8): the joined relation is docs UNION
+    # shingle-grain sides are scale-pinned (r11 100x OOM caught on this
+    # op). r12 (ADVICE r11 / VERDICT #8): the joined relation is docs UNION
     # excerpt twins (one extra doc per CONTAIN_EXCERPT_MOD), so the gate
     # reads the unioned doc count, not docs alone — the pin engages at
     # the scale the corpus-grain side actually crosses the build ceiling.
-    n_corpus = _corpus_rows(docs) if n_docs is None else n_docs
+    n_corpus = _corpus_rows(docs)
     n_corpus = n_corpus + n_corpus // CONTAIN_EXCERPT_MOD
     shf = shh.join(
-        scale_pin(df_ok, n_corpus), ["h1", "h2"], "left_semi"
+        _scale_pin(df_ok, n_corpus), ["h1", "h2"], "left_semi"
     ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     a, b = shf.alias("a"), shf.alias("b")
     common = (
         a.join(
-            scale_pin(b, n_corpus),
+            _scale_pin(b, n_corpus),
             (F.col("a.h1") == F.col("b.h1"))
             & (F.col("a.h2") == F.col("b.h2"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
@@ -2127,16 +2100,8 @@ def dedup_prefix_filter(docs: DataFrame, shd: DataFrame | None = None) -> DataFr
     from an equi-join on shingle over the prefix index only; verification
     is two equi-joins keyed (doc_a) then (doc_b, s). Zero nested loops.
     Every join in this operator has CORPUS-SIZED sides (postings, prefix
-    index, candidate pairs), so each is pinned to a SIZE-AWARE
-    non-broadcast strategy via :func:`_corpus_join_hint`: shuffle_hash
-    under the per-task build-memory ceiling (AQE's compressed-shuffle
-    size estimate sits under the broadcast threshold long after the
-    in-memory hash relation stops fitting — the 100x sweep caught
-    exactly that mis-broadcast OOM at 500k docs), sort-merge above it
-    (the r10 300x sweep showed the unconditional shuffle_hash pin itself
-    OOMs building the hash map at 1.5M docs; merge spills and scales
-    unboundedly). A broadcast of a corpus-sized side is wrong at any
-    threshold.
+    index, candidate pairs), so each is pinned to the size-aware
+    non-broadcast strategy of :func:`_corpus_join_hint`.
 
     Output: (doc_a, doc_b, n_common, size_a, size_b, jaccard) for exact
     Jaccard >= 0.5, decided by the integer predicate
@@ -2145,43 +2110,15 @@ def dedup_prefix_filter(docs: DataFrame, shd: DataFrame | None = None) -> DataFr
     from pyspark.sql.window import Window
 
     # Four consumers (df counts, ranked prefix, two verification posting
-    # sides) of the distinct-shingle index. The index contains a SHUFFLE
-    # (distinct), so it must materialize ONCE — a lazy plan re-shuffles
-    # the full occurrence frame per consumer and the accumulated shuffle
-    # files filled the disk at 300x. Below the size gate: localCheckpoint
-    # (in-memory, fastest). Above it: the checkpoint store cannot pin a
-    # corpus-sized frame (r11 300x OOM), so persist DISK_ONLY — compact
-    # serialized blocks, zero execution-memory pressure, read four
-    # times. Fixed-width 120-bit keys: the materialized index carries
-    # two int64s per shingle, never the ~60-byte string.
+    # sides) of the distinct-shingle index, which contains a shuffle: it
+    # is materialized once (functions/joins.materialize). Fixed-width
+    # 120-bit keys: the materialized index carries two int64s per
+    # shingle, never the ~60-byte string.
     n_corpus = _corpus_rows(docs)
-    h_cols = [
-        F.expr(
-            "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
-        ).alias("h1"),
-        F.expr(
-            "CAST(conv(substring(md5(s), 16, 15), 16, 10) AS BIGINT)"
-        ).alias("h2"),
-    ]
     if shd is not None:
-        # caller-materialized index: hashed (r11 — two int64 cols, the
-        # cheap-to-checkpoint form) or string (derive hashes lazily, one
-        # codegen projection over already-distinct rows). Exact-schema
-        # checks (ADVICE r11): never key off a single column's presence.
-        if set(shd.columns) == {"doc_id", "h1", "h2"}:
-            shh = shd
-        elif set(shd.columns) == {"doc_id", "s"}:
-            shh = shd.select("doc_id", *h_cols)
-        else:
-            raise ValueError(f"unexpected shingle-index schema: {shd.columns}")
+        shh = _shingle_index_h12(shd)
     else:
-        shh = _shingles_df(docs).select("doc_id", *h_cols).distinct()
-        if n_corpus <= _CONCURRENT_FIXPOINT_MAX_DOCS:
-            shh = shh.localCheckpoint()
-        else:
-            from pyspark import StorageLevel
-
-            shh = shh.persist(StorageLevel.DISK_ONLY)
+        shh = _materialize(_shingle_h12(_shingles_df(docs)).distinct(), n_corpus)
     jh = _corpus_join_hint(n_corpus)
     dfreq = shh.groupBy("h1", "h2").agg(F.count(F.lit(1)).alias("df"))
     ranked = (
@@ -2601,34 +2538,19 @@ def dedup_strategy_comparison(docs: DataFrame) -> DataFrame:
     r10 (VERDICT r9 item 4): the four pipelines used to re-tokenize the
     corpus independently; now the md5 shingle-hash pass (two int64
     columns — cheap to materialize, expensive to recompute) is
-    localCheckpointed once for minhash + simhash, and the distinct
-    shingle index once for ngram + the prefix-filter truth — the
-    cascade_verdicts lever applied here. Oracle unchanged: sharing a
-    frame changes no value.
+    checkpointed once for minhash + simhash, and the distinct shingle
+    index once for ngram + the prefix-filter truth — the
+    cascade_verdicts lever applied here. The two chains — (hashed ->
+    minhash signature) and (distinct index -> prefix-filter truth) —
+    are independent and run concurrently (sf0.1 medians ~13.4 s (r9)
+    -> ~11 s (shared) -> ~8.9 s (shared + overlapped)); all three
+    decisions follow the functions/joins scale policy. Oracle
+    unchanged: sharing a frame changes no value.
     """
-    # The two materialization chains — (hashed -> minhash signature) and
-    # (distinct index -> prefix-filter truth) — are independent, and each
-    # eager localCheckpoint is a blocking driver call; submitted from one
-    # thread they serialize four jobs end-to-end. Concurrent job
-    # submission (the documented Spark scheduler idiom — threads, not
-    # data movement) overlaps them: with the shared frames, steady-state
-    # sf0.1 medians measured ~13.4 s (r9) -> ~11 s (shared) -> ~8.9 s
-    # (shared + overlapped).
-    from concurrent.futures import ThreadPoolExecutor
-
-    # same corpus-size gate as dedup_rand_index: overlapped eager
-    # materializations are a local-scale scheduling-floor win; at scale
-    # they compete for the one unified memory pool and each fixpoint
-    # deserves all of it — and the shared occurrence-grain frames
-    # (shingle hashes, distinct shingle strings) stay LAZY above the
-    # gate: corpus-sized checkpoint stores are themselves the r11 300x
-    # OOM; codegen recompute per consumer is linear.
-    small = _corpus_rows(docs) <= _CONCURRENT_FIXPOINT_MAX_DOCS
+    n_corpus = _corpus_rows(docs)
 
     def _chain_hash():
-        hashed = _shingle_hashes(docs)
-        if small:
-            hashed = hashed.localCheckpoint()
+        hashed = _checkpoint_small(_shingle_hashes(docs), n_corpus)
         # building the LSH frame eagerly checkpoints the signature table
         return dedup_minhash_lsh(docs, hashed=hashed), hashed
 
@@ -2639,18 +2561,7 @@ def dedup_strategy_comparison(docs: DataFrame) -> DataFrame:
         # the cheap-to-pin representation (the r10 finding that STRING
         # shingle materialization costs more than codegen recompute is
         # what deferred this sharing until the consumers went hashed)
-        shd = _shingle_h12(_shingles_df(docs)).distinct()
-        if small:
-            shd = shd.localCheckpoint()
-        else:
-            # the distinct contains a shuffle: a lazy plan re-shuffles
-            # per consumer (ngram + prefix-filter postings x2) and the
-            # accumulated shuffle files filled the disk at 300x; the
-            # checkpoint store cannot pin it either (heap OOM) — disk
-            # persist is the scale materialization
-            from pyspark import StorageLevel
-
-            shd = shd.persist(StorageLevel.DISK_ONLY)
+        shd = _materialize(_shingle_h12(_shingles_df(docs)).distinct(), n_corpus)
         truth = (
             dedup_prefix_filter(docs, shd=shd)
             .select("doc_a", "doc_b")
@@ -2659,15 +2570,9 @@ def dedup_strategy_comparison(docs: DataFrame) -> DataFrame:
         )
         return truth, shd
 
-    if small:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_hash = ex.submit(_chain_hash)
-            f_truth = ex.submit(_chain_truth)
-            minhash_pairs, hashed = f_hash.result()
-            truth, shd = f_truth.result()
-    else:
-        minhash_pairs, hashed = _chain_hash()
-        truth, shd = _chain_truth()
+    (minhash_pairs, hashed), (truth, shd) = _run_chains(
+        n_corpus, _chain_hash, _chain_truth
+    )
     nt = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
 
     def score(name: str, pairs: DataFrame) -> DataFrame:

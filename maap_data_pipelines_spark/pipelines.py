@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks
+from .functions.joins import corpus_rows
 from .plans import llm, stac
 from .sources.catalog import read_table
 
@@ -313,7 +314,7 @@ def run_curation_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dic
     hist.write.mode("overwrite").parquet(os.path.join(out_dir, "rejections"))
     yield_report = llm.yield_report_from_verdicts(decisions, docs).coalesce(1)
     yield_report.write.mode("overwrite").parquet(os.path.join(out_dir, "yield"))
-    n_in = docs.count()
+    n_in = corpus_rows(docs)
     n_kept = spark.read.parquet(os.path.join(out_dir, "corpus")).count()
     return {"n_in": n_in, "n_kept": n_kept, "n_rejected": n_in - n_kept}
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.joins import corpus_rows as _corpus_rows
+from ..functions.joins import materialize as _materialize
 from ..functions.joins import scale_pin as _scale_pin
 from ..operators import ann, dedup, kmeans, pq, quant, text
 from ..sources.catalog import fan_out, read_table
@@ -50,14 +51,7 @@ CURATION_NEAR_DUP_JACCARD = 0.5
 
 # The curation cascade's assembly joins all have CORPUS-SCALED sides
 # (per-doc quality flags, exact-dup survivors, dup-mass-bounded reject
-# lists, per-doc token counts). At local scale AQE broadcasts the small
-# ones — fastest, keep it. Past the functions/joins.py gate a broadcast
-# of any of them is a driver-sized build of a corpus-scale relation:
-# the r10 300x sweep killed curation_yield_report exactly there ("Not
-# enough memory to build and broadcast the table" on a 1.5M-doc
-# cascade). Above the gate every cascade join side is pinned sort-merge
-# (functions/joins.scale_pin) — spills, never driver-routed, scales
-# unboundedly.
+# lists, per-doc token counts): each is functions/joins.scale_pin-ned.
 
 
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,30 +240,28 @@ def corpus_curation_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable monitorable artifact; every stage reuses its own oracled
     operator and the composition carries one oracle.
     """
+    return _curation_cascade(fan_out(read_table(spark, sf_dir, "documents")))
+
+
+def _curation_cascade(docs: DataFrame) -> DataFrame:
+    """:func:`corpus_curation_extended`'s body over a caller's ``docs``
+    frame, so a composition that reads the corpus once shares its count."""
     from ..operators import curation
 
-    docs = fan_out(read_table(spark, sf_dir, "documents"))
     n_docs = _corpus_rows(docs)
     # r12 (VERDICT #1, guide §2.4 "remove shuffles outright"): the three
     # shingle-consuming stages (minhash, containment, novelty) used to
     # explode+md5 the corpus independently. The DISTINCT hashed index
-    # (doc_id, h1, h2) is materialized ONCE and shared: MinHash minima
-    # are invariant under per-doc distinct (min over a set == min over
-    # the multiset), containment unions only the excerpt twins' shingles
-    # on top, and novelty's md5_long grain IS h1. Two int64 keys + id is
-    # the cheap-to-pin representation (the r11 strategy_comparison
-    # lever); value-identity per stage is argued at each signature and
-    # pinned by the oracle. Below the size gate: eager localCheckpoint
-    # (in-memory, one blocking job, every consumer reuses). Above it the
-    # checkpoint store cannot hold a corpus-sized frame (r11 300x OOM) —
-    # persist DISK_ONLY, the dedup_prefix_filter discipline.
-    shd = dedup._shingle_h12(dedup._shingles_df(docs)).distinct()
-    if n_docs <= dedup._CONCURRENT_FIXPOINT_MAX_DOCS:
-        shd = shd.localCheckpoint()
-    else:
-        from pyspark import StorageLevel
-
-        shd = shd.persist(StorageLevel.DISK_ONLY)
+    # (doc_id, h1, h2) is materialized ONCE (functions/joins.materialize)
+    # and shared: MinHash minima are invariant under per-doc distinct
+    # (min over a set == min over the multiset), containment unions only
+    # the excerpt twins' shingles on top, and novelty's md5_long grain IS
+    # h1. Two int64 keys + id is the cheap-to-pin representation (the r11
+    # strategy_comparison lever); value-identity per stage is argued at
+    # each signature and pinned by the oracle.
+    shd = _materialize(
+        dedup._shingle_h12(dedup._shingles_df(docs)).distinct(), n_docs
+    )
     quality = text.quality_filter(docs).select(
         "doc_id", F.col("keep").alias("q_ok")
     )
@@ -286,13 +278,13 @@ def corpus_curation_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("near_dup", F.lit(True))
     )
     contained = (
-        dedup.dedup_containment(docs, shd_docs=shd, n_docs=n_docs)
+        dedup.dedup_containment(docs, shd_docs=shd)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
         .withColumn("is_contained", F.lit(True))
     )
     stale = (
-        curation.doc_ngram_novelty(docs, shd_docs=shd, n_docs=n_docs)
+        curation.doc_ngram_novelty(docs, shd_docs=shd)
         .filter(F.col("novelty") < CURATION_MIN_NOVELTY)
         .select("doc_id")
         .withColumn("is_stale", F.lit(True))
@@ -389,12 +381,11 @@ def curation_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts with the exact whitespace token count (swap in
     bpe_token_stats for model-true budgets). Standalone by contract;
     multi-consumer sessions should feed :func:`cascade_verdicts` to
-    :func:`yield_report_from_verdicts` instead.
+    :func:`yield_report_from_verdicts` instead. The corpus is read once,
+    so the cascade and the token join share one row count.
     """
-    return yield_report_from_verdicts(
-        corpus_curation_extended(spark, sf_dir),
-        fan_out(read_table(spark, sf_dir, "documents")),
-    )
+    docs = fan_out(read_table(spark, sf_dir, "documents"))
+    return yield_report_from_verdicts(_curation_cascade(docs), docs)
 
 
 def _curation_yield_sql() -> str:

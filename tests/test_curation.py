@@ -619,6 +619,6 @@ def test_novelty_shared_index_matches_standalone(spark, sf_dir):
     shd = _shingle_h12(_shingles_df(docs)).distinct().localCheckpoint()
     key = lambda r: r.doc_id  # noqa: E731
     assert sorted(
-        doc_ngram_novelty(docs, shd_docs=shd, n_docs=docs.count()).collect(),
+        doc_ngram_novelty(docs, shd_docs=shd).collect(),
         key=key,
     ) == sorted(doc_ngram_novelty(docs).collect(), key=key)

@@ -525,7 +525,7 @@ def test_containment_shared_index_matches_standalone(spark, sf_dir):
     shd = _shingle_h12(_shingles_df(docs)).distinct().localCheckpoint()
     key = lambda r: (r.doc_a, r.doc_b)  # noqa: E731
     assert sorted(
-        dedup_containment(docs, shd_docs=shd, n_docs=docs.count()).collect(),
+        dedup_containment(docs, shd_docs=shd).collect(),
         key=key,
     ) == sorted(dedup_containment(docs).collect(), key=key)
 
@@ -557,17 +557,26 @@ def test_minhash_distinct_hashed_matches_occurrence(spark, sf_dir):
 
 def test_shingle_index_schema_is_checked(spark):
     """ADVICE r11: a frame with an unrelated h1 column must be rejected,
-    not silently joined on wrong keys."""
+    not silently joined on wrong keys — by every shingle-index consumer,
+    with a ValueError that ``python -O`` does not strip."""
     import pytest
 
+    from maap_data_pipelines_spark.operators.curation import doc_ngram_novelty
     from maap_data_pipelines_spark.operators.dedup import (
+        dedup_containment,
         dedup_prefix_filter,
         ngram_jaccard,
     )
 
-    docs = _docs(spark, [(1, "a b c d e")])
+    docs = spark.createDataFrame(
+        [(1, "a b c d e", 9)], ["doc_id", "text", "n_chars"]
+    )
     bad = spark.createDataFrame([(1, 2, "x")], ["doc_id", "h1", "junk"])
     with pytest.raises(ValueError, match="shingle-index schema"):
         ngram_jaccard(docs, shd=bad)
     with pytest.raises(ValueError, match="shingle-index schema"):
         dedup_prefix_filter(docs, shd=bad)
+    with pytest.raises(ValueError, match="shingle-index schema"):
+        dedup_containment(docs, shd_docs=bad)
+    with pytest.raises(ValueError, match="shingle-index schema"):
+        doc_ngram_novelty(docs, shd_docs=bad)

@@ -331,7 +331,8 @@ def test_fanout_base_count_invariant(spark, sf_dir):
     count (COUNT is repartition-invariant; the gate reads the
     pre-repartition scan via _fanout_base), and the attribute is only a
     COUNT shortcut — transformations that drop it degrade to counting
-    the transformed frame, never to a wrong value."""
+    the transformed frame, never to a wrong value. The count is stored
+    on the frame it counted, so asking again starts no Spark job."""
     from pyspark.sql import functions as F
 
     from maap_data_pipelines_spark.functions.joins import corpus_rows
@@ -339,7 +340,18 @@ def test_fanout_base_count_invariant(spark, sf_dir):
 
     docs = read_table(spark, sf_dir, "documents")
     fanned = fan_out(docs)
-    assert corpus_rows(fanned) == docs.count()
+    n = docs.count()
+    assert corpus_rows(fanned) == n
+    sc = spark.sparkContext
+
+    def last_job_id():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    before = last_job_id()
+    # the fanned frame and the scan it wraps share the one stored count
+    assert corpus_rows(fanned) == corpus_rows(docs) == n
+    assert last_job_id() == before
     # a transformation silently drops the attribute — value still right
     projected = fanned.select("doc_id")
     assert not hasattr(projected, "_fanout_base")

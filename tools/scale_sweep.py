@@ -7,21 +7,47 @@ aggregates, denominator quantization collapse, degenerate-empty outputs,
 super-linear blowups). r7's 10x discipline caught two real int64
 overflows pre-registration; the 30x tier triples the headroom check.
 
+Each record also lists the key's scale-gate decisions
+(``functions/joins``: site, treatment, n_rows, branch, and how many
+times that decision was taken), so a receipt shows which branch fired.
+
 Usage: python tools/scale_sweep.py <scaled_sf_dir> [out_jsonl] [key ...]
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import sys
 import time
 import traceback
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from maap_data_pipelines_spark import registry  # noqa: E402
+from maap_data_pipelines_spark.functions import joins  # noqa: E402
 from maap_data_pipelines_spark.session import get_spark  # noqa: E402
+
+
+class GateLog(logging.Handler):
+    """Collects the scale-gate decisions logged at DEBUG by functions/joins."""
+
+    def __init__(self) -> None:
+        super().__init__(logging.DEBUG)
+        self.seen: Counter = Counter()
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.seen[record.args] += 1
+
+    def drain(self) -> list[dict]:
+        out = [
+            dict(zip(("site", "treatment", "n_rows", "branch"), args), n=n)
+            for args, n in self.seen.items()
+        ]
+        self.seen = Counter()
+        return out
 
 
 def main() -> int:
@@ -34,6 +60,10 @@ def main() -> int:
         print(f"ERROR: unknown keys (not in registry): {sorted(unknown)}")
         return 2
     spark = get_spark("scale-sweep")
+    gates = GateLog()
+    gate_log = logging.getLogger(joins.__name__)
+    gate_log.addHandler(gates)
+    gate_log.setLevel(logging.DEBUG)
     out = open(out_path, "w") if out_path else None
     failures = 0
     executed = 0
@@ -52,6 +82,7 @@ def main() -> int:
             traceback.print_exc(limit=3)
             failures += 1
         rec["sec"] = round(time.time() - t0, 2)
+        rec["gates"] = gates.drain()
         line = json.dumps(rec)
         print(line, flush=True)
         if out:
