@@ -26,7 +26,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks
@@ -251,39 +251,59 @@ def run_stac_pipeline(
 ) -> dict:
     """Catalog -> items -> partitioned write -> transfer plan -> receipts.
 
-    The items frame is assembled ONCE (``stac.stac_items_materialized``)
-    and shared by the catalog write and the JSON rendering — the
-    cascade_verdicts composition lever applied to the STAC tier.
+    The asset catalog is planned ONCE and both the items and the transfer
+    plan derive from it; the items frame is assembled once
+    (``stac.stac_items_materialized``) and shared by the catalog write and
+    the JSON rendering — the cascade_verdicts composition lever applied
+    to the STAC tier. Every returned count is observed by the write that
+    produced its directory, so no output is read back to be counted; the
+    only read-back is the written transfer plan, the artifact the copies
+    run from.
     """
-    items = stac.stac_items_materialized(spark, sf_dir)
-    sinks.write_items_partitioned(
-        items, os.path.join(out_dir, "catalog"), partition_cols=("collection",)
-    )
-    plan = stac.transfer_plan(spark, sf_dir)
-    plan.write.mode("overwrite").parquet(os.path.join(out_dir, "transfer_plan"))
+    cat = stac.asset_catalog(spark, sf_dir)
+    items = stac.stac_items_materialized(cat)
+    counts = {
+        "n_items": sinks.write_items_partitioned(
+            items, os.path.join(out_dir, "catalog"), partition_cols=("collection",)
+        )
+    }
+    plan = stac.transfer_plan_from_catalog(cat)
+    plan_dir = os.path.join(out_dir, "transfer_plan")
+    counts |= _write_counted(plan, plan_dir, n_transfers=F.count(F.lit(1)))
     copy_receipts = sinks.execute_transfer_plan(
-        spark.read.parquet(os.path.join(out_dir, "transfer_plan"))
+        spark.read.schema(plan.schema).parquet(plan_dir)
     )
-    copy_receipts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "transfer_receipts")
+    counts |= _write_counted(
+        copy_receipts,
+        os.path.join(out_dir, "transfer_receipts"),
+        n_copied=F.count_if(F.col("status") == 200),
     )
     docs = stac.stac_item_json_from_items(items).select(
         F.col("asset_id").cast("string").alias("item_id"), "item_json"
     )
     receipts = sinks.submit_items(docs, endpoint=endpoint)
-    receipts.write.mode("overwrite").parquet(os.path.join(out_dir, "receipts"))
-    back = spark.read.parquet(os.path.join(out_dir, "receipts"))
-    return {
-        "n_items": spark.read.parquet(os.path.join(out_dir, "catalog")).count(),
-        "n_transfers": spark.read.parquet(
-            os.path.join(out_dir, "transfer_plan")
-        ).count(),
-        "n_copied": spark.read.parquet(os.path.join(out_dir, "transfer_receipts"))
-        .filter(F.col("status") == 200)
-        .count(),
-        "n_submitted": back.count(),
-        "n_failed": back.filter(F.col("status") != 200).count(),
-    }
+    counts |= _write_counted(
+        receipts,
+        os.path.join(out_dir, "receipts"),
+        n_submitted=F.count(F.lit(1)),
+        n_failed=F.count_if(F.col("status") != 200),
+    )
+    return counts
+
+
+def _write_counted(df: DataFrame, path: str, **metrics: Column) -> dict:
+    """Overwrite ``path`` with ``df`` as parquet; return ``metrics`` as
+    observed over the rows written.
+
+    The observation is the plan's top node, so it runs in the write's
+    result stage, where each task's metric update is applied once (a
+    re-run shuffle map stage can apply its updates twice).
+    """
+    written = Observation()
+    df.observe(written, *[m.alias(k) for k, m in metrics.items()]).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return written.get
 
 
 def run_curation_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
@@ -303,7 +323,7 @@ def run_curation_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dic
     kept = docs.join(
         decisions.filter(F.col("keep")).select("doc_id"), "doc_id"
     )
-    sinks.write_items_partitioned(
+    n_kept = sinks.write_items_partitioned(
         kept, os.path.join(out_dir, "corpus"), partition_cols=("source",)
     )
     hist = (
@@ -315,7 +335,6 @@ def run_curation_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dic
     yield_report = llm.yield_report_from_verdicts(decisions, docs).coalesce(1)
     yield_report.write.mode("overwrite").parquet(os.path.join(out_dir, "yield"))
     n_in = corpus_rows(docs)
-    n_kept = spark.read.parquet(os.path.join(out_dir, "corpus")).count()
     return {"n_in": n_in, "n_kept": n_kept, "n_rejected": n_in - n_kept}
 
 

@@ -325,12 +325,14 @@ def cascade_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``run_curation_pipeline`` consumes this; byte-equality with the
     standalone registered query is pinned by
     tests/test_curation.py::test_cascade_verdicts_matches_standalone.
+
+    Calling this is not free even if the frame is never consumed: with
+    AQE on, ``localCheckpoint(eager=False)`` plans the cascade and runs
+    every shuffle stage of it at call time; only the final stage waits
+    for the first consuming action.
     """
-    # Lazy checkpoint: callers that BUILD the verdict frame but never run
-    # it (plan inspection, conditional pipelines) pay nothing; the cascade
-    # executes once, with the first consuming action. Checkpointed RDDs
-    # persist for the session either way — long-lived sessions that call
-    # this repeatedly should hold ONE frame and reuse it.
+    # The checkpointed RDD persists for the session — long-lived sessions
+    # that call this repeatedly should hold ONE frame and reuse it.
     return corpus_curation_extended(spark, sf_dir).localCheckpoint(eager=False)
 
 

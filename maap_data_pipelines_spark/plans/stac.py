@@ -538,7 +538,14 @@ def build_stac_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     single date (+ optional range expansion) -> item datetime; id per the
     events.py precedence; media type per extension.
     """
-    cat = asset_catalog(spark, sf_dir).filter(F.col("ext") != "hdr")
+    return stac_items_from_catalog(asset_catalog(spark, sf_dir))
+
+
+def stac_items_from_catalog(cat: DataFrame) -> DataFrame:
+    """build_stac_items' assembly body over a CALLER-SUPPLIED catalog frame
+    (pipelines plan ``asset_catalog`` once and derive the items and the
+    transfer plan from it)."""
+    cat = cat.filter(F.col("ext") != "hdr")
     # dates aliased in its own projection — single evaluation per row (r11)
     cat = cat.withColumn("dates", extracted_dates(F.col("remote_fileurl")))
     dates = F.col("dates")
@@ -568,8 +575,9 @@ def build_stac_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stac_items_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STAC items frame, MATERIALIZED for multi-consumer sessions.
+def stac_items_materialized(cat: DataFrame) -> DataFrame:
+    """The STAC items frame over ``cat``, MATERIALIZED for multi-consumer
+    sessions.
 
     ``stac_item_json``, ``catalog_summary``, ``stac_coverage_gaps`` and
     the partitioned catalog write each re-derive ``build_stac_items``
@@ -577,13 +585,16 @@ def stac_items_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     API session that needs several of those products would otherwise pay
     the catalog scan + regex/date assembly once PER consumer. Same
     pattern as ``plans.llm.cascade_verdicts``: run the assembly once,
-    ``localCheckpoint`` the item rows (lazy — building the plan costs
-    nothing; the checkpoint materializes with the first consuming
-    action), branch every product from materialized rows via the
-    ``*_from_items`` bodies. Byte-equality with the standalone build is
-    pinned by tests/test_stac_ops.py::test_stac_items_materialized_shares.
+    ``localCheckpoint`` the item rows, branch every product from
+    materialized rows via the ``*_from_items`` bodies. The checkpoint is
+    lazy but not free: with AQE on, ``localCheckpoint(eager=False)``
+    plans the frame and runs every shuffle stage of it (over a
+    single-file ``orders`` scan, the catalog's ``fan_out`` exchange)
+    when it is called; only the final stage waits for the first
+    consuming action. Byte-equality with the standalone build is pinned
+    by tests/test_stac_ops.py::test_stac_items_materialized_shares.
     """
-    return build_stac_items(spark, sf_dir).localCheckpoint(eager=False)
+    return stac_items_from_catalog(cat).localCheckpoint(eager=False)
 
 
 BUILD_STAC_ITEMS_SQL = f"""
@@ -621,7 +632,11 @@ def transfer_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the target listing, the scale-correct formulation).
     The simulated target listing already contains every asset_id % 4 == 1.
     """
-    cat = asset_catalog(spark, sf_dir)
+    return transfer_plan_from_catalog(asset_catalog(spark, sf_dir))
+
+
+def transfer_plan_from_catalog(cat: DataFrame) -> DataFrame:
+    """transfer_plan's body over a caller-supplied catalog frame."""
     eligible = cat.filter(F.col("upload") & ~F.col("cogify"))
     bucket = F.when(F.col("user_shared"), USER_SHARED_BUCKET).otherwise(TARGET_BUCKET)
     planned = eligible.select(

@@ -10,9 +10,9 @@ lambdas/submit-stac/handler.py). Spark-first equivalents:
   tasks (avoids the classic small-files explosion when every task holds
   rows of every collection); maxRecordsPerFile bounds file size.
 * ``submit_items`` — distributed batched submission with receipts. Each
-  Arrow batch becomes one POST payload; the transport is injectable and
-  defaults to a dry-run (this environment has no network — the real
-  transport would be a requests.Session.post). The receipts come back as
+  ``batch_size`` slice of an Arrow batch becomes one POST payload; the
+  transport is injectable and defaults to a dry-run (a deployment passes
+  e.g. a requests.Session.post). The receipts come back as
   a DataFrame so retries/monitoring are ordinary dataflow, not log
   scraping. No driver-side loop: submission parallelism == partition
   count.
@@ -24,7 +24,7 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 DEFAULT_MAX_RECORDS_PER_FILE = 1_000_000
@@ -36,15 +36,24 @@ def write_items_partitioned(
     partition_cols: tuple[str, ...] = ("collection",),
     mode: str = "overwrite",
     max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
-) -> None:
-    """Write items as parquet partitioned by collection."""
+) -> int:
+    """Write items as parquet partitioned by collection; return the number
+    of rows written.
+
+    The count is observed in the write's final stage, after the
+    repartition: accumulator updates from a re-run shuffle map stage can
+    be applied twice, result-stage updates are applied once per task.
+    """
+    written = Observation()
     (
         items.repartition(*[F.col(c) for c in partition_cols])
+        .observe(written, F.count(F.lit(1)).alias("n"))
         .write.mode(mode)
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_cols)
         .parquet(path)
     )
+    return written.get["n"]
 
 
 def write_bucketed_table(
@@ -483,27 +492,29 @@ def submit_items(
 
     def _submit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for lo in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[lo : lo + batch_size]
-                status = (
-                    0 if dry_run else transport(chunk["doc"].tolist(), endpoint)
-                )
+            docs = pdf["doc"].tolist()
+            sizes: list[int] = []
+            statuses: list[int] = []
+            for lo in range(0, len(docs), batch_size):
+                payload = docs[lo : lo + batch_size]
+                status = 0 if dry_run else transport(payload, endpoint)
                 if isinstance(status, (list, tuple)):
-                    if len(status) != len(chunk):
+                    if len(status) != len(payload):
                         raise ValueError(
                             "per-item transport returned "
-                            f"{len(status)} statuses for {len(chunk)} items"
+                            f"{len(status)} statuses for {len(payload)} items"
                         )
-                    statuses = list(status)
+                    statuses.extend(status)
                 else:
-                    statuses = [status] * len(chunk)
-                yield pd.DataFrame(
-                    {
-                        "item_id": chunk["item_id"].astype(str),
-                        "batch_size": len(chunk),
-                        "status": statuses,
-                    }
-                )
+                    statuses.extend([status] * len(payload))
+                sizes.extend([len(payload)] * len(payload))
+            yield pd.DataFrame(
+                {
+                    "item_id": pdf["item_id"].astype(str),
+                    "batch_size": sizes,
+                    "status": statuses,
+                }
+            )
 
     return src.mapInPandas(_submit, schema=schema)
 

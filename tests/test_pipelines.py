@@ -8,7 +8,23 @@ from maap_data_pipelines_spark.pipelines import (
 )
 
 
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+# Spark jobs one warm run may start at the test sf (local[4], 4 shuffle
+# partitions). Every returned count comes from the write that produced
+# it, so no output is read back to be counted, and the STAC pipeline
+# plans its asset catalog once.
+STAC_JOB_BUDGET = 12
+CURATION_JOB_BUDGET = 47
+
+
 def test_stac_pipeline_end_to_end(spark, sf_dir, tmp_path):
+    from pyspark.sql import functions as F
+
     out = str(tmp_path / "stac_out")
     m = run_stac_pipeline(spark, sf_dir, out)
     assert m["n_items"] > 0
@@ -16,9 +32,20 @@ def test_stac_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert m["n_failed"] == 0
     assert m["n_transfers"] > 0
     assert m["n_copied"] == m["n_transfers"]  # dry-run copier: all land
-    # idempotent: rerun overwrites to the identical state
+    # idempotent: rerun overwrites to the identical state, in budget
+    before = _last_job_id(spark)
     m2 = run_stac_pipeline(spark, sf_dir, out)
+    jobs = _last_job_id(spark) - before
     assert m2 == m
+    assert jobs <= STAC_JOB_BUDGET, jobs
+    # every count the writes observed is what landed on disk
+    back = lambda d: spark.read.parquet(f"{out}/{d}")
+    status = F.col("status")
+    assert m["n_items"] == back("catalog").count()
+    assert m["n_transfers"] == back("transfer_plan").count()
+    assert m["n_copied"] == back("transfer_receipts").filter(status == 200).count()
+    assert m["n_submitted"] == back("receipts").count()
+    assert m["n_failed"] == back("receipts").filter(status != 200).count()
 
 
 def test_curation_pipeline_end_to_end(spark, sf_dir, tmp_path):
@@ -33,8 +60,12 @@ def test_curation_pipeline_end_to_end(spark, sf_dir, tmp_path):
     }
     assert sum(hist.values()) == m["n_in"]
     assert hist.get("ok", 0) == m["n_kept"]
+    before = _last_job_id(spark)
     m2 = run_curation_pipeline(spark, sf_dir, out)
+    jobs = _last_job_id(spark) - before
     assert m2 == m
+    assert jobs <= CURATION_JOB_BUDGET, jobs
+    assert m["n_kept"] == spark.read.parquet(out + "/corpus").count()
 
 
 def test_discover_from_event_reference_payload(spark, tmp_path):

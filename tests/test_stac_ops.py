@@ -180,7 +180,7 @@ def test_stac_items_materialized_shares(spark, sf_dir):
     query row-for-row (the cascade_verdicts lever applied to STAC)."""
     from maap_data_pipelines_spark.plans import stac
 
-    items = stac.stac_items_materialized(spark, sf_dir)
+    items = stac.stac_items_materialized(stac.asset_catalog(spark, sf_dir))
     key = lambda r: tuple("" if v is None else str(v) for v in r)
     assert sorted(map(key, items.collect())) == sorted(
         map(key, stac.build_stac_items(spark, sf_dir).collect())
