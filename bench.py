@@ -2,17 +2,17 @@
 
 Runs each headline query to completion via the noop sink (full plan
 executes, no driver-side result transfer) on local[$SPARK_GRAFT_CPUS] and
-prints the full-record JSON line:
+prints a SHORT totals-only summary JSON line ("summary_line": true, no
+"queries") followed LAST by the full-record JSON line:
 
     {"metric": "headline_total", "value": <sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": <sec>, ...},
      "spread": {"q1_pricing_summary": <max-min sec>, ...},
      "runs": 3, "sf": 0.1}
 
-followed by a SHORT totals-only summary JSON line (same "metric", plus
-"summary_line": true, no "queries") — external captures keep only a
-stdout tail and have twice truncated the full line mid-stream; the short
-final line guarantees the headline scalars survive. The complete record
+Consumers take the last parseable stdout line: an intact stream gives
+them the full per-query record, and a capture that cuts the long final
+line mid-stream still ends on the parseable summary. The complete record
 is also written to BENCH_LOCAL.json (and BENCH_r{N}.json when
 $SPARK_GRAFT_ROUND is set).
 
@@ -427,15 +427,12 @@ def main() -> int:
         if rnd is not None:
             with open(os.path.join(here, f"BENCH_r{int(rnd):02d}.json"), "w") as f:
                 f.write(line + "\n")
-    print(line)
-    # The external capture keeps only a TAIL of stdout and has twice cut
-    # the full line mid-stream (BENCH_r10/BENCH_r11 records both parse
-    # null/partial), destroying the driver's round-over-round comparison.
-    # Emit a SHORT totals-only summary line LAST: it always fits the tail
-    # window, so the headline scalars survive any truncation. The full
-    # per-query record stays in the line above and in BENCH_LOCAL.json;
-    # timing methodology is unchanged — this only adds a second, smaller
-    # print of already-computed totals.
+    # The external capture keeps only a TAIL of stdout and takes its last
+    # parseable line. Print the SHORT totals-only summary first and the
+    # full per-query record LAST: an intact stream then yields the full
+    # record (PERF_r12 read the summary and got `n_common: 0`), and a
+    # capture that cuts the long final line mid-stream still ends on the
+    # parseable summary. Timing methodology is unchanged.
     print(
         json.dumps(
             {
@@ -453,6 +450,7 @@ def main() -> int:
             }
         )
     )
+    print(line)
     return 0
 
 

@@ -273,8 +273,6 @@ QUERIES = {
     "media_audio_windows": media_audio_windows,
     "media_silence_runs": media_silence_runs,
     "media_scene_cuts": media_scene_cuts,
-    # r4 addition: placed in registry._DEFERRED so the in-flight driver
-    # window (which this module feeds) is not displaced
     "media_dedup_exact": media_dedup_exact,
     "media_phash_clusters": media_phash_clusters,
 }

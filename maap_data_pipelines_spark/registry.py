@@ -3,230 +3,59 @@
 ``__spark_entry__.py`` re-exports this; plan modules contribute their
 QUERIES/ORACLES dicts. Keys without an oracle entry get the driver's
 weaker rows-only check (genuinely non-SQL-expressible ops only).
+
+External correctness harnesses consume ``queries()`` front-to-back with a
+bounded budget (50 keys per round), so its order is the rotation. One
+stable sort key decides it:
+
+    (has no oracle, newest green round or 0 if never green,
+     registration order across _MODULES)
+
+The newest green round of a key is the highest N of a committed
+``CORRECTNESS_rN.json`` at the repo root whose row for that key has
+``rows_match``, ``schema_match`` and ``hash_match`` all true. So
+never-confirmed oracled keys lead in module order, confirmed keys follow
+stalest first, and rows-only keys sit at the global tail. Committing a
+new record rotates the window; nothing is transcribed into source.
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .plans import documents, etl, events, llm, multimodal, sqlapi, stac, tpch, tpch2
 
-# External correctness harnesses consume the registry front-to-back with a
-# bounded budget (50 keys per round).  queries() therefore orders keys in
-# five tiers:
-#   1. full-oracle keys NOT yet externally confirmed (the rotation window),
-#      in _MODULES order;
-#   2. unconfirmed full-oracle keys deliberately deferred (_DEFERRED);
-#   3. unconfirmed rows-only keys (none as of r6 — every registered key
-#      carries a full oracle);
-#   4. deliberate regression re-confirmations (_RECONFIRM, ordered) — the
-#      window's remaining slots re-prove the most intricate machinery;
-#   5. the remaining confirmed keys.
-# After each round, fold the round's green keys into _CONFIRMED — the next
-# window then rotates automatically to never-confirmed keys. The ordering
-# CONTRACT (not any literal key list) is pinned by
-# tests/test_plans.py::test_registry_rotation_contract.
 _MODULES = [etl, multimodal, events, tpch, documents, tpch2, stac, llm, sqlapi]
 
-# Keys green in the official CORRECTNESS_r02 + CORRECTNESS_r03 records
-# (rows+schema+value-hash vs the DuckDB oracle at sf0.01).
-_CONFIRMED = {
-    # r03 window: stac (15) + llm (33) + sqlapi (2)
-    "assets_neighbor_join", "s3_discovery", "inventory_discovery", "item_id",
-    "extract_dates", "datetime_range", "media_type_map", "multi_asset_group",
-    "bbox", "build_stac_items", "transfer_plan", "stac_item_json",
-    "catalog_summary", "cogify", "cmr_discovery",
-    "corpus_curation", "dedup_exact", "dedup_incremental", "dedup_minhash_lsh",
-    "dedup_simhash", "ngram_jaccard", "dedup_clusters", "dedup_pagerank",
-    "similar_docs_topk", "dedup_cluster_sizes", "dedup_triangles",
-    "minhash_calibration", "ann_cosine_topk", "ann_lsh_buckets",
-    "semantic_decontaminate", "embedding_dedup", "embedding_dedup_lsh",
-    "embedding_dedup_mp", "embedding_dedup_banded", "embedding_dedup_recall",
-    "ann_ivf_topk", "ann_ivf_topk2", "ann_ivf_recall", "ann_ivf_recall2",
-    "embedding_kmeans", "semantic_dedup", "ann_ivf_kmeans_topk",
-    "ann_ivf_kmeans_recall", "ann_l2_topk", "ann_pq_topk", "ann_pq_recall",
-    "ann_pq_rerank", "ann_pq_rerank_recall",
-    "sql_revenue_by_nation", "sql_priority_share",
-    # r02 window: tpch + tpch2 + events head + documents head
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q6_forecast_revenue", "q10_returned_items", "q12_shipmode", "q14_promo",
-    "q18_large_orders", "top_customers_window", "order_cohort_retention",
-    "orders_running_revenue", "revenue_concentration",
-    "market_basket_types", "q2_min_cost_supplier", "q4_order_priority",
-    "q7_volume_shipping", "q8_market_share", "q9_product_type_profit",
-    "q11_important_stock", "q13_customer_distribution", "q15_top_supplier",
-    "q16_supplier_diversity", "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue", "q20_dominant_suppliers", "q21_waiting_suppliers",
-    "q22_global_sales_opportunity",
-    "events_hourly_rollup", "events_hourly_anomaly", "events_concurrency",
-    "events_dau_wau", "events_sessionize", "events_json_props", "events_funnel",
-    "events_asof_attribution", "events_rollup_multigrain",
-    "events_value_quantiles", "events_type_pivot", "events_purchase_context",
-    "events_cube", "events_retention_triangle",
-    "token_stats", "text_quality", "lang_id", "doc_fingerprint",
-    "quality_filter", "term_topk", "bigram_topk",
-    # r04 window: etl (22) + multimodal (5) + events (6) + tpch (2) +
-    # documents (15) — CORRECTNESS_r04.json, 50/50 green.
-    "customer_entity_resolution", "doc_surrogate_keys", "lineitem_corr_matrix",
-    "orders_scd2", "lineitem_salted_part_revenue", "orders_zorder_layout",
-    "orders_rfm", "doc_split_assign", "doc_stratified_sample",
-    "doc_sample_exact_k", "documents_checksum", "orders_snapshot_diff",
-    "compaction_plan", "orders_dq_expectations", "orders_revenue_trend",
-    "orders_monthly_gapfill", "orders_price_quantiles",
-    "lineitem_manifest_pruning", "bloom_customer_filter", "doc_weighted_sample",
-    "lineitem_scd2_lookup", "orders_profile",
-    "media_metadata", "media_phash_dedup", "media_frame_sample",
-    "media_resize", "media_audio_windows",
-    "events_attribution_latency", "sessions_campaign_overlap",
-    "events_transition_matrix", "events_user_paths", "events_salted_rollup",
-    "events_sliding_trend",
-    "orders_trailing_year", "orders_value_deciles",
-    "tfidf_top_terms", "bm25_topk", "bm25_proximity_rerank",
-    "term_cooccurrence", "dedup_containment", "doc_cosine_topk", "vocab_diff",
-    "vocab_overlap", "fuzzy_word_pairs", "documents_profile", "decontaminate",
-    "repetition_stats", "pii_scan", "domain_mixture", "dup_ngram_mass",
-    # r05 window: CORRECTNESS_r05.json, 49/50 green (media_features' red
-    # row was an output-shape driver error, fixed in r06 — it re-enters
-    # the r06 window as a full-oracle key).
-    "orders_cohort_ltv", "orders_lineitem_reconcile", "orders_bootstrap_ci",
-    "orders_revenue_ewma",
-    "media_dedup_exact",
-    "events_windowed_funnel", "events_key_skew_report",
-    "events_burst_detection", "events_distinct_sketch",
-    "events_segment_lattice", "events_quantile_sketch",
-    "doc_pack_assign", "doc_length_histogram", "domain_rebalance",
-    "doc_chunks", "text_normalize", "heavy_hitters", "source_lang_drift",
-    "doc_perplexity", "split_leakage", "dup_span_removal",
-    "doc_length_outliers", "doc_curriculum", "retrieval_rrf_fusion",
-    "dsir_importance", "dsir_auc", "doc_ngram_novelty",
-    "assets_tile_rollup", "assets_bbox_overlap",
-    "ann_matryoshka_topk", "ann_matryoshka_recall",
-    "embedding_label_centroids", "embedding_label_confusion",
-    "ann_ivfpq_topk", "ann_ivfpq_recall",
-    "dedup_minhash_incremental", "dedup_kcore",
-    "embedding_knn_accuracy", "embedding_fisher_ratio",
-    "embedding_triplets", "embedding_pca_top", "doc_embedding_outliers",
-    "corpus_curation_extended",
-    "ann_sq8_topk", "ann_sq8_recall",
-    "ann_bq_topk", "ann_bq_recall", "ann_bq_rerank", "ann_bq_rerank_recall",
-    # r06 window: CORRECTNESS_r06.json, 50/50 green — the r6 wave
-    # (dedup graph extensions, strategy audit, embedding health battery,
-    # events science tier, warehouse additions, BPE, media upgrades).
-    "ann_filtered_topk", "ann_ivf_nprobe_curve",
-    "bpe_token_stats", "bpe_train_merges",
-    "cluster_topics", "curation_yield_report",
-    "customer_pareto_frontier", "customer_t_closeness",
-    "dedup_canonical_election", "dedup_label_propagation",
-    "dedup_local_bridges", "dedup_pair_diffstats", "dedup_prefix_filter",
-    "dedup_source_modularity", "dedup_strategy_comparison",
-    "dedup_threshold_curve", "discount_elasticity",
-    "doc_length_anova", "doc_neyman_allocation",
-    "doc_weighted_sample_exact_k", "doc_winnowing_matches", "doc_zipf_fit",
-    "embedding_centroid_drift", "embedding_intrinsic_dim",
-    "embedding_norm_health", "embedding_silhouette",
-    "events_ab_power", "events_ab_test", "events_bot_detection",
-    "events_changepoint", "events_cms_topk", "events_forecast_backtest",
-    "events_forecast_holt", "events_markov_attribution_removal",
-    "events_multitouch_attribution", "events_next_event_prediction",
-    "events_periodicity", "events_theta_overlap", "events_user_entropy",
-    "lineitem_revenue_bridge", "lineitem_single_source_risk",
-    "media_features", "media_phash_clusters", "nation_trade_pagerank",
-    "orders_theilsen_trend", "part_recs_hitrate", "quality_nb_classifier",
-    "referential_integrity_census", "retrieval_mmr_topk",
-    "supplier_concentration_hhi",
-    # r07 window: CORRECTNESS_r07.json, 50/50 green — the 23 keys deferred
-    # across r6, the 11-key r7 wave, and 16 r6 re-confirmations. With this
-    # fold every registered key has an official driver-green record.
-    "stac_coverage_gaps",
-    "supplier_dual_sourcing", "orders_promo_lift",
-    "lineitem_leadtime_profile", "orders_abc_classification",
-    "events_attribution_comparison", "events_ab_srm_check",
-    "customer_k_anonymity", "customer_l_diversity", "customer_rfm_segments", "customer_survival", "customer_revenue_lorenz",
-    "lineitem_benford", "lineitem_price_index", "orders_duplicate_payments",
-    "orders_gap_distribution", "orders_seasonal_decompose",
-    "supplier_return_sla", "gdpr_erasure_plan",
-    "doc_split_js_divergence", "packing_efficiency", "vocab_growth",
-    "media_silence_runs",
-    # r7 wave (registered mid-r7 via _DEFERRED, green inside the r07 window)
-    "events_mde_curve", "dedup_token_savings", "ann_recall_by_label",
-    "orders_shewhart_control", "dedup_rand_index", "doc_keyphrase_rake",
-    "media_scene_cuts", "events_holt_winters", "quality_nb_calibration",
-    "orders_backlog_aging", "ann_centroid_balance",
-    # r08 window: CORRECTNESS_r08.json, 50/50 green — the 2 r8 operators
-    # (the other 48 slots re-confirmed r2-era records already listed above).
-    "events_cuped", "quality_isotonic_calibration",
-    # r09 window: CORRECTNESS_r09.json, 50/50 green — the 4 r9 operators
-    # (the other 46 slots re-confirmed r3-era records already listed above).
-    "events_cuped_stratified", "events_ab_sequential", "quality_platt_scaling",
-    "embedding_dedup_collapsed",
-    # r10 window: CORRECTNESS_r10.json, 50/50 green — the 19 r10 operators
-    # plus 31 rotation slots (4 r3-era + 27 r4-era re-confirmations; the
-    # r4-era keys re-confirmed were already listed above, repeated here
-    # only where new).
-    "orders_durbin_watson", "customer_rfm_transition",
-    "orders_hill_tail_index", "orders_runs_test",
-    "events_interarrival_exponentiality", "events_diff_in_diff",
-    "retrieval_ndcg", "quality_cohen_kappa", "doc_length_kruskal",
-    "doc_burstiness", "source_js_matrix", "documents_ks_drift",
-    "documents_chi2_independence", "vocab_entropy", "orders_spearman_corr",
-    "supplier_theil_decomposition", "orders_mann_whitney",
-    "supplier_gini_by_nation", "dedup_clustering_coefficient",
-}
-
-# Every full-oracle key is officially confirmed (cumulative r02-r08
-# records), so the driver's 50-slot window is free capacity. _RECONFIRM
-# spends it deliberately: the listed confirmed keys sort directly after
-# the (few) never-confirmed keys, in THIS order. As of r8 the fill policy
-# is STALENESS ROTATION (VERDICT r7 item 1): the window re-proves the
-# keys whose newest official record is oldest, so no registered key's
-# record lags the engine's growth by more than a few rounds. The r9 list
-# (emitted by tools/rotation.py after the r8 fold) is the 50 keys whose
-# newest green record is CORRECTNESS_r03: the kmeans/semantic pair the r8
-# window displaced, the 15-key STAC head, corpus_curation + the dedup/ANN
-# r3 wave, and the sqlapi pair. The 4 new r9 operators (cuped_stratified,
-# platt_scaling, ab_sequential, and the 100x-sweep-motivated
-# embedding_dedup_collapsed) take the window's lead slots, displacing the
-# last 4 entries (ann_pq_rerank, ann_pq_rerank_recall,
-# sql_revenue_by_nation, sql_priority_share) to the r10 rotation
-# alongside the r4-era records.
-_RECONFIRM = [
-    # r11 staleness rotation (tools/rotation.py after the r10 fold): the
-    # 23 r4-era records the r10 window's 19 new-op leads displaced, then
-    # the 27 oldest r5-era records. New r11 operators take the window's
-    # lead slots automatically (unconfirmed sorts first), displacing the
-    # tail (oldest-first preserved) to r12.
-    # r4-era events tail
-    "events_attribution_latency", "sessions_campaign_overlap",
-    "events_transition_matrix", "events_user_paths", "events_salted_rollup",
-    "events_sliding_trend", "orders_trailing_year", "orders_value_deciles",
-    # r4-era text/retrieval tail
-    "tfidf_top_terms", "bm25_topk", "bm25_proximity_rerank",
-    "term_cooccurrence", "dedup_containment", "doc_cosine_topk",
-    "vocab_diff", "vocab_overlap", "fuzzy_word_pairs", "documents_profile",
-    "decontaminate", "repetition_stats", "pii_scan", "domain_mixture",
-    "dup_ngram_mass",
-    # oldest r5-era records
-    "orders_cohort_ltv", "orders_lineitem_reconcile", "orders_bootstrap_ci",
-    "orders_revenue_ewma", "media_dedup_exact", "events_windowed_funnel",
-    "events_key_skew_report", "events_burst_detection",
-    "events_distinct_sketch", "events_segment_lattice",
-    "events_quantile_sketch", "doc_pack_assign", "doc_length_histogram",
-    "domain_rebalance", "doc_chunks", "text_normalize", "heavy_hitters",
-    "source_lang_drift", "doc_perplexity", "split_leakage",
-    "dup_span_removal", "doc_length_outliers", "doc_curriculum",
-    "retrieval_rrf_fusion", "dsir_importance", "dsir_auc",
-    "doc_ngram_novelty",
-]
+_ROOT = Path(__file__).resolve().parent.parent
+_RECORD = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-# Unconfirmed full-oracle keys added MID-ROUND (after the round's 50-key
-# window composition was fixed): they sort after every other unconfirmed
-# key so the in-flight window is not displaced; they enter a window next
-# rotation. Clear entries as they reach _CONFIRMED. Empty as of the r8
-# fold — all 11 r7-wave keys landed green inside the r07 window.
-_DEFERRED: set[str] = set()
+def latest_green(root: Path = _ROOT) -> dict[str, int]:
+    """Newest round in which each key passed rows, schema and hash checks.
+
+    Keys with no green row are absent. A root with no records yields {}.
+    """
+    latest: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = _RECORD.fullmatch(path.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        for k, v in json.loads(path.read_text()).items():
+            if v.get("rows_match") and v.get("schema_match") and v.get("hash_match"):
+                latest[k] = max(latest.get(k, 0), rnd)
+    return latest
+
+
+# Read once at import: queries() runs in every perfbench unit and must not
+# touch the filesystem.
+_LATEST_GREEN = latest_green()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -237,33 +66,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             raise ValueError(f"duplicate query keys: {overlap}")
         out.update(m.QUERIES)
     oracled = oracle_sql().keys()
-    ordered = {
-        k: v
-        for k, v in out.items()
-        if k in oracled and k not in _CONFIRMED and k not in _DEFERRED
-    }
-    ordered.update(
-        {
-            k: v
-            for k, v in out.items()
-            if k in oracled and k not in _CONFIRMED and k in _DEFERRED
-        }
-    )
-    # Unconfirmed rows-only keys sort directly after unconfirmed oracled
-    # keys: once the oracled backlog fits in one window, the rows-only
-    # keys take the remaining slots and get their (weaker) driver record.
-    ordered.update(
-        {
-            k: v
-            for k, v in out.items()
-            if k not in oracled and k not in _CONFIRMED
-        }
-    )
-    # Deliberate regression re-confirmations fill the window's remaining
-    # slots in _RECONFIRM order, ahead of the arbitrary confirmed tail.
-    ordered.update({k: out[k] for k in _RECONFIRM if k in out and k in _CONFIRMED})
-    ordered.update({k: v for k, v in out.items() if k in _CONFIRMED})
-    return ordered
+    # sorted() is stable, so ties keep registration order.
+    order = sorted(out, key=lambda k: (k not in oracled, _LATEST_GREEN.get(k, 0)))
+    return {k: out[k] for k in order}
 
 
 def oracle_sql() -> dict[str, str]:

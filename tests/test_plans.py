@@ -7,7 +7,14 @@ must not fall back to interpreted evaluation.
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
 from maap_data_pipelines_spark import registry
+
+_ROOT = Path(__file__).resolve().parent.parent
+_CHECKS = ("rows_match", "schema_match", "hash_match")
 
 
 def _physical(spark, key, sf_dir) -> str:
@@ -266,6 +273,25 @@ _BNLJ_ALLOWED = {
 }
 
 
+def _newest_green_reference() -> dict[str, int]:
+    """Reference read of the committed CORRECTNESS_rN.json records, kept
+    apart from the registry's own: key -> newest round N whose row passed
+    rows, schema and hash."""
+    out: dict[str, int] = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        for key, row in json.loads(path.read_text()).items():
+            if all(row.get(c) is True for c in _CHECKS):
+                out[key] = max(out.get(key, 0), int(m.group(1)))
+    return out
+
+
+def _registration_order() -> list[str]:
+    return [k for m in registry._MODULES for k in m.QUERIES]
+
+
 def test_registry_verified_prefix_all_oracled():
     """External correctness harnesses check a bounded prefix of the
     registry in iteration order; rows-only keys must never displace a
@@ -282,37 +308,63 @@ def test_registry_verified_prefix_all_oracled():
         assert q[-len(no_oracle):] == no_oracle
     # Never-confirmed full-oracle keys must lead — the round's 50-slot
     # window converts replica claims into official driver proof.
-    unconfirmed = [k for k in q if k in o and k not in registry._CONFIRMED]
+    green = _newest_green_reference()
+    unconfirmed = [k for k in q if k in o and k not in green]
     assert q[: len(unconfirmed)] == unconfirmed, (
         "a confirmed key displaced an unconfirmed one from the window"
     )
 
 
 def test_registry_rotation_contract():
-    """Pin the rotation CONTRACT, not a round's literal key list (the r04
-    hardcoded-window pin went stale the moment the r05 rotation landed):
-
-    1. the window leads with every never-confirmed full-oracle key, in
-       _MODULES iteration order;
-    2. deliberate regression re-confirmations (_RECONFIRM) follow, in
-       list order, so the 50 driver slots are spent on the most intricate
-       machinery rather than an arbitrary dict-order tail;
-    3. _RECONFIRM names only confirmed, registered keys (no typos, no
-       double-charging a slot that tier 1 already fills).
-    """
+    """Pin the rotation CONTRACT against the committed records, not a
+    round's literal key list: over the oracled keys of queries(), the
+    newest green round (0 if never green) never decreases — never-confirmed
+    keys lead, then the stalest records — and ties keep _MODULES
+    registration order. Every registered key is still returned."""
     q = list(registry.queries())
     o = registry.oracle_sql()
-    unconfirmed = [k for k in q if k not in registry._CONFIRMED]
-    assert q[: len(unconfirmed)] == unconfirmed
-    n_u = len(unconfirmed)
-    assert q[n_u : n_u + len(registry._RECONFIRM)] == list(registry._RECONFIRM)
-    assert len(set(registry._RECONFIRM)) == len(registry._RECONFIRM)
-    for k in registry._RECONFIRM:
-        assert k in registry._CONFIRMED and k in o, k
-    # the r06 window: 3 upgraded keys + 47 re-confirmations fill all 50
-    # slots; every window key is full-oracle.
-    assert n_u + len(registry._RECONFIRM) >= 50
+    registered = _registration_order()
+    assert sorted(q) == sorted(registered)
+    green = _newest_green_reference()
+    pos = {k: i for i, k in enumerate(registered)}
+    oracled = [k for k in q if k in o]
+    keys = [(green.get(k, 0), pos[k]) for k in oracled]
+    assert keys == sorted(keys), "the window is not stalest-first"
     assert all(k in o for k in q[:50])
+
+
+def test_registry_rotation_from_records(tmp_path, monkeypatch):
+    """The derivation reads whatever records sit at a root: a row with any
+    check false confirms nothing, no records means every key is
+    never-confirmed, and a newer record moves its keys to the tail."""
+    window = list(registry.queries())[:50]
+    ok = dict.fromkeys(_CHECKS, True)
+    synth = tmp_path / "synth"
+    synth.mkdir()
+    (synth / "CORRECTNESS_r01.json").write_text(json.dumps({
+        "a": ok,
+        **{k: {**ok, c: False} for k, c in zip("bcd", _CHECKS)},
+    }))
+    (synth / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"a": {**ok, "hash_match": False}, "e": ok})
+    )
+    (synth / "CORRECTNESS_r03_c8.json").write_text(json.dumps({"f": ok}))
+    assert registry.latest_green(synth) == {"a": 1, "e": 2}
+
+    none = registry.latest_green(tmp_path / "none")
+    monkeypatch.setattr(registry, "_LATEST_GREEN", none)
+    assert list(registry.queries()) == _registration_order()
+
+    newer = tmp_path / "newer"
+    newer.mkdir()
+    for src in _ROOT.glob("CORRECTNESS_r*.json"):
+        (newer / src.name).write_text(src.read_text())
+    (newer / "CORRECTNESS_r99.json").write_text(json.dumps(dict.fromkeys(window, ok)))
+    monkeypatch.setattr(registry, "_LATEST_GREEN", registry.latest_green(newer))
+    q = list(registry.queries())
+    pos = {k: i for i, k in enumerate(_registration_order())}
+    assert q[-50:] == sorted(window, key=pos.__getitem__)
+    assert not set(q[:50]) & set(window)
 
 
 def test_plan_hygiene_all_queries(spark, sf_dir):

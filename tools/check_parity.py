@@ -33,7 +33,6 @@ def main() -> int:
             else:
                 n = df.count()
                 problems = [] if n >= 0 else [f"rows-only check failed: {n}"]
-                problems.append(f"(rows-only: {n} rows)") if False else None
         except Exception as e:  # noqa: BLE001
             problems = [f"EXCEPTION: {type(e).__name__}: {e}"]
         dt = time.time() - t0
