@@ -121,15 +121,16 @@ def corpus_rows(df: DataFrame) -> int:
 
     When ``df`` is a ``sources.catalog.fan_out`` frame, counts the
     PRE-repartition scan it wraps (``_fanout_base``) — COUNT is
-    repartition-invariant, and the raw parquet count skips the gate
-    job's round-robin exchange + sortBeforeRepartition (guide §2.5:
-    every keyless repartition pays a local sort). The count is stored on
-    the frame it counted, so every later gate over the same frame starts
-    no job; a file-source frame fixes its file listing when it is
-    created, so the stored value cannot go stale.
+    repartition-invariant. A bare ``sources.catalog.read_table`` scan
+    answers from its parquet footers' ``num_rows`` (``_footer_rows``)
+    and starts no job; any other frame runs one ``count()``. The count
+    is stored on the frame it counted, so every later gate over the same
+    frame starts no job; a file-source frame fixes its file listing when
+    it is created, so the stored value cannot go stale.
     """
     base = getattr(df, "_fanout_base", df)
     n = getattr(base, "_corpus_rows", None)
     if n is None:
-        n = base._corpus_rows = base.count()
+        footer_rows = getattr(base, "_footer_rows", None)
+        n = base._corpus_rows = footer_rows() if footer_rows else base.count()
     return n

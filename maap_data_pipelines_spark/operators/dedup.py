@@ -218,41 +218,48 @@ def _minhash_sig(
     hashed = (_shingle_hashes(docs) if hashed is None else hashed).select(
         "doc_id", (F.col("h") % MERSENNE_31).alias("hm")
     )
-    mins = [
-        F.min((F.col("hm") * F.lit(a) + F.lit(b)) % MERSENNE_31).alias(f"m{j}")
-        for j, (a, b) in enumerate(_COEFFS)
-    ]
-    return (
-        hashed.groupBy("doc_id")
-        .agg(*mins)
-        .select("doc_id", F.array(*[f"m{j}" for j in range(NUM_PERM)]).alias("sig"))
-    )
+    return hashed.groupBy("doc_id").agg(F.expr(_SIG_SQL).alias("sig"))
 
 
-def _band_key(band: int):
+# Wide column lists are written as ONE parsed SQL expression each, not
+# built a Column at a time: every PySpark Column call is a py4j round
+# trip, and the 64 minima + 16 band structs cost ~6,000 of them per
+# MinHash plan. Literal types match the Column forms (every a, b <
+# 2^31 is an INT literal in both), so the values are bit-identical.
+_SIG_SQL = "array({})".format(
+    ", ".join(f"min((hm * {a} + {b}) % {MERSENNE_31})" for a, b in _COEFFS)
+)
+
+
+def _band_key_sql(band: int) -> str:
     parts = ", ".join(
         f"element_at(sig, {band * ROWS_PER_BAND + r + 1})" for r in range(ROWS_PER_BAND)
     )
-    return F.expr(
-        f"CAST(conv(substring(md5(concat_ws('_', {parts})), 1, 15), 16, 10) AS BIGINT)"
+    return f"CAST(conv(substring(md5(concat_ws('_', {parts})), 1, 15), 16, 10) AS BIGINT)"
+
+
+_BAND_STRUCTS_SQL = "array({})".format(
+    ", ".join(
+        f"named_struct('band_id', {b}, 'band_key', {_band_key_sql(b)})"
+        for b in range(BANDS)
     )
+)
+
+
+def _explode_bands(sig: DataFrame, keep: tuple = ("sig",)) -> DataFrame:
+    """(doc_id, *keep, band_id, band_key): one row per LSH band of the
+    ``sig`` column — the one band-key definition every LSH consumer and
+    the streaming admission index share."""
+    return sig.select(
+        "doc_id", *keep, F.explode(F.expr(_BAND_STRUCTS_SQL)).alias("bk")
+    ).select("doc_id", *keep, "bk.band_id", "bk.band_key")
 
 
 def _banded_pairs_from_sig(sig: DataFrame) -> DataFrame:
     """Distinct (doc_a, doc_b) candidate pairs from a signature frame via
     the 16x4 band self-join over SLIM (doc_id, band_id, band_key) rows
     (the r10 scale shape — signatures never ride the band rows)."""
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
-            for b in range(BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("bk")).select(
-        "doc_id",
-        F.col("bk.band_id").alias("band_id"),
-        F.col("bk.band_key").alias("band_key"),
-    )
+    bands = _explode_bands(sig, keep=())
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -397,24 +404,22 @@ def _simhash_fp(docs: DataFrame, hashed: DataFrame | None = None) -> DataFrame:
     ``hashed`` — optional precomputed :func:`_shingle_hashes` frame;
     must NOT be distinct-ed (the bit sums weigh each OCCURRENCE)."""
     hashed = _shingle_hashes(docs) if hashed is None else hashed
-    sums = [
-        F.sum(
-            F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1
-        ).alias(f"s{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    grouped = hashed.groupBy("doc_id").agg(*sums)
-    fp = sum(
-        F.when(F.col(f"s{j}") > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for j in range(SIMHASH_BITS)
-    )
+    grouped = hashed.groupBy("doc_id").agg(F.expr(_SIMHASH_SUMS_SQL).alias("s"))
     # NOT persisted: the piece self-join recomputes this once per branch —
     # two passes for a self-join is the standard Spark trade; caching was
     # measured 2x slower locally (cache build + InMemoryTableScan beat the
     # cheap codegen recompute) and only wins when the corpus scan dominates.
-    return grouped.select("doc_id", fp.alias("fp"))
+    return grouped.select("doc_id", F.expr(_SIMHASH_FP_SQL).alias("fp"))
+
+
+# One parsed expression each (see _SIG_SQL): s[j] is the signed bit-j
+# vote over the doc's shingle occurrences, fp sets bit j where it wins.
+_SIMHASH_SUMS_SQL = "array({})".format(
+    ", ".join(f"sum((shiftright(h, {j}) & 1) * 2 - 1)" for j in range(SIMHASH_BITS))
+)
+_SIMHASH_FP_SQL = " + ".join(
+    f"IF(s[{j}] > 0, {1 << j}L, 0L)" for j in range(SIMHASH_BITS)
+)
 
 
 def dedup_simhash(
@@ -1536,7 +1541,7 @@ def dedup_minhash_incremental(docs: DataFrame) -> DataFrame:
     is_batch = F.col("source") == INCREMENTAL_BATCH_SOURCE
     sig = _minhash_sig(docs).localCheckpoint(eager=False)
     srcs = docs.select("doc_id", "source")
-    bands = _explode_bands(sig.join(srcs, "doc_id"), extra_cols=("source",))
+    bands = _explode_bands(sig.join(srcs, "doc_id"), keep=("sig", "source"))
     probe = bands.filter(is_batch).select(
         F.col("doc_id").alias("batch_doc"),
         F.col("sig").alias("sa"),
@@ -1551,25 +1556,6 @@ def dedup_minhash_incremental(docs: DataFrame) -> DataFrame:
     )
     batch_docs = docs.filter(is_batch).select("doc_id").distinct()
     return lsh_admission_verdict(probe, index, batch_docs)
-
-
-def _explode_bands(sig: DataFrame, extra_cols: tuple = ()) -> DataFrame:
-    """(doc_id, sig, *extra, band_id, band_key): one row per LSH band."""
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
-            for b in range(BANDS)
-        ]
-    )
-    return sig.select(
-        "doc_id", "sig", *extra_cols, F.explode(band_structs).alias("bk")
-    ).select(
-        "doc_id",
-        "sig",
-        *extra_cols,
-        F.col("bk.band_id").alias("band_id"),
-        F.col("bk.band_key").alias("band_key"),
-    )
 
 
 def probe_bands(docs: DataFrame) -> DataFrame:
@@ -1948,19 +1934,7 @@ def dedup_threshold_curve(docs: DataFrame) -> DataFrame:
     never corpus²); distinct-doc counting explodes each pair to its two
     endpoints first (2×pairs rows, still candidate-bounded).
     """
-    sig = _minhash_sig(docs).localCheckpoint(eager=False)
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
-            for b in range(BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", "sig", F.explode(band_structs).alias("bk")).select(
-        "doc_id",
-        "sig",
-        F.col("bk.band_id").alias("band_id"),
-        F.col("bk.band_key").alias("band_key"),
-    )
+    bands = _explode_bands(_minhash_sig(docs).localCheckpoint(eager=False))
     a, b = bands.alias("a"), bands.alias("b")
     pairs = (
         a.join(

@@ -730,30 +730,18 @@ def embedding_fisher_ratio(emb: DataFrame) -> DataFrame:
     q = emb.select(
         "label", quantize_udf(F.col("embedding")).alias("qv")
     ).localCheckpoint(eager=False)
-    sums = q.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        *[F.sum(F.col("qv")[d]).alias(f"s{d}") for d in range(EMBED_DIM)],
+    # The 64 per-dimension sums are one parsed expression, not 64 Columns
+    # built a py4j round trip at a time; the floored means are one
+    # transform over them.
+    dim_sums = F.expr(_DIM_SUMS_SQL).alias("s")
+    floor_means = "transform(s, x -> CAST(FLOOR(x / {}) AS BIGINT))".format
+    cents = (
+        q.groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n_vectors"), dim_sums)
+        .select("label", "n_vectors", F.expr(floor_means("n_vectors")).alias("cv"))
     )
-    cents = sums.select(
-        "label",
-        "n_vectors",
-        F.array(
-            *[
-                F.floor(F.col(f"s{d}") / F.col("n_vectors")).cast("long")
-                for d in range(EMBED_DIM)
-            ]
-        ).alias("cv"),
-    )
-    gm = q.agg(
-        F.count(F.lit(1)).alias("n_all"),
-        *[F.sum(F.col("qv")[d]).alias(f"s{d}") for d in range(EMBED_DIM)],
-    ).select(
-        F.array(
-            *[
-                F.floor(F.col(f"s{d}") / F.col("n_all")).cast("long")
-                for d in range(EMBED_DIM)
-            ]
-        ).alias("gv")
+    gm = q.agg(F.count(F.lit(1)).alias("n_all"), dim_sums).select(
+        F.expr(floor_means("n_all")).alias("gv")
     )
     between = (
         cents.crossJoin(F.broadcast(gm))
@@ -785,6 +773,10 @@ def embedding_fisher_ratio(emb: DataFrame) -> DataFrame:
         )
     )
 
+
+_DIM_SUMS_SQL = "array({})".format(
+    ", ".join(f"sum(qv[{d}])" for d in range(EMBED_DIM))
+)
 
 _FISHER_CENT_MEANS = ", ".join(
     f"CAST(FLOOR(SUM(qv[{d}])::DOUBLE / COUNT(*)) AS BIGINT)"

@@ -555,3 +555,34 @@ def test_platt_plan_runs_on_checkpointed_deciles(spark, sf_dir):
     assert "Scan ExistingRDD" in plan
     assert "Scan parquet" not in plan  # corpus paid once, at checkpoint time
     assert "SortMergeJoin" not in plan
+
+
+# Spark jobs building each plan may start at the test sf (statusTracker
+# job-id delta around fn(spark, sf), as tests/test_pipelines.py counts).
+# Table reads take their schema and bare-scan gate counts from the
+# parquet footers, so a relational or event plan builds with no job; the
+# curation and dedup plans keep their eager checkpoints and loops.
+BUILD_JOB_BUDGETS = {
+    "q3_shipping_priority": 0,
+    "events_sessionize": 0,
+    "curation_yield_report": 4,
+    "dedup_token_savings": 20,
+}
+
+
+def test_build_job_budgets(spark, sf_dir):
+    sc = spark.sparkContext
+
+    def last_job_id():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    qs = registry.queries()
+    over = {}
+    for key, budget in BUILD_JOB_BUDGETS.items():
+        before = last_job_id()
+        qs[key](spark, sf_dir)
+        jobs = last_job_id() - before
+        if jobs > budget:
+            over[key] = (jobs, budget)
+    assert not over, over

@@ -359,3 +359,133 @@ def test_fanout_base_count_invariant(spark, sf_dir):
     # no-op path (already enough partitions): no attribute, same count
     wide = fanned.repartition(64)
     assert corpus_rows(fan_out(wide)) == docs.count()
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _spark_written_table(spark, root) -> str:
+    """A 3-part-file directory written by Spark with an INT96 timestamp
+    and the nested / exact types a footer mapping can get wrong."""
+    root.mkdir()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.range(0, 30, 1, 3).selectExpr(
+            "id",
+            "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+            "TIMESTAMP_NTZ '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, id) AS ts_ntz",
+            "date_add(DATE '2024-01-01', CAST(id AS INT)) AS d",
+            "CAST(id * 1.25 AS DECIMAL(12,2)) AS amt",
+            "array(CAST(id AS INT), NULL) AS arr",
+            "named_struct('a', CAST(id AS INT), 'b', CAST(id AS STRING)) AS st",
+            "map(CAST(id AS STRING), CAST(id AS INT)) AS m",
+            "CAST(CAST(id AS STRING) AS BINARY) AS bin",
+        ).write.parquet(str(root / "events.parquet"))
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    parts = list((root / "events.parquet").glob("part-*.parquet"))
+    assert len(parts) == 3
+    return str(root)
+
+
+def _assert_footer_path_matches_inference(spark, sf_dir, name):
+    from maap_data_pipelines_spark.functions.joins import corpus_rows
+    from maap_data_pipelines_spark.sources.catalog import read_table
+
+    before = _last_job_id(spark)
+    df = read_table(spark, sf_dir, name)
+    n = corpus_rows(df)
+    assert _last_job_id(spark) == before, f"{name}: footer path started a job"
+    inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    assert df.schema == inferred.schema, name
+    assert df.toArrow().equals(inferred.toArrow()), name
+    assert n == inferred.count(), name
+
+
+def test_read_table_footer_schema_and_count(spark, sf_dir, tmp_path):
+    """read_table's schema comes from the parquet footer and its gate count
+    from footer num_rows: both equal what Spark's inference and count()
+    give, for every test table and for a Spark-written multi-file
+    directory, and neither starts a Spark job."""
+    from maap_data_pipelines_spark.sources.catalog import TABLES
+
+    for name in TABLES:
+        _assert_footer_path_matches_inference(spark, sf_dir, name)
+    spark_dir = _spark_written_table(spark, tmp_path / "spark_written")
+    _assert_footer_path_matches_inference(spark, spark_dir, "events")
+    # nested types keep their inferred shape end to end
+    from maap_data_pipelines_spark.sources.catalog import read_table
+
+    types = dict(read_table(spark, spark_dir, "events").dtypes)
+    assert types["ts"] == "timestamp" and types["ts_ntz"] == "timestamp_ntz"
+    assert types["amt"] == "decimal(12,2)" and types["m"] == "map<string,int>"
+
+
+def test_arrow_schema_alone_misreads_int96(spark, tmp_path):
+    """Negative control for the row-metadata path: mapping the Arrow
+    schema of a Spark-written footer reads the INT96 ``timestamp`` as
+    ``timestamp_ntz``, so the stored Spark row schema is what makes the
+    footer path exact."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    spark_dir = _spark_written_table(spark, tmp_path / "spark_written")
+    path = f"{spark_dir}/events.parquet"
+    first = sorted((tmp_path / "spark_written" / "events.parquet").glob("part-*"))[0]
+    arrow_only = from_arrow_schema(pq.read_schema(first), prefer_timestamp_ntz=True)
+    inferred = spark.read.parquet(path).schema
+    wrong = {  # types compared without nullability, which inference drops
+        f.name
+        for f in arrow_only.fields
+        if f.dataType.simpleString() != inferred[f.name].dataType.simpleString()
+    }
+    assert wrong == {"ts"}, wrong
+    assert spark.read.schema(arrow_only).parquet(path).schema != inferred
+
+
+def test_read_table_unmappable_column_names_table_and_column(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from maap_data_pipelines_spark.sources.catalog import read_table
+
+    for col, arr in (
+        ("n_unsigned", pa.array([1], pa.uint32())),
+        ("elapsed", pa.array([1], pa.duration("us"))),
+    ):
+        d = tmp_path / col
+        d.mkdir()
+        pq.write_table(pa.table({"id": [1], col: arr}), d / "orders.parquet")
+        with pytest.raises(TypeError, match=f"'orders'.*'{col}'"):
+            read_table(spark, str(d), "orders")
+
+
+def test_read_table_nanosecond_timestamps_follow_nanos_as_long(spark, tmp_path):
+    """A nanosecond parquet timestamp (the pandas default) maps as Spark
+    maps it: raw int64 under ``spark.sql.legacy.parquet.nanosAsLong``,
+    and an error naming the table and column without it, where Spark's
+    own reader rejects the type too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from maap_data_pipelines_spark.sources.catalog import read_table
+
+    pq.write_table(
+        pa.table({"id": [1], "ts": pa.array([1_000], pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        _assert_footer_path_matches_inference(spark, str(tmp_path), "events")
+        spark.conf.set(key, "false")
+        with pytest.raises(TypeError, match="'events'.*'ts'"):
+            read_table(spark, str(tmp_path), "events")
+    finally:
+        spark.conf.set(key, before)

@@ -1,19 +1,32 @@
-"""Profile registered queries: wall time, Spark job count, plan dump.
+"""Profile registered queries: plan build and execution measured apart.
 
 Usage:
-    python tools/profile_query.py [--sf SF_DIR] [--runs N] [--plan OUT_DIR] key [key ...]
+    python tools/profile_query.py [--sf SF_DIR] [--runs N] [--plan OUT_DIR]
+                                  [--out FILE.jsonl] [key ...]
 
-For each key: builds the DataFrame, optionally writes the formatted plan
-to OUT_DIR/<key>.txt, then executes it --runs times via the noop sink,
-reporting wall seconds per run and the number of Spark jobs the run
-triggered (statusTracker job-id delta).  Job count exposes driver-sync
-loops / eager materializations that per-query wall time alone hides.
+With no key, every key of ``registry.queries()`` is profiled in registry
+order. Each run of a key prints one JSON line:
+
+* ``build_s`` / ``build_jobs`` / ``build_py4j`` — building the DataFrame
+  (``fn(spark, sf)``): wall seconds, Spark jobs started (eager
+  checkpoints, gate counts, schema inference) and driver-to-JVM py4j
+  commands sent (every ``Column`` built one call at a time is one or more
+  round trips);
+* ``exec_s`` / ``exec_jobs`` — executing it with ``toArrow()``.
+
+Jobs are the statusTracker job-id delta around each phase, the same
+count ``tests/test_pipelines.py`` budgets. ``--out`` also appends the
+lines to a file; the last stdout line sums the run. The session follows
+``session.get_spark`` (``SPARK_GRAFT_CPUS`` /
+``SPARK_GRAFT_SHUFFLE_PARTITIONS``); the committed registry records use
+4 and 4, the test session's shape.
 """
 
 from __future__ import annotations
 
 import argparse
 import io
+import json
 import os
 import sys
 import time
@@ -25,51 +38,97 @@ from maap_data_pipelines_spark import registry  # noqa: E402
 from maap_data_pipelines_spark.session import get_spark  # noqa: E402
 
 
+class _Py4jCounter:
+    """Counts the commands the driver sends through py4j."""
+
+    def __init__(self, sc):
+        client = sc._gateway._gateway_client
+        send = client.send_command
+        self.n = 0
+
+        def counted(*args, **kwargs):
+            self.n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+
+
+def _last_job_id(sc) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def profile(spark, fn, sf: str, py4j: _Py4jCounter) -> dict:
+    """One build span and one execute span of a registered query."""
+    sc = spark.sparkContext
+    j0, c0, t0 = _last_job_id(sc), py4j.n, time.perf_counter()
+    df = fn(spark, sf)
+    t1 = time.perf_counter()
+    c1 = py4j.n
+    j1 = _last_job_id(sc)
+    df.toArrow()
+    t2 = time.perf_counter()
+    j2 = _last_job_id(sc)
+    return {
+        "build_s": round(t1 - t0, 3),
+        "build_jobs": j1 - j0,
+        "build_py4j": c1 - c0,
+        "exec_s": round(t2 - t1, 3),
+        "exec_jobs": j2 - j1,
+    }
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("keys", nargs="+")
+    ap.add_argument("keys", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--runs", type=int, default=1)
     ap.add_argument("--plan", default=None, help="dir to write <key>.txt formatted plans")
+    ap.add_argument("--out", default=None, help="JSONL file the lines are appended to")
     args = ap.parse_args()
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-    sc = spark.sparkContext
+    py4j = _Py4jCounter(spark.sparkContext)
 
     # warmup so JVM startup isn't billed to the first key
-    qs["q6_forecast_revenue"](spark, args.sf).write.format("noop").mode("overwrite").save()
+    qs["q6_forecast_revenue"](spark, args.sf).toArrow()
 
-    for key in args.keys:
+    totals = {"keys": 0, "errors": 0, "zero_job_builds": 0}
+    out = open(args.out, "a") if args.out else None
+    for key in args.keys or list(qs):
         if key not in qs:
-            print(f"SKIP {key}: unknown")
+            print(f"SKIP {key}: unknown", file=sys.stderr)
             continue
         if args.plan:
             os.makedirs(args.plan, exist_ok=True)
-            df = qs[key](spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
-                df.explain("formatted")
+                qs[key](spark, args.sf).explain("formatted")
             with open(os.path.join(args.plan, f"{key}.txt"), "w") as f:
                 f.write(buf.getvalue())
-        walls, jobs = [], []
-        for _ in range(args.runs):
+        for run in range(args.runs):
             spark.catalog.clearCache()
-            j0 = sc.statusTracker().getJobIdsForGroup(None)
-            n0 = max(j0) if j0 else -1
-            sc.setJobDescription(f"profile:{key}")
-            t0 = time.time()
-            df = qs[key](spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(time.time() - t0)
-            j1 = sc.statusTracker().getJobIdsForGroup(None)
-            n1 = max(j1) if j1 else -1
-            jobs.append(n1 - n0)
-            sc.setJobDescription(None)
-        walls_s = " ".join(f"{w:.2f}" for w in walls)
-        med = sorted(walls)[len(walls) // 2]
-        print(f"{key}: med={med:.2f}s runs=[{walls_s}] jobs={jobs}", flush=True)
+            try:
+                rec = {"key": key, "run": run, **profile(spark, qs[key], args.sf, py4j)}
+            except Exception as e:  # one failing key must not end the record
+                rec = {"key": key, "run": run, "error": f"{type(e).__name__}: {e}"[:300]}
+            line = json.dumps(rec)
+            print(line, flush=True)
+            if out:
+                out.write(line + "\n")
+                out.flush()
+            totals["keys"] += 1
+            if "error" in rec:
+                totals["errors"] += 1
+                continue
+            totals["zero_job_builds"] += rec["build_jobs"] == 0
+            for k in ("build_s", "build_jobs", "build_py4j", "exec_s", "exec_jobs"):
+                totals[k] = round(totals.get(k, 0) + rec[k], 3)
+    if out:
+        out.close()
+    print(json.dumps({"totals": totals}), flush=True)
     return 0
 
 
