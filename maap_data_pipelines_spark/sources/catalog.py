@@ -96,8 +96,14 @@ def _footer_schema(spark: SparkSession, name: str, metadata) -> StructType:
     ``spark.sql.parquet.inferTimestampNTZ.enabled`` (a tz-naive parquet
     timestamp is ``timestamp_ntz`` only when it is on) and
     ``spark.sql.legacy.parquet.nanosAsLong`` (a top-level nanosecond
-    timestamp is ``bigint`` only when it is on). A column with no
-    faithful mapping raises ``TypeError`` naming the table and column."""
+    timestamp is ``bigint`` only when it is on).
+
+    The Arrow mapping covers the types the catalog's tables use. It does
+    not cover some that Spark's own inference reads: unsigned integers,
+    INT96 timestamps in a file Spark did not write (pyarrow reads them
+    as nanosecond timestamps), and any other type ``from_arrow_type``
+    rejects. Such a column raises ``TypeError`` naming the table and
+    column."""
     stored = (metadata.metadata or {}).get(_SPARK_ROW_METADATA)
     if stored is not None:
         return StructType.fromJson(json.loads(stored))
@@ -107,10 +113,18 @@ def _footer_schema(spark: SparkSession, name: str, metadata) -> StructType:
     conf = spark.conf.get
     ntz = conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
     nanos_as_long = conf("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    parquet = metadata.schema
+    int96 = {
+        parquet.column(i).path.split(".")[0]
+        for i in range(len(parquet))
+        if parquet.column(i).physical_type == "INT96"
+    }
     fields = []
-    for field in metadata.schema.to_arrow_schema():
+    for field in parquet.to_arrow_schema():
         t = field.type
         try:
+            if field.name in int96:
+                raise TypeError("INT96 outside a Spark-written file")
             if nanos_as_long and pa.types.is_timestamp(t) and t.unit == "ns":
                 t = pa.int64()
             if _arrow_only(t):
@@ -119,7 +133,7 @@ def _footer_schema(spark: SparkSession, name: str, metadata) -> StructType:
         except Exception as e:
             raise TypeError(
                 f"table {name!r}: parquet column {field.name!r} ({field.type}) "
-                "has no Spark type mapping"
+                "is not supported by read_table's footer schema mapping"
             ) from e
     return StructType(fields)
 
@@ -132,8 +146,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     footer of the file Spark's non-merging inference would open
     (:func:`_parquet_leaves`), mapped by :func:`_footer_schema`. It is
     handed to ``spark.read.schema``, so no inference job runs, and every
-    field is nullable, as inference makes it. A column with no Spark
-    mapping raises, naming the table and column.
+    field is nullable, as inference makes it. A column type the footer
+    mapping does not cover raises, naming the table and column, even
+    where Spark's inference would read it (see :func:`_footer_schema`).
 
     The row count comes from the footers too: a gate that asks
     (``functions.joins.corpus_rows``) gets the sum of ``num_rows`` over

@@ -447,21 +447,39 @@ def test_arrow_schema_alone_misreads_int96(spark, tmp_path):
 
 
 def test_read_table_unmappable_column_names_table_and_column(spark, tmp_path):
+    """Types the footer mapping does not cover raise, naming the table and
+    column. Spark's own inference reads some of them (uint32 as bigint,
+    a non-Spark INT96 as timestamp); the footer path does not, by
+    design, and keeps no inference fallback. The INT96 column is checked
+    under ``nanosAsLong`` too, where pyarrow's timestamp[ns] would
+    otherwise map to bigint."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
 
     from maap_data_pipelines_spark.sources.catalog import read_table
 
-    for col, arr in (
-        ("n_unsigned", pa.array([1], pa.uint32())),
-        ("elapsed", pa.array([1], pa.duration("us"))),
-    ):
-        d = tmp_path / col
-        d.mkdir()
-        pq.write_table(pa.table({"id": [1], col: arr}), d / "orders.parquet")
-        with pytest.raises(TypeError, match=f"'orders'.*'{col}'"):
-            read_table(spark, str(d), "orders")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        for col, arr, nanos_as_long in (
+            ("n_unsigned", pa.array([1], pa.uint32()), "false"),
+            ("elapsed", pa.array([1], pa.duration("us")), "false"),
+            ("ts96", pa.array([1_000], pa.timestamp("us")), "false"),
+            ("ts96", pa.array([1_000], pa.timestamp("us")), "true"),
+        ):
+            spark.conf.set(key, nanos_as_long)
+            d = tmp_path / f"{col}_{nanos_as_long}"
+            d.mkdir()
+            pq.write_table(
+                pa.table({"id": [1], col: arr}),
+                d / "orders.parquet",
+                use_deprecated_int96_timestamps=col == "ts96",
+            )
+            with pytest.raises(TypeError, match=f"'orders'.*'{col}'.*not supported"):
+                read_table(spark, str(d), "orders")
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_read_table_nanosecond_timestamps_follow_nanos_as_long(spark, tmp_path):

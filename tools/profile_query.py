@@ -2,7 +2,7 @@
 
 Usage:
     python tools/profile_query.py [--sf SF_DIR] [--runs N] [--plan OUT_DIR]
-                                  [--out FILE.jsonl] [key ...]
+                                  [key ...] > record.jsonl
 
 With no key, every key of ``registry.queries()`` is profiled in registry
 order. Each run of a key prints one JSON line:
@@ -15,8 +15,9 @@ order. Each run of a key prints one JSON line:
 * ``exec_s`` / ``exec_jobs`` — executing it with ``toArrow()``.
 
 Jobs are the statusTracker job-id delta around each phase, the same
-count ``tests/test_pipelines.py`` budgets. ``--out`` also appends the
-lines to a file; the last stdout line sums the run. The session follows
+count ``tests/test_pipelines.py`` budgets. Every line is flushed as
+it is made, so redirecting stdout keeps a record; the last line sums the
+run. The session follows
 ``session.get_spark`` (``SPARK_GRAFT_CPUS`` /
 ``SPARK_GRAFT_SHUFFLE_PARTITIONS``); the committed registry records use
 4 and 4, the test session's shape.
@@ -84,7 +85,6 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=1)
     ap.add_argument("--plan", default=None, help="dir to write <key>.txt formatted plans")
-    ap.add_argument("--out", default=None, help="JSONL file the lines are appended to")
     args = ap.parse_args()
 
     spark = get_spark("profile")
@@ -96,7 +96,6 @@ def main() -> int:
     qs["q6_forecast_revenue"](spark, args.sf).toArrow()
 
     totals = {"keys": 0, "errors": 0, "zero_job_builds": 0}
-    out = open(args.out, "a") if args.out else None
     for key in args.keys or list(qs):
         if key not in qs:
             print(f"SKIP {key}: unknown", file=sys.stderr)
@@ -114,11 +113,7 @@ def main() -> int:
                 rec = {"key": key, "run": run, **profile(spark, qs[key], args.sf, py4j)}
             except Exception as e:  # one failing key must not end the record
                 rec = {"key": key, "run": run, "error": f"{type(e).__name__}: {e}"[:300]}
-            line = json.dumps(rec)
-            print(line, flush=True)
-            if out:
-                out.write(line + "\n")
-                out.flush()
+            print(json.dumps(rec), flush=True)
             totals["keys"] += 1
             if "error" in rec:
                 totals["errors"] += 1
@@ -126,8 +121,6 @@ def main() -> int:
             totals["zero_job_builds"] += rec["build_jobs"] == 0
             for k in ("build_s", "build_jobs", "build_py4j", "exec_s", "exec_jobs"):
                 totals[k] = round(totals.get(k, 0) + rec[k], 3)
-    if out:
-        out.close()
     print(json.dumps({"totals": totals}), flush=True)
     return 0
 
