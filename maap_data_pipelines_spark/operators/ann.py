@@ -864,12 +864,23 @@ def ann_ivf_topk(emb: DataFrame, nprobe: int = 1, cents: DataFrame | None = None
     )
 
 
-def _ivf_sql(nprobe: int) -> str:
-    return f"""
-WITH cents AS (
+_FIRST_K_CENTS_SQL = f"""cents AS (
   SELECT vec_id AS centroid_id, embedding AS cemb FROM embeddings WHERE vec_id < {IVF_K}
-),
-scored AS (
+)"""
+
+
+def _ivf_sql(nprobe: int, prelude: str = "WITH", cents: str = _FIRST_K_CENTS_SQL) -> str:
+    """Oracle of :func:`ann_ivf_topk` over the ``cents`` CTE's quantizer.
+
+    ``prelude`` is the text before ``cents``: a bare ``WITH``, or the
+    CTEs the centroid CTE reads ending in a comma (the learned quantizer
+    passes its Lloyd rounds). ``scored`` is MATERIALIZED because both
+    the corpus assignment and the query probes read it.
+    """
+    return f"""
+{prelude}
+{cents},
+scored AS MATERIALIZED (
   SELECT e.vec_id, e.embedding, c.centroid_id,
          ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
   FROM embeddings e CROSS JOIN cents c
@@ -925,27 +936,36 @@ def ann_ivf_recall(emb: DataFrame, nprobe: int = 1) -> DataFrame:
     order as the IVF assignment pass itself), never quadratic — the
     query-set cap IS the sampling a 100 TB monitor needs.
     """
-    truth = ann_cosine_topk(emb).filter(F.col("rnk") <= IVF_TOPK).select(
-        "query_id", "vec_id"
+    return _recall(
+        ann_cosine_topk(emb).filter(F.col("rnk") <= IVF_TOPK),
+        ann_ivf_topk(emb, nprobe=nprobe),
     )
-    approx = ann_ivf_topk(emb, nprobe=nprobe).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
+
+
+def _recall(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query recall@IVF_TOPK: (query_id, n_hits, recall).
+
+    ``truth`` is an exact top-IVF_TOPK list, already cut to IVF_TOPK
+    rows per query; a truth row is a hit when ``approx`` holds the same
+    (query_id, vec_id). The one recall meter every approximate search
+    here reports through.
+    """
+    hits = approx.select("query_id", "vec_id", F.lit(1).alias("hit"))
     n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
     return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
+        truth.select("query_id", "vec_id")
+        .join(hits, ["query_id", "vec_id"], "left")
         .groupBy("query_id")
-        .agg(
-            n_hits.alias("n_hits"),
-        )
+        .agg(n_hits.alias("n_hits"))
         .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
     )
 
 
-def _recall_sql(approx_sql: str) -> str:
+def _recall_sql(approx_sql: str, truth_sql: str = ANN_COSINE_TOPK_SQL) -> str:
+    """Oracle of :func:`_recall`: ``truth_sql`` cut to IVF_TOPK vs ``approx_sql``."""
     return f"""
 WITH brute AS (
-  SELECT query_id, vec_id FROM ({ANN_COSINE_TOPK_SQL}) WHERE rnk <= {IVF_TOPK}
+  SELECT query_id, vec_id FROM ({truth_sql}) WHERE rnk <= {IVF_TOPK}
 ),
 appr AS (
   SELECT query_id, vec_id, 1 AS hit FROM ({approx_sql})
@@ -1012,10 +1032,8 @@ def ann_recall_by_label(emb: DataFrame) -> DataFrame:
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.col("vec_id")
     )
-    truth = (
-        scored.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= IVF_TOPK)
-        .select("query_id", "vec_id")
+    truth = scored.withColumn("rnk", F.row_number().over(w_rank)).filter(
+        F.col("rnk") <= IVF_TOPK
     )
     # IVF candidates for the same query set (ann_ivf_topk's machinery)
     cents = ivf_centroids(emb)
@@ -1039,15 +1057,10 @@ def ann_recall_by_label(emb: DataFrame) -> DataFrame:
         )
         .withColumn("rnk", F.row_number().over(w_rank))
         .filter(F.col("rnk") <= IVF_TOPK)
-        .select("query_id", "vec_id", F.lit(1).alias("hit"))
-    )
-    per_q = (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hits"))
     )
     return (
-        per_q.join(q.select("query_id", "label"), "query_id")
+        _recall(truth, approx)
+        .join(q.select("query_id", "label"), "query_id")
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_queries"),
@@ -1381,18 +1394,9 @@ def ann_matryoshka_recall(emb: DataFrame) -> DataFrame:
     assumed, exactly like the IVF/PQ/LSH monitors (every approximation in
     this engine ships with its recall meter).
     """
-    truth = ann_cosine_topk(emb).filter(F.col("rnk") <= IVF_TOPK).select(
-        "query_id", "vec_id"
-    )
-    approx = ann_matryoshka_topk(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
+    return _recall(
+        ann_cosine_topk(emb).filter(F.col("rnk") <= IVF_TOPK),
+        ann_matryoshka_topk(emb),
     )
 
 

@@ -46,7 +46,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .ann import EMBED_DIM, cosine_sql, cosine_udf
+from .ann import (
+    EMBED_DIM,
+    IVF_TOPK,
+    _ivf_sql,
+    _recall,
+    _recall_sql,
+    ann_cosine_topk,
+    ann_ivf_topk,
+    cosine_sql,
+    cosine_udf,
+)
 
 KM_K = 8
 KM_ITERS = 4
@@ -391,94 +401,30 @@ def ann_ivf_kmeans_topk(emb: DataFrame) -> DataFrame:
     quantizer: data-adapted cells balance list sizes and tighten cell
     boundaries; same assignment, ranking, and tie rules.
     """
-    from .ann import ann_ivf_topk
-
     return ann_ivf_topk(emb, nprobe=1, cents=kmeans_centroids(emb))
 
 
 def ann_ivf_kmeans_recall(emb: DataFrame) -> DataFrame:
     """Recall@5 of the learned-quantizer IVF vs brute truth, per query."""
-    from .ann import IVF_TOPK, ann_cosine_topk
-
-    truth = ann_cosine_topk(emb).filter(F.col("rnk") <= IVF_TOPK).select(
-        "query_id", "vec_id"
-    )
-    approx = ann_ivf_kmeans_topk(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
-
-
-def _scaled_cents_sql() -> str:
-    scaled = ", ".join(f"cv[{i}] / 1000000.0" for i in range(1, EMBED_DIM + 1))
-    return (
-        f"cents AS (SELECT cid AS centroid_id, [{scaled}] AS cemb "
-        f"FROM c{KM_ITERS})"
+    return _recall(
+        ann_cosine_topk(emb).filter(F.col("rnk") <= IVF_TOPK),
+        ann_ivf_kmeans_topk(emb),
     )
 
 
 def _ivf_kmeans_sql() -> str:
-    from .ann import IVF_TOPK, N_QUERIES
-
-    return f"""
-{_kmeans_ctes()},
-{_scaled_cents_sql()},
-iscored AS MATERIALIZED (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-iassigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell
-  FROM iscored
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) = 1
-),
-iq AS (
-  SELECT vec_id AS query_id, embedding AS qe, centroid_id AS cell
-  FROM iscored WHERE vec_id < {N_QUERIES}
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) <= 1
-),
-ipairs AS (
-  SELECT iq.query_id, c.vec_id,
-         ROUND({cosine_sql('iq.qe', 'c.embedding')}, 6) AS cosine
-  FROM iassigned c JOIN iq USING (cell)
-  WHERE c.vec_id <> iq.query_id
-)
-SELECT query_id, vec_id, cosine,
-       row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rnk
-FROM ipairs
-QUALIFY rnk <= {IVF_TOPK}
-"""
-
-
-def _ivf_kmeans_recall_sql() -> str:
-    from .ann import ANN_COSINE_TOPK_SQL, IVF_TOPK
-
-    return f"""
-WITH brute AS (
-  SELECT query_id, vec_id FROM ({ANN_COSINE_TOPK_SQL}) WHERE rnk <= {IVF_TOPK}
-),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({_ivf_kmeans_sql()})
-)
-SELECT b.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM brute b LEFT JOIN appr a ON b.query_id = a.query_id AND b.vec_id = a.vec_id
-GROUP BY b.query_id
-"""
+    scaled = ", ".join(f"cv[{i}] / 1000000.0" for i in range(1, EMBED_DIM + 1))
+    return _ivf_sql(
+        1,
+        prelude=f"{_kmeans_ctes()},",
+        cents=f"cents AS (SELECT cid AS centroid_id, [{scaled}] AS cemb FROM c{KM_ITERS})",
+    )
 
 
 QUERY_SQL.update(
     {
         "ann_ivf_kmeans_topk": _ivf_kmeans_sql(),
-        "ann_ivf_kmeans_recall": _ivf_kmeans_recall_sql(),
+        "ann_ivf_kmeans_recall": _recall_sql(_ivf_kmeans_sql()),
     }
 )
 

@@ -37,7 +37,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
-from .ann import EMBED_DIM, IVF_TOPK, N_QUERIES
+from .ann import EMBED_DIM, IVF_TOPK, N_QUERIES, _recall, _recall_sql
 from .kmeans import _dist_sql, _qv_sql, quantize_udf
 
 PQ_S = 8  # subspaces
@@ -85,6 +85,10 @@ def _l2_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 _l2_udf = _l2_udf.asNondeterministic()
 
 
+def _micro(emb: DataFrame) -> DataFrame:
+    return emb.select("vec_id", quantize_udf(F.col("embedding")).alias("qv"))
+
+
 def _train_codebooks(q: DataFrame) -> dict[int, list[tuple[int, list[int]]]]:
     """Fused per-subspace Lloyd: one distributed job per round.
 
@@ -130,9 +134,7 @@ def _train_codebooks(q: DataFrame) -> dict[int, list[tuple[int, list[int]]]]:
 
 def _encoded(emb: DataFrame):
     """(quantized corpus, trained codebooks, encoded frame vec_id+codes)."""
-    q = emb.select(
-        "vec_id", quantize_udf(F.col("embedding")).alias("qv")
-    ).localCheckpoint(eager=False)
+    q = _micro(emb).localCheckpoint(eager=False)
     cb = _train_codebooks(q)
     enc = q.select("vec_id", "qv", _codes_udf(cb)(F.col("qv")).alias("codes"))
     return q, cb, enc
@@ -192,7 +194,7 @@ def ann_l2_topk(emb: DataFrame) -> DataFrame:
     Same documented quadratic-baseline status: query side fixed at
     N_QUERIES, one linear O(Q*N) scan.
     """
-    q = emb.select("vec_id", quantize_udf(F.col("embedding")).alias("qv"))
+    q = _micro(emb)
     qs = q.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
     )
@@ -216,17 +218,7 @@ def ann_pq_recall(emb: DataFrame) -> DataFrame:
     per vector vs 256 float bytes (the stored codes column is 8 small
     ints for SQL-oracle clarity; a production sink nibble-packs them):
     recall is the price of that 64x."""
-    truth = ann_l2_topk(emb).select("query_id", "vec_id")
-    approx = ann_pq_topk(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
+    return _recall(ann_l2_topk(emb), ann_pq_topk(emb))
 
 
 RERANK_POOL = 50
@@ -242,19 +234,28 @@ def ann_pq_rerank(emb: DataFrame) -> DataFrame:
     size). Compression error then only costs recall when a true
     neighbor falls outside the pool entirely.
     """
-    q = emb.select(
-        "vec_id", quantize_udf(F.col("embedding")).alias("qv")
-    ).localCheckpoint(eager=False)
-    pool = ann_pq_topk(emb, topk=RERANK_POOL).select("query_id", "vec_id")
+    return _l2_rerank(emb, ann_pq_topk(emb, topk=RERANK_POOL))
+
+
+def _l2_rerank(emb: DataFrame, pool: DataFrame) -> DataFrame:
+    """Exact integer-L2 top-IVF_TOPK of a (query_id, vec_id) candidate pool.
+
+    The second stage every compressed scan shares: join the pool to the
+    micro-unit vectors, broadcast the N_QUERIES query vectors, score with
+    :func:`_l2_udf` and rank (dist asc, vec_id). Output matches the
+    ann_*_topk family: (query_id, vec_id, dist, rnk).
+    """
+    q = _micro(emb).localCheckpoint(eager=False)
     qs = q.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
     )
-    pairs = (
-        pool.join(q, "vec_id")
+    scored = (
+        pool.select("query_id", "vec_id")
+        .join(q, "vec_id")
         .join(F.broadcast(qs), "query_id")
-    )
-    scored = pairs.select(
-        "query_id", "vec_id", _l2_udf(F.col("qv"), F.col("qq")).alias("dist")
+        .select(
+            "query_id", "vec_id", _l2_udf(F.col("qv"), F.col("qq")).alias("dist")
+        )
     )
     w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
     return (
@@ -266,17 +267,7 @@ def ann_pq_rerank(emb: DataFrame) -> DataFrame:
 
 def ann_pq_rerank_recall(emb: DataFrame) -> DataFrame:
     """Recall@5 of the two-stage (PQ pool + exact re-rank) search."""
-    truth = ann_l2_topk(emb).select("query_id", "vec_id")
-    approx = ann_pq_rerank(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
+    return _recall(ann_l2_topk(emb), ann_pq_rerank(emb))
 
 
 # -- DuckDB oracle (fused-subspace Lloyd, unrolled) ------------------------
@@ -372,19 +363,7 @@ FROM scored
 QUALIFY rnk <= {IVF_TOPK}
 """
 
-ANN_PQ_RECALL_SQL = f"""
-WITH brute AS (
-  SELECT query_id, vec_id FROM ({ANN_L2_TOPK_SQL})
-),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({ANN_PQ_TOPK_SQL})
-)
-SELECT b.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM brute b LEFT JOIN appr a ON b.query_id = a.query_id AND b.vec_id = a.vec_id
-GROUP BY b.query_id
-"""
+ANN_PQ_RECALL_SQL = _recall_sql(ANN_PQ_TOPK_SQL, ANN_L2_TOPK_SQL)
 
 QUERY_SQL = {
     "ann_pq_topk": ANN_PQ_TOPK_SQL,
@@ -395,21 +374,10 @@ QUERY_SQL = {
 
 RERANK_POOL_SQL_TOPK = RERANK_POOL
 
-ANN_PQ_RERANK_SQL = f"""
-{_pq_ctes()},
-adcscored AS (
-  SELECT dt.query_id, c.vec_id, CAST(SUM(dt.d) AS BIGINT) AS adist
-  FROM enc c JOIN dt ON c.s = dt.s AND c.code = dt.code
-  WHERE c.vec_id <> dt.query_id
-  GROUP BY dt.query_id, c.vec_id
-),
-pool AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS prn
-    FROM adcscored
-  ) WHERE prn <= {RERANK_POOL}
-),
+def _l2_rerank_sql(ctes: str) -> str:
+    """Oracle of :func:`_l2_rerank`: ``ctes`` define ``qemb`` and end with ``pool``."""
+    return f"""
+{ctes},
 rescored AS (
   SELECT p.query_id, p.vec_id,
          CAST({_dist_sql('e.qv', 'q.qv')} AS BIGINT) AS dist
@@ -423,19 +391,23 @@ FROM rescored
 QUALIFY rnk <= {IVF_TOPK}
 """
 
-ANN_PQ_RERANK_RECALL_SQL = f"""
-WITH brute AS (
-  SELECT query_id, vec_id FROM ({ANN_L2_TOPK_SQL})
+
+ANN_PQ_RERANK_SQL = _l2_rerank_sql(f"""{_pq_ctes()},
+adcscored AS (
+  SELECT dt.query_id, c.vec_id, CAST(SUM(dt.d) AS BIGINT) AS adist
+  FROM enc c JOIN dt ON c.s = dt.s AND c.code = dt.code
+  WHERE c.vec_id <> dt.query_id
+  GROUP BY dt.query_id, c.vec_id
 ),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({ANN_PQ_RERANK_SQL})
-)
-SELECT b.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM brute b LEFT JOIN appr a ON b.query_id = a.query_id AND b.vec_id = a.vec_id
-GROUP BY b.query_id
-"""
+pool AS (
+  SELECT query_id, vec_id FROM (
+    SELECT query_id, vec_id,
+           row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS prn
+    FROM adcscored
+  ) WHERE prn <= {RERANK_POOL}
+)""")
+
+ANN_PQ_RERANK_RECALL_SQL = _recall_sql(ANN_PQ_RERANK_SQL, ANN_L2_TOPK_SQL)
 
 QUERY_SQL.update(
     {
@@ -541,17 +513,7 @@ def ann_ivfpq_recall(emb: DataFrame) -> DataFrame:
     against ann_pq_recall (ADC alone) and ann_ivf_recall (cells alone)
     attributes the loss — the triage a production index tune starts with.
     """
-    truth = ann_l2_topk(emb).select("query_id", "vec_id")
-    approx = ann_ivfpq_topk(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
+    return _recall(ann_l2_topk(emb), ann_ivfpq_topk(emb))
 
 
 def _ivfpq_sql(nprobe: int = IVFPQ_NPROBE) -> str:
@@ -598,19 +560,7 @@ QUALIFY rnk <= {IVF_TOPK}
 
 ANN_IVFPQ_TOPK_SQL = _ivfpq_sql()
 
-ANN_IVFPQ_RECALL_SQL = f"""
-WITH truth_outer AS (
-  SELECT query_id, vec_id FROM ({ANN_L2_TOPK_SQL})
-),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({ANN_IVFPQ_TOPK_SQL})
-)
-SELECT t.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM truth_outer t LEFT JOIN appr a ON t.query_id = a.query_id AND t.vec_id = a.vec_id
-GROUP BY t.query_id
-"""
+ANN_IVFPQ_RECALL_SQL = _recall_sql(ANN_IVFPQ_TOPK_SQL, ANN_L2_TOPK_SQL)
 
 QUERY_SQL["ann_ivfpq_topk"] = ANN_IVFPQ_TOPK_SQL
 QUERY_SQL["ann_ivfpq_recall"] = ANN_IVFPQ_RECALL_SQL

@@ -33,16 +33,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ann import EMBED_DIM, IVF_TOPK, N_QUERIES
-from .kmeans import _dist_sql, _qv_sql, quantize_udf
-from .pq import ANN_L2_TOPK_SQL, _l2_udf, ann_l2_topk
+from .ann import EMBED_DIM, IVF_TOPK, N_QUERIES, _recall, _recall_sql
+from .kmeans import _qv_sql
+from .pq import ANN_L2_TOPK_SQL, _l2_rerank, _l2_rerank_sql, _micro, ann_l2_topk
 
 SQ_LEVELS = 255  # top affine code (0..255)
 BQ_POOL = 50  # BQ candidate pool size for the exact re-rank
-
-
-def _micro(emb: DataFrame) -> DataFrame:
-    return emb.select("vec_id", quantize_udf(F.col("embedding")).alias("qv"))
 
 
 def _dim_codes(q: DataFrame, code_expr: str) -> DataFrame:
@@ -131,17 +127,7 @@ def ann_sq8_topk(emb: DataFrame, topk: int = IVF_TOPK) -> DataFrame:
 
 def ann_sq8_recall(emb: DataFrame) -> DataFrame:
     """Recall@5 of SQ8 code-space search vs exact-L2 truth."""
-    truth = ann_l2_topk(emb).select("query_id", "vec_id")
-    approx = ann_sq8_topk(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
+    return _recall(ann_l2_topk(emb), ann_sq8_topk(emb))
 
 
 # BQ bit: x >= integer mid-range of the dimension. (mn + mx) div 2
@@ -204,17 +190,7 @@ def ann_bq_topk(emb: DataFrame, topk: int = IVF_TOPK) -> DataFrame:
 
 def ann_bq_recall(emb: DataFrame) -> DataFrame:
     """Recall@5 of raw binary-quantized search vs exact-L2 truth."""
-    truth = ann_l2_topk(emb).select("query_id", "vec_id")
-    approx = ann_bq_topk(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
+    return _recall(ann_l2_topk(emb), ann_bq_topk(emb))
 
 
 def ann_bq_rerank(emb: DataFrame, pool: int = BQ_POOL) -> DataFrame:
@@ -225,24 +201,7 @@ def ann_bq_rerank(emb: DataFrame, pool: int = BQ_POOL) -> DataFrame:
     pays the full-precision distance. Output matches the ann_*_topk
     family: (query_id, vec_id, dist, rnk).
     """
-    cand = ann_bq_topk(emb, topk=pool).select("query_id", "vec_id")
-    q = _micro(emb).localCheckpoint(eager=False)
-    qs = q.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
-    )
-    rer = (
-        cand.join(q, "vec_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id", "vec_id", _l2_udf(F.col("qv"), F.col("qq")).alias("dist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        rer.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= IVF_TOPK)
-        .select("query_id", "vec_id", "dist", "rnk")
-    )
+    return _l2_rerank(emb, ann_bq_topk(emb, topk=pool))
 
 
 def ann_bq_rerank_recall(emb: DataFrame) -> DataFrame:
@@ -253,17 +212,7 @@ def ann_bq_rerank_recall(emb: DataFrame) -> DataFrame:
     the residual miss is truth the sketch never admitted to the pool
     (the pool-size dial's remit).
     """
-    truth = ann_l2_topk(emb).select("query_id", "vec_id")
-    approx = ann_bq_rerank(emb).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long")
-    return (
-        truth.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(n_hits.alias("n_hits"))
-        .withColumn("recall", F.round(F.col("n_hits") / IVF_TOPK, 6))
-    )
+    return _recall(ann_l2_topk(emb), ann_bq_rerank(emb))
 
 
 # -- DuckDB oracles --------------------------------------------------------
@@ -305,19 +254,7 @@ FROM scored
 QUALIFY rnk <= {IVF_TOPK}
 """
 
-ANN_SQ8_RECALL_SQL = f"""
-WITH truth_outer AS (
-  SELECT query_id, vec_id FROM ({ANN_L2_TOPK_SQL})
-),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({ANN_SQ8_TOPK_SQL})
-)
-SELECT t.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM truth_outer t LEFT JOIN appr a ON t.query_id = a.query_id AND t.vec_id = a.vec_id
-GROUP BY t.query_id
-"""
+ANN_SQ8_RECALL_SQL = _recall_sql(ANN_SQ8_TOPK_SQL, ANN_L2_TOPK_SQL)
 
 
 _BQ_WORDS_CTES = f"""bits AS (
@@ -357,22 +294,9 @@ FROM scored
 QUALIFY rnk <= {IVF_TOPK}
 """
 
-ANN_BQ_RECALL_SQL = f"""
-WITH truth_outer AS (
-  SELECT query_id, vec_id FROM ({ANN_L2_TOPK_SQL})
-),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({ANN_BQ_TOPK_SQL})
-)
-SELECT t.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM truth_outer t LEFT JOIN appr a ON t.query_id = a.query_id AND t.vec_id = a.vec_id
-GROUP BY t.query_id
-"""
+ANN_BQ_RECALL_SQL = _recall_sql(ANN_BQ_TOPK_SQL, ANN_L2_TOPK_SQL)
 
-ANN_BQ_RERANK_SQL = f"""
-WITH {_pos_ctes()},
+ANN_BQ_RERANK_SQL = _l2_rerank_sql(f"""WITH {_pos_ctes()},
 {_BQ_WORDS_CTES},
 {_bq_scored_sql()},
 pool AS (
@@ -381,33 +305,9 @@ pool AS (
            row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS prnk
     FROM scored
   ) WHERE prnk <= {BQ_POOL}
-),
-rer AS (
-  SELECT p.query_id, p.vec_id,
-         CAST({_dist_sql('e.qv', 'q.qv')} AS BIGINT) AS dist
-  FROM pool p
-  JOIN qemb e ON e.vec_id = p.vec_id
-  JOIN qemb q ON q.vec_id = p.query_id
-)
-SELECT query_id, vec_id, dist,
-       row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk
-FROM rer
-QUALIFY rnk <= {IVF_TOPK}
-"""
+)""")
 
-ANN_BQ_RERANK_RECALL_SQL = f"""
-WITH truth_outer AS (
-  SELECT query_id, vec_id FROM ({ANN_L2_TOPK_SQL})
-),
-appr AS (
-  SELECT query_id, vec_id, 1 AS hit FROM ({ANN_BQ_RERANK_SQL})
-)
-SELECT t.query_id,
-       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hits,
-       ROUND(CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) / {IVF_TOPK}, 6) AS recall
-FROM truth_outer t LEFT JOIN appr a ON t.query_id = a.query_id AND t.vec_id = a.vec_id
-GROUP BY t.query_id
-"""
+ANN_BQ_RERANK_RECALL_SQL = _recall_sql(ANN_BQ_RERANK_SQL, ANN_L2_TOPK_SQL)
 
 
 QUERY_SQL = {

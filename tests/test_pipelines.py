@@ -2,16 +2,11 @@
 
 from __future__ import annotations
 
+from conftest import last_job_id
 from maap_data_pipelines_spark.pipelines import (
     run_curation_pipeline,
     run_stac_pipeline,
 )
-
-
-def _last_job_id(spark) -> int:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
 # Spark jobs one warm run may start at the test sf (local[4], 4 shuffle
@@ -34,9 +29,9 @@ def test_stac_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert m["n_transfers"] > 0
     assert m["n_copied"] == m["n_transfers"]  # dry-run copier: all land
     # idempotent: rerun overwrites to the identical state, in budget
-    before = _last_job_id(spark)
+    before = last_job_id(spark)
     m2 = run_stac_pipeline(spark, sf_dir, out)
-    jobs = _last_job_id(spark) - before
+    jobs = last_job_id(spark) - before
     assert m2 == m
     assert jobs <= STAC_JOB_BUDGET, jobs
     # every count the writes observed is what landed on disk
@@ -61,9 +56,9 @@ def test_curation_pipeline_end_to_end(spark, sf_dir, tmp_path):
     }
     assert sum(hist.values()) == m["n_in"]
     assert hist.get("ok", 0) == m["n_kept"]
-    before = _last_job_id(spark)
+    before = last_job_id(spark)
     m2 = run_curation_pipeline(spark, sf_dir, out)
-    jobs = _last_job_id(spark) - before
+    jobs = last_job_id(spark) - before
     assert m2 == m
     assert jobs <= CURATION_JOB_BUDGET, jobs
     assert m["n_kept"] == spark.read.parquet(out + "/corpus").count()

@@ -11,6 +11,7 @@ import json
 import re
 from pathlib import Path
 
+from conftest import last_job_id
 from maap_data_pipelines_spark import registry
 
 _ROOT = Path(__file__).resolve().parent.parent
@@ -561,28 +562,26 @@ def test_platt_plan_runs_on_checkpointed_deciles(spark, sf_dir):
 # job-id delta around fn(spark, sf), as tests/test_pipelines.py counts).
 # Table reads take their schema and bare-scan gate counts from the
 # parquet footers, so a relational or event plan builds with no job; the
-# curation and dedup plans keep their eager checkpoints and loops.
+# curation and dedup plans keep their eager checkpoints and loops. The
+# two ANN recall monitors train their quantizer at build time (the PQ
+# codebooks, the k-means centroids), one collect per round.
 BUILD_JOB_BUDGETS = {
     "q3_shipping_priority": 0,
     "events_sessionize": 0,
     "curation_yield_report": 4,
     "dedup_token_savings": 20,
+    "ann_pq_recall": 6,
+    "ann_ivf_kmeans_recall": 5,
 }
 
 
 def test_build_job_budgets(spark, sf_dir):
-    sc = spark.sparkContext
-
-    def last_job_id():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
-
     qs = registry.queries()
     over = {}
     for key, budget in BUILD_JOB_BUDGETS.items():
-        before = last_job_id()
+        before = last_job_id(spark)
         qs[key](spark, sf_dir)
-        jobs = last_job_id() - before
+        jobs = last_job_id(spark) - before
         if jobs > budget:
             over[key] = (jobs, budget)
     assert not over, over

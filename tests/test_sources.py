@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+from conftest import last_job_id
+
 
 def test_read_csv_inventory(spark, tmp_path):
     from maap_data_pipelines_spark.sources.formats import read_csv_inventory
@@ -342,16 +344,10 @@ def test_fanout_base_count_invariant(spark, sf_dir):
     fanned = fan_out(docs)
     n = docs.count()
     assert corpus_rows(fanned) == n
-    sc = spark.sparkContext
-
-    def last_job_id():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
-
-    before = last_job_id()
+    before = last_job_id(spark)
     # the fanned frame and the scan it wraps share the one stored count
     assert corpus_rows(fanned) == corpus_rows(docs) == n
-    assert last_job_id() == before
+    assert last_job_id(spark) == before
     # a transformation silently drops the attribute — value still right
     projected = fanned.select("doc_id")
     assert not hasattr(projected, "_fanout_base")
@@ -359,12 +355,6 @@ def test_fanout_base_count_invariant(spark, sf_dir):
     # no-op path (already enough partitions): no attribute, same count
     wide = fanned.repartition(64)
     assert corpus_rows(fan_out(wide)) == docs.count()
-
-
-def _last_job_id(spark) -> int:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
 def _spark_written_table(spark, root) -> str:
@@ -395,10 +385,10 @@ def _assert_footer_path_matches_inference(spark, sf_dir, name):
     from maap_data_pipelines_spark.functions.joins import corpus_rows
     from maap_data_pipelines_spark.sources.catalog import read_table
 
-    before = _last_job_id(spark)
+    before = last_job_id(spark)
     df = read_table(spark, sf_dir, name)
     n = corpus_rows(df)
-    assert _last_job_id(spark) == before, f"{name}: footer path started a job"
+    assert last_job_id(spark) == before, f"{name}: footer path started a job"
     inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     assert df.schema == inferred.schema, name
     assert df.toArrow().equals(inferred.toArrow()), name

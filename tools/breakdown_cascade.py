@@ -20,6 +20,7 @@ from maap_data_pipelines_spark.operators import curation, dedup, text  # noqa: E
 from maap_data_pipelines_spark.plans import llm  # noqa: E402
 from maap_data_pipelines_spark.session import get_spark  # noqa: E402
 from maap_data_pipelines_spark.sources.catalog import fan_out, read_table  # noqa: E402
+from profile_query import _last_job_id  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 
@@ -61,14 +62,12 @@ def main() -> int:
         walls, jobs = [], []
         for _ in range(reps):
             spark.catalog.clearCache()
-            ids0 = sc.statusTracker().getJobIdsForGroup(None)
-            n0 = max(ids0) if ids0 else -1
+            n0 = _last_job_id(sc)
             t0 = time.time()
             sc.setJobDescription(f"breakdown:{name}")
             build().write.format("noop").mode("overwrite").save()
             walls.append(time.time() - t0)
-            ids1 = sc.statusTracker().getJobIdsForGroup(None)
-            jobs.append((max(ids1) if ids1 else -1) - n0)
+            jobs.append(_last_job_id(sc) - n0)
         walls.sort()
         med = walls[len(walls) // 2]
         print(
