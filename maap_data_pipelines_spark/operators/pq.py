@@ -152,21 +152,7 @@ def ann_pq_topk(emb: DataFrame, topk: int = IVF_TOPK) -> DataFrame:
     excluded.
     """
     q, cb, enc = _encoded(emb)
-    spark = emb.sparkSession
-    queries = sorted(
-        (r.vec_id, list(r.qv))
-        for r in q.filter(F.col("vec_id") < N_QUERIES).collect()
-    )
-    dt_rows = []
-    for qid, qv in queries:
-        for s in range(PQ_S):
-            sub = qv[s * PQ_DIM : (s + 1) * PQ_DIM]
-            for code, cv in cb[s]:
-                d = sum((a - b) * (a - b) for a, b in zip(sub, cv))
-                dt_rows.append((qid, s, code, d))
-    dt = spark.createDataFrame(
-        dt_rows, "query_id long, s long, code long, d long"
-    )
+    dt = _adc_table(emb, q, cb)
     cand = enc.select(
         "vec_id",
         F.explode(F.sequence(F.lit(0), F.lit(PQ_S - 1))).alias("s"),

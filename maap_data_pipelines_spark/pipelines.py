@@ -770,9 +770,11 @@ def run_experiment_report(spark: SparkSession, sf_dir: str, out_dir: str) -> dic
     (post-stratification — the heterogeneity read: a lift concentrated
     in one revenue stratum and a uniform lift print the same pooled
     number), (5) the post-hoc power table, (6) the forward-looking MDE
-    curve. Every section is an already-oracled registered operator; the
-    report is their composition, persisted as parquet per section — the
-    run_embedding_health_report pattern applied to experimentation.
+    curve, (7) the always-valid sequential (mSPRT) readout a peeked
+    dashboard may show. Every section is an already-oracled registered
+    operator; the report is their composition, persisted as parquet per
+    section — the run_embedding_health_report pattern applied to
+    experimentation.
     The combined estimate is the exact integer fold the
     events_cuped_stratified docstring leaves to consumers:
     sum((n_a+n_b) * diff_cuped_milli) div sum(n_a+n_b) over the strata

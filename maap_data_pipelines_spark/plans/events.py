@@ -17,14 +17,14 @@ returns int64.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.catalog import read_table
 
 SESSION_GAP_MIN = 30
-_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
+SESSION_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 _HOUR_US = 3600 * 1_000_000
 
 
@@ -90,16 +90,9 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; this is the standard distributed formulation (no driver loops).
     The subsequent groupBys reuse the user_id partitioning (no re-shuffle).
     """
-    ev = read_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts_us") - F.lag(F.col("ts_us"), 1).over(w) > _GAP_US, 1
-        ).otherwise(0),
-    ).withColumn("session_seq", F.sum("new_session").over(w) + 1)
     return (
-        flagged.groupBy("user_id", "session_seq")
+        _session_flags(read_events(spark, sf_dir))
+        .groupBy("user_id", "session_seq")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts_us").alias("session_start_us"),
@@ -116,11 +109,24 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SESSIONIZE_SQL = f"""
-WITH flagged AS (
+def _session_flags(ev: DataFrame) -> DataFrame:
+    """``ev`` with its 1-based per-user ``session_seq``: a new session
+    starts after more than SESSION_GAP_US of inactivity (lag + running
+    sum over one window partitioned by user_id)."""
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    return ev.withColumn(
+        "new_session",
+        F.when(
+            F.col("ts_us") - F.lag(F.col("ts_us"), 1).over(w) > SESSION_GAP_US, 1
+        ).otherwise(0),
+    ).withColumn("session_seq", F.sum("new_session").over(w) + 1)
+
+
+# The oracles' (user_id, ts_us, session_seq) ``numbered`` CTE over events.
+_SESSION_NUMBERED_SQL = f"""flagged AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
          CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                   > {_GAP_US}
+                   > {SESSION_GAP_US}
               THEN 1 ELSE 0 END AS new_session
   FROM events
 ), numbered AS (
@@ -128,7 +134,10 @@ WITH flagged AS (
          SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
                                 ROWS UNBOUNDED PRECEDING) + 1 AS session_seq
   FROM flagged
-), sessions AS (
+)"""
+
+SESSIONIZE_SQL = f"""
+WITH {_SESSION_NUMBERED_SQL}, sessions AS (
   SELECT user_id, session_seq, COUNT(*) AS n_events,
          MIN(ts_us) AS session_start_us, MAX(ts_us) AS session_end_us
   FROM numbered GROUP BY user_id, session_seq
@@ -717,14 +726,7 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interval-join-free formulation; a range join against an hour
     spine would shuffle the spine times sessions instead.
     """
-    ev = read_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts_us") - F.lag(F.col("ts_us"), 1).over(w) > _GAP_US, 1
-        ).otherwise(0),
-    ).withColumn("session_seq", F.sum("new_session").over(w) + 1)
+    flagged = _session_flags(read_events(spark, sf_dir))
     sessions = flagged.groupBy("user_id", "session_seq").agg(
         F.min("ts_us").alias("s_us"), F.max("ts_us").alias("e_us")
     )
@@ -746,23 +748,10 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CONCURRENCY_SQL = f"""
-WITH flagged AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                   > {_GAP_US}
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-sess AS (
-  SELECT user_id,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) + 1
-           AS session_seq,
-         ts_us
-  FROM flagged
-),
+WITH {_SESSION_NUMBERED_SQL},
 spans AS (
   SELECT user_id, session_seq, MIN(ts_us) AS s_us, MAX(ts_us) AS e_us
-  FROM sess GROUP BY 1, 2
+  FROM numbered GROUP BY 1, 2
 )
 SELECT hour_us,
        COUNT(*) AS n_active_sessions,
@@ -1808,14 +1797,7 @@ CAMPAIGNS = (
 
 def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session (user_id, session_seq, start_us, end_us) intervals."""
-    ev = read_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts_us") - F.lag(F.col("ts_us"), 1).over(w) > _GAP_US, 1
-        ).otherwise(0),
-    ).withColumn("session_seq", F.sum("new_session").over(w) + 1)
+    flagged = _session_flags(read_events(spark, sf_dir))
     return flagged.groupBy("user_id", "session_seq").agg(
         F.min("ts_us").alias("s_start_us"), F.max("ts_us").alias("s_end_us")
     )
@@ -1889,18 +1871,7 @@ _CAMPAIGN_VALUES = ",\n           ".join(
 )
 
 SESSIONS_CAMPAIGN_OVERLAP_SQL = f"""
-WITH flagged AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                   > {_GAP_US}
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), numbered AS (
-  SELECT user_id, ts_us,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                ROWS UNBOUNDED PRECEDING) + 1 AS session_seq
-  FROM flagged
-), sessions AS (
+WITH {_SESSION_NUMBERED_SQL}, sessions AS (
   SELECT user_id, session_seq,
          MIN(ts_us) AS s_start_us, MAX(ts_us) AS s_end_us
   FROM numbered GROUP BY user_id, session_seq
@@ -1993,6 +1964,63 @@ FROM acov CROSS JOIN a0
 
 AB_CONV_CENTS = 15_000  # "high-value purchase": value ≥ $150
 
+# The engine-portable md5 arm gate, one text per engine: a user's arm is
+# the first 15 hex digits of md5(user_id) mod 2, so re-runs, reshards and
+# the oracle agree on every user's arm with no RNG.
+_ARM_SQL = "('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2"
+
+
+def _arm() -> Column:
+    return F.expr(
+        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
+        " AS BIGINT) % 2"
+    ).alias("arm")
+
+
+def _arm_sums(
+    armed: DataFrame,
+    sums: dict[str, Column] | None = None,
+    by: tuple[str, ...] = (),
+    extra: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Per-arm conditional sums over a frame carrying ``arm``: ``n_a`` /
+    ``n_b`` plus ``<name>_a`` / ``<name>_b`` for each ``sums`` entry,
+    then the ``extra`` aggregates, grouped by ``by`` (one row when
+    empty). Every arm-split readout is one map-side-combined agg of
+    this shape."""
+    aggs = []
+    for name, v in {"n": F.lit(1), **(sums or {})}.items():
+        for arm, side in ((0, "a"), (1, "b")):
+            aggs.append(
+                F.sum(F.when(F.col("arm") == arm, v).otherwise(0)).alias(
+                    f"{name}_{side}"
+                )
+            )
+    return armed.groupBy(*by).agg(*aggs, *extra)
+
+
+def _arm_sums_sql(sums: dict[str, str], extra: str = "", key: str = "") -> str:
+    """The oracle's ``armed`` and ``s`` CTEs over ``per_user``: BIGINT
+    ``n_a`` / ``n_b`` and ``<name>_a`` / ``<name>_b`` sums per arm, then
+    the ``extra`` select items, grouped by the ``key`` item when given."""
+    items = [key] if key else []
+    for name, v in {"n": "1", **sums}.items():
+        for arm, side in ((0, "a"), (1, "b")):
+            items.append(
+                f"CAST(SUM(CASE WHEN arm = {arm} THEN {v} ELSE 0 END) AS BIGINT)"
+                f" AS {name}_{side}"
+            )
+    items += [extra] if extra else []
+    cols = ",\n         ".join(items)
+    group = " GROUP BY 1" if key else ""
+    return f"""armed AS (
+  SELECT *, {_ARM_SQL} AS arm FROM per_user
+),
+s AS (
+  SELECT {cols}
+  FROM armed{group}
+)"""
+
 
 def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion A/B test over high-value user conversion.
@@ -2036,20 +2064,24 @@ def ab_user_conversions(ev: DataFrame) -> DataFrame:
     )
 
 
+_CONV_USERS_SQL = f"""per_user AS (
+  SELECT user_id,
+         CAST(MAX(CASE WHEN event_type = 'purchase'
+                        AND CAST(ROUND(value * 100) AS BIGINT) >= {AB_CONV_CENTS}
+                       THEN 1 ELSE 0 END) AS BIGINT) AS conv
+  FROM events GROUP BY user_id
+)"""
+
+
+def _conv_arm_sums(per_user: DataFrame) -> DataFrame:
+    """The one-row (n_a, n_b, conv_a, conv_b) frame of a (user_id, conv)
+    frame: the z, mSPRT and power readouts' sufficient statistics."""
+    return _arm_sums(per_user.select(_arm(), "conv"), {"conv": F.col("conv")})
+
+
 def ab_test_from_users(per_user: DataFrame) -> DataFrame:
     """One-row z readout from a (user_id, conv) frame (batch or state)."""
-    arm = F.expr(
-        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT) % 2"
-    )
-    armed = per_user.select(arm.alias("arm"), "conv")
-    s = armed.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("conv")).otherwise(0)).alias("conv_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("conv")).otherwise(0)).alias("conv_b"),
-    )
-    return s.select(
+    return _conv_arm_sums(per_user).select(
         "n_a",
         "n_b",
         "conv_a",
@@ -2126,17 +2158,7 @@ def _ab_seq_exprs() -> tuple[str, str]:
 def ab_sequential_from_users(per_user: DataFrame) -> DataFrame:
     """One-row mSPRT readout from a (user_id, conv) frame (batch or the
     ST6 streaming state — the shared-kernel property)."""
-    arm = F.expr(
-        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT) % 2"
-    )
-    armed = per_user.select(arm.alias("arm"), "conv")
-    s = armed.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("conv")).otherwise(0)).alias("conv_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("conv")).otherwise(0)).alias("conv_b"),
-    )
+    s = _conv_arm_sums(per_user)
     lnl, p = _ab_seq_exprs()
     return s.select(
         "n_a",
@@ -2160,24 +2182,8 @@ def ab_sequential_from_users(per_user: DataFrame) -> DataFrame:
 def _ab_sequential_sql() -> str:
     lnl, p = _ab_seq_exprs()
     return f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(MAX(CASE WHEN event_type = 'purchase'
-                        AND CAST(ROUND(value * 100) AS BIGINT) >= {AB_CONV_CENTS}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS conv
-  FROM events GROUP BY user_id
-),
-armed AS (
-  SELECT ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm, conv
-  FROM per_user
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS conv_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS conv_b
-  FROM armed
-)
+WITH {_CONV_USERS_SQL},
+{_arm_sums_sql({"conv": "conv"})}
 SELECT n_a, n_b, conv_a, conv_b,
        (conv_b * 1000000) // n_b - (conv_a * 1000000) // n_a AS delta_micro,
        CAST(FLOOR({lnl} * 1000) AS BIGINT) AS ln_lambda_milli,
@@ -2192,24 +2198,8 @@ AB_SEQUENTIAL_SQL = _ab_sequential_sql()
 
 
 AB_TEST_SQL = f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(MAX(CASE WHEN event_type = 'purchase'
-                        AND CAST(ROUND(value * 100) AS BIGINT) >= {AB_CONV_CENTS}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS conv
-  FROM events GROUP BY user_id
-),
-armed AS (
-  SELECT ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm, conv
-  FROM per_user
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS conv_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS conv_b
-  FROM armed
-)
+WITH {_CONV_USERS_SQL},
+{_arm_sums_sql({"conv": "conv"})}
 SELECT n_a, n_b, conv_a, conv_b,
        (conv_a * 1000000) // n_a AS rate_a_micro,
        (conv_b * 1000000) // n_b AS rate_b_micro,
@@ -2371,18 +2361,7 @@ def events_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer per-arm rate difference, no cross product (n_a·n_b would
     overflow at ~10⁹ users/arm).
     """
-    ev = read_events(spark, sf_dir)
-    per_user = ab_user_conversions(ev)
-    arm = F.expr(
-        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT) % 2"
-    )
-    s = per_user.select(arm.alias("arm"), "conv").agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("conv")).otherwise(0)).alias("conv_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("conv")).otherwise(0)).alias("conv_b"),
-    )
+    s = _conv_arm_sums(ab_user_conversions(read_events(spark, sf_dir)))
     formula = (
         f"CAST(CEIL(POWER({AB_POWER_Z_ALPHA} * SQRT(2.0 * pbar * (1.0 - pbar))"
         f" + {AB_POWER_Z_BETA} * SQRT(p1 * (1.0 - p1) + p2 * (1.0 - p2)), 2)"
@@ -2406,24 +2385,8 @@ def events_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 AB_POWER_SQL = f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(MAX(CASE WHEN event_type = 'purchase'
-                        AND CAST(ROUND(value * 100) AS BIGINT) >= {AB_CONV_CENTS}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS conv
-  FROM events GROUP BY user_id
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS conv_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS conv_b
-  FROM (
-    SELECT ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm,
-           conv
-    FROM per_user
-  )
-),
+WITH {_CONV_USERS_SQL},
+{_arm_sums_sql({"conv": "conv"})},
 r AS (
   SELECT n_a, n_b, conv_a, conv_b,
          CAST(conv_a AS DOUBLE) / n_a AS p1,
@@ -2515,13 +2478,7 @@ def events_mde_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MDE_CURVE_SQL = f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(MAX(CASE WHEN event_type = 'purchase'
-                        AND CAST(ROUND(value * 100) AS BIGINT) >= {AB_CONV_CENTS}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS conv
-  FROM events GROUP BY user_id
-),
+WITH {_CONV_USERS_SQL},
 s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
          CAST(SUM(conv) AS BIGINT) AS n_conv
@@ -2608,54 +2565,89 @@ def cuped_user_stats(ev: DataFrame) -> DataFrame:
     )
 
 
+
+
+_CENTS_USERS_SQL = f"""per_user AS (
+  SELECT user_id,
+         CAST(SUM(CASE WHEN event_type = 'purchase'
+                        AND epoch_us(ts) < {CUPED_SPLIT_US}
+                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
+              AS BIGINT) AS pre_cents,
+         CAST(SUM(CASE WHEN event_type = 'purchase'
+                        AND epoch_us(ts) >= {CUPED_SPLIT_US}
+                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
+              AS BIGINT) AS post_cents
+  FROM events GROUP BY user_id
+)"""
+
+
+def _cuped_stats(per_user: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """CUPED's sufficient statistics of a (user_id, pre_cents, post_cents)
+    frame, grouped by the ``by`` columns: per-arm n / pre / post sums and
+    the pooled moments n, Sx, Sy, Sxx, Syy, Sxy (X = pre, Y = post)."""
+    armed = per_user.select(*by, _arm(), "pre_cents", "post_cents")
+    return _arm_sums(
+        armed,
+        {"pre": F.col("pre_cents"), "post": F.col("post_cents")},
+        by,
+        (
+            F.count(F.lit(1)).alias("n"),
+            F.sum("pre_cents").alias("sx"),
+            F.sum("post_cents").alias("sy"),
+            F.sum(F.expr("pre_cents * pre_cents")).alias("sxx"),
+            F.sum(F.expr("post_cents * post_cents")).alias("syy"),
+            F.sum(F.expr("pre_cents * post_cents")).alias("sxy"),
+        ),
+    )
+
+
+def _cuped_stats_sql(key: str = "") -> str:
+    return _arm_sums_sql(
+        {"pre": "pre_cents", "post": "post_cents"},
+        "CAST(COUNT(*) AS BIGINT) AS n,"
+        " CAST(SUM(pre_cents) AS BIGINT) AS sx,"
+        " CAST(SUM(post_cents) AS BIGINT) AS sy,"
+        " CAST(SUM(pre_cents * pre_cents) AS BIGINT) AS sxx,"
+        " CAST(SUM(post_cents * post_cents) AS BIGINT) AS syy,"
+        " CAST(SUM(pre_cents * post_cents) AS BIGINT) AS sxy",
+        key,
+    )
+
+
+def _cuped_exprs() -> tuple[str, str, str]:
+    """theta = cov(X, Y) / var(X), the CUPED-adjusted lift and rho^2 over
+    the :func:`_cuped_stats` columns, as one double expression tree both
+    engines evaluate. NULLIF guards turn an empty arm or a zero variance
+    into NULL rather than an error."""
+    cov = (
+        "(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
+        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+    )
+    var_x = (
+        "CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
+        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)"
+    )
+    var_y = (
+        "CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)"
+        " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)"
+    )
+    theta = f"({cov} / NULLIF({var_x}, 0.0))"
+    diff_cuped = (
+        "((CAST(post_b AS DOUBLE) / NULLIF(n_b, 0)"
+        " - CAST(post_a AS DOUBLE) / NULLIF(n_a, 0))"
+        f" - {theta} * (CAST(pre_b AS DOUBLE) / NULLIF(n_b, 0)"
+        " - CAST(pre_a AS DOUBLE) / NULLIF(n_a, 0)))"
+    )
+    rho2 = f"({cov} * {cov} / NULLIF(({var_x}) * ({var_y}), 0.0))"
+    return theta, diff_cuped, rho2
+
+
 def cuped_readout(per_user: DataFrame) -> DataFrame:
     """One-row CUPED readout from a (user_id, pre_cents, post_cents)
     frame (batch or streaming state) — the shared kernel: stream==batch
     is equality of inputs, not a re-implementation claim."""
-    armed = per_user.select(
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT) % 2"
-        ).alias("arm"),
-        "pre_cents",
-        "post_cents",
-    )
-    s = armed.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("pre_cents")).otherwise(0)).alias("pre_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("pre_cents")).otherwise(0)).alias("pre_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("post_cents")).otherwise(0)).alias("post_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("post_cents")).otherwise(0)).alias("post_b"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum("pre_cents").alias("sx"),
-        F.sum("post_cents").alias("sy"),
-        F.sum(F.expr("pre_cents * pre_cents")).alias("sxx"),
-        F.sum(F.expr("post_cents * post_cents")).alias("syy"),
-        F.sum(F.expr("pre_cents * post_cents")).alias("sxy"),
-    )
-    theta = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))"
-    )
-    diff_cuped = (
-        "((CAST(post_b AS DOUBLE) / n_b - CAST(post_a AS DOUBLE) / n_a)"
-        f" - {theta} * (CAST(pre_b AS DOUBLE) / n_b"
-        " - CAST(pre_a AS DOUBLE) / n_a))"
-    )
-    rho2 = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)"
-        " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0.0))"
-    )
-    return s.select(
+    theta, diff_cuped, rho2 = _cuped_exprs()
+    return _cuped_stats(per_user).select(
         "n_a",
         "n_b",
         F.expr("(pre_a * 1000) div n_a").alias("pre_mean_a_milli"),
@@ -2674,61 +2666,10 @@ def cuped_readout(per_user: DataFrame) -> DataFrame:
 
 
 def _cuped_sql() -> str:
-    theta = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))"
-    )
-    diff_cuped = (
-        "((CAST(post_b AS DOUBLE) / n_b - CAST(post_a AS DOUBLE) / n_a)"
-        f" - {theta} * (CAST(pre_b AS DOUBLE) / n_b"
-        " - CAST(pre_a AS DOUBLE) / n_a))"
-    )
-    rho2 = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)"
-        " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0.0))"
-    )
+    theta, diff_cuped, rho2 = _cuped_exprs()
     return f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                        AND epoch_us(ts) < {CUPED_SPLIT_US}
-                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS pre_cents,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                        AND epoch_us(ts) >= {CUPED_SPLIT_US}
-                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS post_cents
-  FROM events GROUP BY user_id
-),
-armed AS (
-  SELECT ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2
-           AS arm,
-         pre_cents, post_cents
-  FROM per_user
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN pre_cents ELSE 0 END) AS BIGINT) AS pre_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN pre_cents ELSE 0 END) AS BIGINT) AS pre_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN post_cents ELSE 0 END) AS BIGINT) AS post_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN post_cents ELSE 0 END) AS BIGINT) AS post_b,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(pre_cents) AS BIGINT) AS sx,
-         CAST(SUM(post_cents) AS BIGINT) AS sy,
-         CAST(SUM(pre_cents * pre_cents) AS BIGINT) AS sxx,
-         CAST(SUM(post_cents * post_cents) AS BIGINT) AS syy,
-         CAST(SUM(pre_cents * post_cents) AS BIGINT) AS sxy
-  FROM armed
-)
+WITH {_CENTS_USERS_SQL},
+{_cuped_stats_sql()}
 SELECT n_a, n_b,
        (pre_a * 1000) // n_a AS pre_mean_a_milli,
        (pre_b * 1000) // n_b AS pre_mean_b_milli,
@@ -2786,53 +2727,13 @@ def cuped_stratified_readout(per_user: DataFrame) -> DataFrame:
     """Per-stratum CUPED readout from a (user_id, pre_cents, post_cents)
     frame (batch or the ST19 streaming state — additively mergeable, so
     the stream twin reaches the identical frame)."""
-    armed = per_user.select(
-        F.expr(_CUPED_STRATUM.format(vtype="STRING")).alias("stratum"),
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT) % 2"
-        ).alias("arm"),
-        "pre_cents",
-        "post_cents",
+    strata = per_user.withColumn(
+        "stratum", F.expr(_CUPED_STRATUM.format(vtype="STRING"))
     )
-    s = armed.groupBy("stratum").agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("pre_cents")).otherwise(0)).alias("pre_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("pre_cents")).otherwise(0)).alias("pre_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("post_cents")).otherwise(0)).alias("post_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("post_cents")).otherwise(0)).alias("post_b"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum("pre_cents").alias("sx"),
-        F.sum("post_cents").alias("sy"),
-        F.sum(F.expr("pre_cents * pre_cents")).alias("sxx"),
-        F.sum(F.expr("post_cents * post_cents")).alias("syy"),
-        F.sum(F.expr("pre_cents * post_cents")).alias("sxy"),
-    )
-    theta = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))"
-    )
-    diff_cuped = (
-        "((CAST(post_b AS DOUBLE) / NULLIF(n_b, 0)"
-        " - CAST(post_a AS DOUBLE) / NULLIF(n_a, 0))"
-        f" - {theta} * (CAST(pre_b AS DOUBLE) / NULLIF(n_b, 0)"
-        " - CAST(pre_a AS DOUBLE) / NULLIF(n_a, 0)))"
-    )
-    rho2 = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)"
-        " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0.0))"
-    )
+    theta, diff_cuped, rho2 = _cuped_exprs()
     return (
-        s.select(
+        _cuped_stats(strata, ("stratum",))
+        .select(
             "stratum",
             "n_a",
             "n_b",
@@ -2861,65 +2762,11 @@ def cuped_stratified_readout(per_user: DataFrame) -> DataFrame:
 
 
 def _cuped_stratified_sql() -> str:
-    theta = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0))"
-    )
-    diff_cuped = (
-        "((CAST(post_b AS DOUBLE) / NULLIF(n_b, 0)"
-        " - CAST(post_a AS DOUBLE) / NULLIF(n_a, 0))"
-        f" - {theta} * (CAST(pre_b AS DOUBLE) / NULLIF(n_b, 0)"
-        " - CAST(pre_a AS DOUBLE) / NULLIF(n_a, 0)))"
-    )
-    rho2 = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / NULLIF((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)"
-        " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0.0))"
-    )
+    theta, diff_cuped, rho2 = _cuped_exprs()
     stratum = _CUPED_STRATUM.format(vtype="VARCHAR")
     return f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                        AND epoch_us(ts) < {CUPED_SPLIT_US}
-                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS pre_cents,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                        AND epoch_us(ts) >= {CUPED_SPLIT_US}
-                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS post_cents
-  FROM events GROUP BY user_id
-),
-armed AS (
-  SELECT {stratum} AS stratum,
-         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2
-           AS arm,
-         pre_cents, post_cents
-  FROM per_user
-),
-s AS (
-  SELECT stratum,
-         CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN pre_cents ELSE 0 END) AS BIGINT) AS pre_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN pre_cents ELSE 0 END) AS BIGINT) AS pre_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN post_cents ELSE 0 END) AS BIGINT) AS post_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN post_cents ELSE 0 END) AS BIGINT) AS post_b,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(pre_cents) AS BIGINT) AS sx,
-         CAST(SUM(post_cents) AS BIGINT) AS sy,
-         CAST(SUM(pre_cents * pre_cents) AS BIGINT) AS sxx,
-         CAST(SUM(post_cents * post_cents) AS BIGINT) AS syy,
-         CAST(SUM(pre_cents * post_cents) AS BIGINT) AS sxy
-  FROM armed GROUP BY stratum
-)
+WITH {_CENTS_USERS_SQL},
+{_cuped_stats_sql(f"{stratum} AS stratum")}
 SELECT stratum, n_a, n_b,
        (post_a * 1000) // NULLIF(n_a, 0) AS post_mean_a_milli,
        (post_b * 1000) // NULLIF(n_b, 0) AS post_mean_b_milli,
@@ -3616,17 +3463,8 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     srm_suspected flags chi² > 3.841 (α=0.05, 1 df). One per-user agg +
     one global conditional agg; single row at any scale.
     """
-    ev = read_events(spark, sf_dir)
-    arm = F.expr(
-        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT) % 2"
-    )
-    users = ev.select("user_id").distinct().select(arm.alias("arm"))
-    s = users.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-    )
-    return s.select(
+    users = read_events(spark, sf_dir).select("user_id").distinct().select(_arm())
+    return _arm_sums(users).select(
         "n_a",
         "n_b",
         F.expr(
@@ -3639,19 +3477,11 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AB_SRM_SQL = """
-WITH users AS (
-  SELECT ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm
-  FROM (SELECT DISTINCT user_id FROM events)
-),
-s AS (
-  SELECT SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-         SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b
-  FROM users
-)
-SELECT CAST(n_a AS BIGINT) AS n_a,
-       CAST(n_b AS BIGINT) AS n_b,
-       CAST((n_a - n_b) * (n_a - n_b) * 1000 // (n_a + n_b) AS BIGINT) AS chi2_milli,
+AB_SRM_SQL = f"""
+WITH per_user AS (SELECT DISTINCT user_id FROM events),
+{_arm_sums_sql({})}
+SELECT n_a, n_b,
+       (n_a - n_b) * (n_a - n_b) * 1000 // (n_a + n_b) AS chi2_milli,
        (n_a - n_b) * (n_a - n_b) * 1000 // (n_a + n_b) > 3841 AS srm_suspected
 FROM s
 """
@@ -3710,25 +3540,19 @@ def did_readout(per_user: DataFrame) -> DataFrame:
     """One-row DiD readout from a (user_id, pre_cents, post_cents)
     frame (batch or the ST19 streaming state — the shared kernel)."""
     armed = per_user.select(
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT) % 2"
-        ).alias("arm"),
+        _arm(),
         (F.col("post_cents") - F.col("pre_cents")).alias("d"),
         "pre_cents",
         "post_cents",
     )
-    s = armed.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("pre_cents")).otherwise(0)).alias("pre_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("pre_cents")).otherwise(0)).alias("pre_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("post_cents")).otherwise(0)).alias("post_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("post_cents")).otherwise(0)).alias("post_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("d")).otherwise(0)).alias("sd_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("d")).otherwise(0)).alias("sd_b"),
-        F.sum(F.when(F.col("arm") == 0, F.col("d") * F.col("d")).otherwise(0)).alias("sdd_a"),
-        F.sum(F.when(F.col("arm") == 1, F.col("d") * F.col("d")).otherwise(0)).alias("sdd_b"),
+    s = _arm_sums(
+        armed,
+        {
+            "pre": F.col("pre_cents"),
+            "post": F.col("post_cents"),
+            "sd": F.col("d"),
+            "sdd": F.col("d") * F.col("d"),
+        },
     )
     se, z = _did_exprs()
     return s.select(
@@ -3748,38 +3572,11 @@ def did_readout(per_user: DataFrame) -> DataFrame:
 
 def _did_sql() -> str:
     se, z = _did_exprs()
+    d = "(post_cents - pre_cents)"
+    sums = {"pre": "pre_cents", "post": "post_cents", "sd": d, "sdd": f"{d} * {d}"}
     return f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                        AND epoch_us(ts) < {CUPED_SPLIT_US}
-                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS pre_cents,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                        AND epoch_us(ts) >= {CUPED_SPLIT_US}
-                       THEN CAST(ROUND(value * 100) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS post_cents
-  FROM events GROUP BY user_id
-),
-armed AS (
-  SELECT ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2
-           AS arm,
-         post_cents - pre_cents AS d, pre_cents, post_cents
-  FROM per_user
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN pre_cents ELSE 0 END) AS BIGINT) AS pre_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN pre_cents ELSE 0 END) AS BIGINT) AS pre_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN post_cents ELSE 0 END) AS BIGINT) AS post_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN post_cents ELSE 0 END) AS BIGINT) AS post_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS sd_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS sd_b,
-         CAST(SUM(CASE WHEN arm = 0 THEN d * d ELSE 0 END) AS BIGINT) AS sdd_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN d * d ELSE 0 END) AS BIGINT) AS sdd_b
-  FROM armed
-)
+WITH {_CENTS_USERS_SQL},
+{_arm_sums_sql(sums)}
 SELECT n_a, n_b,
        (pre_a * 1000) // n_a AS pre_mean_a_milli,
        (pre_b * 1000) // n_b AS pre_mean_b_milli,

@@ -699,7 +699,7 @@ def streaming_ab_state(
     happens to be replay-idempotent anyway, but the guard keeps this
     sink contract-identical to the additive ones.
     """
-    from ..plans.events import AB_CONV_CENTS
+    from ..plans.events import ab_user_conversions
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -707,17 +707,7 @@ def streaming_ab_state(
         last = table.latest_meta().get("ab_batch_id")
         if last is not None and batch_id <= last:
             return
-        flags = batch_df.groupBy("user_id").agg(
-            F.max(
-                (
-                    (F.col("event_type") == "purchase")
-                    & (
-                        F.round(F.col("value") * 100).cast("long")
-                        >= AB_CONV_CENTS
-                    )
-                ).cast("long")
-            ).alias("conv_b")
-        )
+        flags = ab_user_conversions(batch_df).withColumnRenamed("conv", "conv_b")
         if table.latest_version() is not None:
             prior = table.read(spark).select(
                 "user_id", F.col("conv").alias("conv_p")

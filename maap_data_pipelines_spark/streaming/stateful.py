@@ -35,9 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.events import SESSION_GAP_US
 from .rollup import EVENT_SCHEMA
-
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes in microseconds
 
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, "

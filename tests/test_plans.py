@@ -563,7 +563,7 @@ def test_platt_plan_runs_on_checkpointed_deciles(spark, sf_dir):
 # Table reads take their schema and bare-scan gate counts from the
 # parquet footers, so a relational or event plan builds with no job; the
 # curation and dedup plans keep their eager checkpoints and loops. The
-# two ANN recall monitors train their quantizer at build time (the PQ
+# PQ and k-means ANN keys train their quantizer at build time (the PQ
 # codebooks, the k-means centroids), one collect per round.
 BUILD_JOB_BUDGETS = {
     "q3_shipping_priority": 0,
@@ -572,6 +572,15 @@ BUILD_JOB_BUDGETS = {
     "dedup_token_savings": 20,
     "ann_pq_recall": 6,
     "ann_ivf_kmeans_recall": 5,
+    "ann_pq_topk": 6,
+    "events_ab_test": 0,
+    "events_ab_sequential": 0,
+    "events_ab_power": 0,
+    "events_mde_curve": 0,
+    "events_ab_srm_check": 0,
+    "events_cuped": 0,
+    "events_cuped_stratified": 0,
+    "events_diff_in_diff": 0,
 }
 
 

@@ -14,6 +14,12 @@ order. Each run of a key prints one JSON line:
   round trips);
 * ``exec_s`` / ``exec_jobs`` — executing it with ``toArrow()``.
 
+``--plan OUT_DIR`` also writes each key's formatted plan to
+``OUT_DIR/<key>.txt`` with the per-session numbering normalised
+(expression ids ``#123``, ``plan_id=…``, ``_common_expr_…`` aliases,
+RDD numbers and object identity hashes), so the plan directories of two
+commits compare with a plain ``diff -r``.
+
 Jobs are the statusTracker job-id delta around each phase, the same
 count ``tests/test_pipelines.py`` budgets. Every line is flushed as
 it is made, so redirecting stdout keeps a record; the last line sums the
@@ -29,6 +35,7 @@ import argparse
 import io
 import json
 import os
+import re
 import sys
 import time
 from contextlib import redirect_stdout
@@ -52,6 +59,23 @@ class _Py4jCounter:
             return send(*args, **kwargs)
 
         client.send_command = counted
+
+
+# Numbering that differs between sessions on an identical plan.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(?<=\w)@[0-9a-f]+\b"), "@H"),
+)
+
+
+def _normalise_plan(text: str) -> str:
+    """A formatted plan with the session-specific numbers replaced."""
+    for pat, repl in _PLAN_NOISE:
+        text = pat.sub(repl, text)
+    return text
 
 
 def _last_job_id(sc) -> int:
@@ -106,7 +130,7 @@ def main() -> int:
             with redirect_stdout(buf):
                 qs[key](spark, args.sf).explain("formatted")
             with open(os.path.join(args.plan, f"{key}.txt"), "w") as f:
-                f.write(buf.getvalue())
+                f.write(_normalise_plan(buf.getvalue()))
         for run in range(args.runs):
             spark.catalog.clearCache()
             try:
