@@ -869,36 +869,51 @@ _FIRST_K_CENTS_SQL = f"""cents AS (
 )"""
 
 
-def _ivf_sql(nprobe: int, prelude: str = "WITH", cents: str = _FIRST_K_CENTS_SQL) -> str:
-    """Oracle of :func:`ann_ivf_topk` over the ``cents`` CTE's quantizer.
-
-    ``prelude`` is the text before ``cents``: a bare ``WITH``, or the
-    CTEs the centroid CTE reads ending in a comma (the learned quantizer
-    passes its Lloyd rounds). ``scored`` is MATERIALIZED because both
-    the corpus assignment and the query probes read it.
+def _ivf_cells_sql(
+    nprobe: int = 0,
+    queries: str = f"vec_id < {N_QUERIES}",
+    cents: str = _FIRST_K_CENTS_SQL,
+) -> str:
+    """The IVF assignment CTEs every IVF oracle shares: the ``cents``
+    quantizer, each vector's centroid cosines ``cscored``, its argmax
+    cell ``assigned`` (vec_id, embedding, cell) and, when ``nprobe`` is
+    set, ``probes`` (query_id, qe, cell): the ``nprobe`` best cells of
+    every vector matching ``queries``. ``cscored`` is MATERIALIZED
+    because the corpus assignment and the probes both read it.
     """
-    return f"""
-{prelude}
-{cents},
-scored AS MATERIALIZED (
+    probes = "" if not nprobe else f""",
+probes AS (
+  SELECT vec_id AS query_id, embedding AS qe, centroid_id AS cell
+  FROM cscored WHERE {queries}
+  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) <= {nprobe}
+)"""
+    return f"""{cents},
+cscored AS MATERIALIZED (
   SELECT e.vec_id, e.embedding, c.centroid_id,
          ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
   FROM embeddings e CROSS JOIN cents c
 ),
 assigned AS (
   SELECT vec_id, embedding, centroid_id AS cell
-  FROM scored
+  FROM cscored
   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) = 1
-),
-q AS (
-  SELECT vec_id AS query_id, embedding AS qe, centroid_id AS cell
-  FROM scored WHERE vec_id < {N_QUERIES}
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) <= {nprobe}
-),
+){probes}"""
+
+
+def _ivf_sql(nprobe: int, prelude: str = "WITH", cents: str = _FIRST_K_CENTS_SQL) -> str:
+    """Oracle of :func:`ann_ivf_topk` over the ``cents`` CTE's quantizer.
+
+    ``prelude`` is the text before ``cents``: a bare ``WITH``, or the
+    CTEs the centroid CTE reads ending in a comma (the learned quantizer
+    passes its Lloyd rounds).
+    """
+    return f"""
+{prelude}
+{_ivf_cells_sql(nprobe, cents=cents)},
 pairs AS (
   SELECT q.query_id, c.vec_id,
          ROUND({cosine_sql('q.qe', 'c.embedding')}, 6) AS cosine
-  FROM assigned c JOIN q USING (cell)
+  FROM assigned c JOIN probes q USING (cell)
   WHERE c.vec_id <> q.query_id
 )
 SELECT query_id, vec_id, cosine,
@@ -1094,30 +1109,12 @@ truth AS (
   QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id)
           <= {IVF_TOPK}
 ),
-cents AS (
-  SELECT vec_id AS centroid_id, embedding AS cemb FROM embeddings
-  WHERE vec_id < {IVF_K}
-),
-cscored AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell
-  FROM cscored
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) = 1
-),
-qcell AS (
-  SELECT s.vec_id AS query_id, s.embedding AS qe, s.centroid_id AS cell
-  FROM cscored s JOIN q ON q.query_id = s.vec_id
-  QUALIFY row_number() OVER (PARTITION BY s.vec_id ORDER BY s.ccos DESC, s.centroid_id) = 1
-),
+{_ivf_cells_sql(1, "vec_id IN (SELECT query_id FROM q)")},
 appr AS (
   SELECT query_id, vec_id, 1 AS hit FROM (
     SELECT qc.query_id, c.vec_id,
            ROUND({cosine_sql('qc.qe', 'c.embedding')}, 6) AS cosine
-    FROM assigned c JOIN qcell qc USING (cell)
+    FROM assigned c JOIN probes qc USING (cell)
     WHERE c.vec_id <> qc.query_id
   )
   QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id)
@@ -1176,20 +1173,7 @@ def ann_centroid_balance(emb: DataFrame) -> DataFrame:
 
 
 ANN_CENTROID_BALANCE_SQL = f"""
-WITH cents AS (
-  SELECT vec_id AS centroid_id, embedding AS cemb FROM embeddings
-  WHERE vec_id < {IVF_K}
-),
-scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, centroid_id AS cell
-  FROM scored
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) = 1
-),
+WITH {_ivf_cells_sql()},
 per_cell AS (
   SELECT CAST(cell AS BIGINT) AS cell, CAST(COUNT(*) AS BIGINT) AS n_vecs
   FROM assigned GROUP BY 1
@@ -1465,24 +1449,9 @@ FROM (
   FROM ({_recall_sql(_ivf_sql(np_))})
 ) r
 CROSS JOIN (
-  WITH cents AS (
-    SELECT vec_id AS centroid_id, embedding AS cemb FROM embeddings WHERE vec_id < {IVF_K}
-  ),
-  scored AS (
-    SELECT e.vec_id, c.centroid_id,
-           ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
-    FROM embeddings e CROSS JOIN cents c
-  ),
-  assigned AS (
-    SELECT vec_id, centroid_id AS cell FROM scored
-    QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) = 1
-  ),
-  cellsizes AS (SELECT cell, COUNT(*) AS n FROM assigned GROUP BY 1),
-  probes AS (
-    SELECT vec_id, centroid_id AS cell FROM scored WHERE vec_id < {N_QUERIES}
-    QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) <= {np_}
-  )
-  SELECT SUM(cs.n) - COUNT(DISTINCT p.vec_id) AS n_candidates
+  WITH {_ivf_cells_sql(np_)},
+  cellsizes AS (SELECT cell, COUNT(*) AS n FROM assigned GROUP BY 1)
+  SELECT SUM(cs.n) - COUNT(DISTINCT p.query_id) AS n_candidates
   FROM probes p JOIN cellsizes cs USING (cell)
 ) c
 """

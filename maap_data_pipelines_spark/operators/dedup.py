@@ -288,7 +288,8 @@ def _minhash_pairs(docs: DataFrame, hashed: DataFrame | None = None) -> DataFram
     could be computed (Catalyst cannot prune the 1:1 inner joins away).
     The pair set is identical by construction: every pair endpoint HAS
     exactly one signature row (pairs derive from the signature table),
-    so the re-fetch joins never filtered or duplicated anything.
+    so the re-fetch joins never filtered or duplicated anything. Its
+    DuckDB twin is ``_MINHASH_PAIRS_SQL``.
     """
     sig = _minhash_sig(docs, hashed).localCheckpoint(eager=False)
     return _banded_pairs_from_sig(sig)
@@ -376,13 +377,21 @@ def _match_sum_sql() -> str:
     )
 
 
-def _minhash_sql() -> str:
-    return f"""
+_BAND_PAIRS_SQL = """SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id"""
+
+# The candidate pair set alone: the oracle twin of _minhash_pairs, read by
+# every graph oracle that never looks at est_jaccard.
+_MINHASH_PAIRS_SQL = f"""
+WITH {_sig_bands_ctes()}
+{_BAND_PAIRS_SQL}
+"""
+
+DEDUP_MINHASH_SQL = f"""
 WITH {_sig_bands_ctes()},
 pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+  {_BAND_PAIRS_SQL}
 )
 SELECT doc_a, doc_b,
        ROUND(({_match_sum_sql()}) / CAST({NUM_PERM} AS DOUBLE), 6) AS est_jaccard
@@ -390,9 +399,6 @@ FROM pairs
 JOIN sig sa ON sa.doc_id = doc_a
 JOIN sig sb ON sb.doc_id = doc_b
 """
-
-
-DEDUP_MINHASH_SQL = _minhash_sql()
 
 
 # --- SimHash --------------------------------------------------------------
@@ -642,7 +648,63 @@ FROM j
 """
 
 
-# --- duplicate clusters (connected components) ----------------------------
+# --- candidate-graph toolbox ------------------------------------------------
+# One symmetric edge list and one components chain per engine, shared by
+# every graph key (dedup, media pHash, entity resolution, trade PageRank).
+# The DuckDB builders are written apart from the Spark ones so each oracle
+# stays an independent reference.
+
+_SWAP = {"doc_a": "doc_b", "doc_b": "doc_a"}
+
+
+def _undirected(e: DataFrame) -> DataFrame:
+    """``e`` plus ``e`` with doc_a/doc_b swapped: the symmetric edge list
+    of a pair frame. Any other column rides along unchanged. No
+    checkpoint here: each caller decides whether its consumers share it.
+    """
+    return e.union(
+        e.select(*(F.col(_SWAP[c]).alias(c) if c in _SWAP else c for c in e.columns))
+    )
+
+
+def _components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
+    """(doc_id, cluster_id) min-label components of the (doc_a, doc_b)
+    pair graph. The symmetric edge list is checkpointed lazily: every CC
+    round reads it, and the first convergence count materializes it.
+    """
+    und = _undirected(edges).localCheckpoint(eager=False)
+    labels, _ = connected_components(und, max_iter=max_iter)
+    return labels
+
+
+def _und_sql(pairs_sql: str, carry: str = "") -> str:
+    """Oracle twin of :func:`_undirected`: the rows of ``pairs_sql`` in
+    both directions. ``carry`` lists further columns to keep, each with a
+    leading comma (``", w"``)."""
+    return f"""
+  WITH p AS MATERIALIZED ({pairs_sql})
+  SELECT doc_a, doc_b{carry} FROM p
+  UNION ALL
+  SELECT doc_b, doc_a{carry} FROM p
+"""
+
+
+def _cc_sql(pairs_sql: str) -> str:
+    """Oracle of :func:`_components`: each node of the pair graph labelled
+    with the least node it reaches (recursive reachability)."""
+    return f"""
+WITH und AS MATERIALIZED ({_und_sql(pairs_sql)}),
+reach AS (
+  WITH RECURSIVE r(node, lab) AS (
+    SELECT doc_a, doc_a FROM und
+    UNION
+    SELECT u.doc_a, r.lab FROM und u JOIN r ON r.node = u.doc_b
+  )
+  SELECT node, lab FROM r
+)
+SELECT node AS doc_id, MIN(lab) AS cluster_id
+FROM reach GROUP BY node
+"""
 
 
 def connected_components(
@@ -747,14 +809,7 @@ def similar_docs_topk(docs: DataFrame) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    pairs = ngram_jaccard(docs).select("doc_a", "doc_b", "jaccard")
-    sym = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"),
-            F.col("doc_a").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    sym = _undirected(ngram_jaccard(docs).select("doc_a", "doc_b", "jaccard"))
     w = Window.partitionBy("doc_a").orderBy(F.desc("jaccard"), "doc_b")
     return (
         sym.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -769,12 +824,7 @@ def similar_docs_topk(docs: DataFrame) -> DataFrame:
 
 
 SIMILAR_DOCS_SQL = f"""
-WITH pairs AS ({NGRAM_JACCARD_SQL}),
-sym AS (
-  SELECT doc_a, doc_b, jaccard FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a, jaccard FROM pairs
-)
+WITH sym AS ({_und_sql(NGRAM_JACCARD_SQL, ", jaccard")})
 SELECT doc_a AS doc_id, doc_b AS similar_doc_id, jaccard,
        row_number() OVER (PARTITION BY doc_a ORDER BY jaccard DESC, doc_b) AS rnk
 FROM sym
@@ -786,32 +836,30 @@ PR_SCALE = 1_000_000  # rank unit = micro-rank; all arithmetic stays int64
 PR_ITERS = 5
 
 
-def pagerank_int(und: DataFrame, iters: int = PR_ITERS) -> DataFrame:
-    """Integer-exact PageRank (damping 0.85) over a symmetric edge list.
+def pagerank_int_weighted(wedges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
+    """Integer-exact weighted PageRank (damping 0.85) over a symmetric
+    weighted edge list (doc_a, doc_b, w); unit weights give plain PageRank.
 
     Floating PageRank is NOT reproducible across engines: float sums
     depend on reduction order. Working in integer micro-rank units with
     truncating division makes every iteration a pure integer function of
     the graph — bit-identical on any engine and any partitioning, so an
-    ITERATIVE graph algorithm gets a full value-hash oracle (5 unrolled
+    ITERATIVE graph algorithm gets a full value-hash oracle (unrolled
     CTEs in SQL), not a rows-only waiver.
 
-    Per round: contribution = rank div degree flows along each edge (one
-    equi-join + map-side-combined sum), then
+    Per round each node's rank flows along its edges in proportion to
+    weight — contribution = (rank div total_out_weight) * w, one
+    equi-join + map-side-combined sum — then
     ``rank' = 0.15*S + (85 * sum) div 100``. Symmetric edges mean no
-    dangling nodes by construction. The edge+degree table is consumed
-    every round, so it is localCheckpoint-ed once; plan depth grows
-    linearly in iterations (5 here — pointer-jumping CC covers the
-    unbounded-convergence case; fixed-round PageRank is the score, not
-    the partition).
+    dangling nodes by construction. The edge+weighted-degree table is
+    consumed every round, so it is localCheckpoint-ed once; plan depth
+    grows linearly in iterations (5 here — fixed-round PageRank is the
+    score, pointer-jumping CC covers unbounded convergence).
     """
-    edges = (
-        und.join(
-            und.groupBy("doc_a").agg(F.count(F.lit(1)).alias("deg")), "doc_a"
-        )
-        .select("doc_a", "doc_b", "deg")
-        .localCheckpoint(eager=False)
-    )
+    deg = wedges.groupBy("doc_a").agg(F.sum("w").alias("deg"))
+    edges = wedges.join(deg, "doc_a").select(
+        "doc_a", "doc_b", "w", "deg"
+    ).localCheckpoint(eager=False)
     nodes = edges.select(F.col("doc_a").alias("doc_id")).distinct()
     ranks = nodes.withColumn("rank", F.lit(PR_SCALE).cast("long"))
     base = 15 * PR_SCALE // 100
@@ -819,7 +867,8 @@ def pagerank_int(und: DataFrame, iters: int = PR_ITERS) -> DataFrame:
         contribs = (
             edges.join(ranks, edges.doc_a == ranks.doc_id)
             .select(
-                F.col("doc_b").alias("doc_id"), F.expr("rank div deg").alias("c")
+                F.col("doc_b").alias("doc_id"),
+                F.expr("(rank div deg) * w").alias("c"),
             )
             .groupBy("doc_id")
             .agg(F.sum("c").alias("s"))
@@ -834,15 +883,17 @@ def pagerank_int(und: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     return ranks.select("doc_id", F.col("rank").alias("rank_u6"))
 
 
-def _pagerank_sql(und_sql: str, iters: int = PR_ITERS) -> str:
+def pagerank_weighted_sql(wedges_sql: str, iters: int = PR_ITERS) -> str:
+    """Oracle builder for :func:`pagerank_int_weighted` — wedges_sql must
+    yield (doc_a, doc_b, w), symmetric."""
     base = 15 * PR_SCALE // 100
-    # MATERIALIZED: DuckDB inlines plain CTEs per reference — und appears
-    # once per iteration, so the full MinHash pipeline would run 6x
-    # (measured 59 s -> ~1 s at sf0.01)
+    # MATERIALIZED: DuckDB inlines plain CTEs per reference — the edges
+    # are read once per iteration, so an inlined MinHash pipeline would
+    # run 6x (measured 59 s -> ~1 s at sf0.01)
     ctes = [
-        f"und AS MATERIALIZED ({und_sql})",
-        "nodes AS MATERIALIZED (SELECT DISTINCT doc_a AS doc_id FROM und)",
-        "deg AS MATERIALIZED (SELECT doc_a, COUNT(*) AS deg FROM und GROUP BY 1)",
+        f"wund AS MATERIALIZED ({wedges_sql})",
+        "nodes AS MATERIALIZED (SELECT DISTINCT doc_a AS doc_id FROM wund)",
+        "deg AS MATERIALIZED (SELECT doc_a, SUM(w) AS deg FROM wund GROUP BY 1)",
         f"r0 AS (SELECT doc_id, CAST({PR_SCALE} AS BIGINT) AS rank FROM nodes)",
     ]
     for i in range(1, iters + 1):
@@ -851,8 +902,8 @@ def _pagerank_sql(und_sql: str, iters: int = PR_ITERS) -> str:
   SELECT n.doc_id,
          CAST({base} + (85 * COALESCE(CAST(s.s AS BIGINT), 0)) // 100 AS BIGINT) AS rank
   FROM nodes n LEFT JOIN (
-    SELECT u.doc_b AS doc_id, SUM(r.rank // d.deg) AS s
-    FROM und u JOIN deg d ON u.doc_a = d.doc_a JOIN r{i - 1} r ON r.doc_id = u.doc_a
+    SELECT u.doc_b AS doc_id, SUM((r.rank // d.deg) * u.w) AS s
+    FROM wund u JOIN deg d ON u.doc_a = d.doc_a JOIN r{i - 1} r ON r.doc_id = u.doc_a
     GROUP BY 1
   ) s ON n.doc_id = s.doc_id)"""
         )
@@ -869,25 +920,19 @@ def dedup_pagerank(docs: DataFrame) -> DataFrame:
     Ranks which documents sit at the center of duplicate neighborhoods —
     the triage signal for which near-dup cluster representative to keep
     (high rank = most-connected copy). Same edge construction as
-    :func:`dedup_clusters`.
+    :func:`dedup_clusters`; every edge weighs 1 in
+    :func:`pagerank_int_weighted`.
     """
-    edges = _minhash_pairs(docs)  # pair set only (r12) — no sig re-fetch
-    # checkpoint before pagerank_int's degree self-join so the MinHash
-    # pipeline runs once, not once per join side
-    und = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
-    return pagerank_int(und)
+    # pair set only (r12) — no sig re-fetch; checkpoint before the
+    # degree self-join so the MinHash pipeline runs once, not once per
+    # join side
+    und = _undirected(_minhash_pairs(docs)).localCheckpoint(eager=False)
+    return pagerank_int_weighted(und.withColumn("w", F.lit(1)))
 
 
-_UND_SQL = f"""
-  WITH pairs_full AS ({DEDUP_MINHASH_SQL})
-  SELECT doc_a, doc_b FROM pairs_full
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs_full
-"""
-
-DEDUP_PAGERANK_SQL = _pagerank_sql(_UND_SQL)
+DEDUP_PAGERANK_SQL = pagerank_weighted_sql(
+    f"SELECT doc_a, doc_b, 1 AS w FROM ({_und_sql(_MINHASH_PAIRS_SQL)})"
+)
 
 
 def dedup_clusters(
@@ -905,32 +950,11 @@ def dedup_clusters(
     pair (singletons are their own implicit cluster and omitted, like a
     dedup survivor map).
     """
-    edges = _minhash_pairs(docs, hashed=hashed)  # pair set only (r12)
-    und = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
-    labels, _ = connected_components(und, max_iter=max_iter)
-    return labels
+    # pair set only (r12)
+    return _components(_minhash_pairs(docs, hashed=hashed), max_iter=max_iter)
 
 
-DEDUP_CLUSTERS_SQL = f"""
-WITH pairs_full AS ({DEDUP_MINHASH_SQL}),
-und AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs_full
-  UNION
-  SELECT doc_b, doc_a FROM pairs_full
-),
-reach AS (
-  WITH RECURSIVE r(node, lab) AS (
-    SELECT a, a FROM und
-    UNION
-    SELECT u.a, r.lab FROM und u JOIN r ON r.node = u.b
-  )
-  SELECT node, lab FROM r
-)
-SELECT node AS doc_id, MIN(lab) AS cluster_id
-FROM reach GROUP BY node
-"""
+DEDUP_CLUSTERS_SQL = _cc_sql(_MINHASH_PAIRS_SQL)
 
 
 
@@ -1003,11 +1027,9 @@ def dedup_rand_index(docs: DataFrame, max_iter: int = 15) -> DataFrame:
 
     def _chain_simhash():
         sp = dedup_simhash(docs, hashed=hashed).select("doc_a", "doc_b")
-        und = sp.union(
-            sp.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        ).localCheckpoint()
-        s_labels, _ = connected_components(und, max_iter=max_iter)
-        return s_labels.select("doc_id", F.col("cluster_id").alias("c2"))
+        return _components(sp, max_iter=max_iter).select(
+            "doc_id", F.col("cluster_id").alias("c2")
+        )
 
     m, s = _run_chains(n_corpus, _chain_minhash, _chain_simhash)
     u = (
@@ -1064,23 +1086,7 @@ def dedup_rand_index(docs: DataFrame, max_iter: int = 15) -> DataFrame:
 
 DEDUP_RAND_INDEX_SQL = f"""
 WITH lab1 AS ({DEDUP_CLUSTERS_SQL}),
-simpairs AS ({DEDUP_SIMHASH_SQL}),
-sund AS (
-  SELECT doc_a AS a, doc_b AS b FROM simpairs
-  UNION
-  SELECT doc_b, doc_a FROM simpairs
-),
-sreach AS (
-  WITH RECURSIVE r(node, lab) AS (
-    SELECT a, a FROM sund
-    UNION
-    SELECT u.a, r.lab FROM sund u JOIN r ON r.node = u.b
-  )
-  SELECT node, lab FROM r
-),
-lab2 AS (
-  SELECT node AS doc_id, MIN(lab) AS cluster_id FROM sreach GROUP BY node
-),
+lab2 AS ({_cc_sql(DEDUP_SIMHASH_SQL)}),
 u AS (
   SELECT COALESCE(l1.cluster_id, COALESCE(l1.doc_id, l2.doc_id)) AS g1,
          COALESCE(l2.cluster_id, COALESCE(l1.doc_id, l2.doc_id)) AS g2
@@ -1326,6 +1332,24 @@ WHERE ROUND(n_common / LEAST(sa.n, sb.n), 6) >= {CONTAIN_MIN}
 """
 
 
+def _triangles(e: DataFrame) -> DataFrame:
+    """Columns a, b, c: every triangle {a<b<c} of the ordered pair list
+    ``e`` (doc_a < doc_b), once — edges (a,b)+(b,c) joined on the middle
+    vertex, closed by a semi-join probe of (a,c)."""
+    e1 = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    e2 = e.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
+    e3 = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
+    return e1.join(e2, "b").join(e3, ["a", "c"], "left_semi")
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(n, d): the degree of every node of the pair list ``e``."""
+    und = e.select(F.col("doc_a").alias("n")).unionAll(
+        e.select(F.col("doc_b").alias("n"))
+    )
+    return und.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+
+
 def dedup_triangles(docs: DataFrame) -> DataFrame:
     """Graph census of the MinHash candidate graph: one exact-integer row.
 
@@ -1343,19 +1367,8 @@ def dedup_triangles(docs: DataFrame) -> DataFrame:
     (already df-bounded), never the corpus.
     """
     e = _minhash_pairs(docs).localCheckpoint(eager=False)  # pair set only (r12)
-    e1 = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    e2 = e.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    e3 = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    tri = (
-        e1.join(e2, "b")
-        .join(e3, ["a", "c"], "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    und = e.select(F.col("doc_a").alias("n")).unionAll(
-        e.select(F.col("doc_b").alias("n"))
-    )
-    deg = und.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-    stats = deg.agg(
+    tri = _triangles(e).agg(F.count(F.lit(1)).alias("n_triangles"))
+    stats = _degrees(e).agg(
         F.count(F.lit(1)).alias("n_nodes"),
         (F.sum("d") / F.lit(2)).cast("long").alias("n_edges"),
         F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges"),
@@ -1365,29 +1378,34 @@ def dedup_triangles(docs: DataFrame) -> DataFrame:
     )
 
 
-DEDUP_TRIANGLES_SQL = f"""
-WITH e AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_SQL})
-),
+# The candidate pair list ``e``, its triangles {a<b<c} (each once) and
+# its node degrees: the oracle twin of _triangles / _degrees, shared by
+# the two graph-census oracles.
+_TRIANGLE_CTES = f"""e AS MATERIALIZED ({_MINHASH_PAIRS_SQL}),
 tri AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
   FROM e e1 JOIN e e2 ON e1.doc_b = e2.doc_a
   WHERE EXISTS (
     SELECT 1 FROM e e3 WHERE e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
   )
 ),
 deg AS (
-  SELECT n, COUNT(*) AS d FROM (
+  SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM (
     SELECT doc_a AS n FROM e UNION ALL SELECT doc_b AS n FROM e
   ) GROUP BY n
-),
+)"""
+
+DEDUP_TRIANGLES_SQL = f"""
+WITH {_TRIANGLE_CTES},
 stats AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
          CAST(SUM(d) / 2 AS BIGINT) AS n_edges,
          CAST(SUM(d * (d - 1) // 2) AS BIGINT) AS n_wedges
   FROM deg
 )
-SELECT n_nodes, n_edges, n_wedges, n_triangles FROM stats CROSS JOIN tri
+SELECT n_nodes, n_edges, n_wedges,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM tri) AS n_triangles
+FROM stats
 """
 
 
@@ -1402,9 +1420,9 @@ def dedup_clustering_coefficient(docs: DataFrame) -> DataFrame:
     it away).
 
     Per-node triangle counts credit each ordered triangle {a<b<c} to
-    all three vertices (the dedup_triangles join pair widened from a
-    semi-join to an inner probe so the vertex list survives, then
-    exploded); degrees come from the symmetrized edge list. Every
+    all three vertices (dedup_triangles' triangle join, whose semi-join
+    probe keeps the vertex list, exploded); degrees come from the
+    same degree table. Every
     number is EXACT INTEGER end-to-end — c_v in ppm via
     (2·t·1e6) div (d(d−1)) — so no float ever crosses a partition
     boundary. Output: one row per coefficient decile (bucket
@@ -1417,21 +1435,14 @@ def dedup_clustering_coefficient(docs: DataFrame) -> DataFrame:
     aggregates, one ≤12-row histogram aggregate.
     """
     e = _minhash_pairs(docs).localCheckpoint(eager=False)  # pair set only (r12)
-    e1 = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    e2 = e.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    e3 = e.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
+    tri = _triangles(e)
     tnodes = (
-        tri.select(F.col("a").alias("v"))
-        .unionAll(tri.select(F.col("b").alias("v")))
-        .unionAll(tri.select(F.col("c").alias("v")))
+        tri.select(F.col("a").alias("n"))
+        .unionAll(tri.select(F.col("b").alias("n")))
+        .unionAll(tri.select(F.col("c").alias("n")))
     )
-    tcnt = tnodes.groupBy("v").agg(F.count(F.lit(1)).alias("t"))
-    und = e.select(F.col("doc_a").alias("v")).unionAll(
-        e.select(F.col("doc_b").alias("v"))
-    )
-    deg = und.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    per = deg.join(tcnt, "v", "left").select(
+    tcnt = tnodes.groupBy("n").agg(F.count(F.lit(1)).alias("t"))
+    per = _degrees(e).join(tcnt, "n", "left").select(
         "d", F.coalesce("t", F.lit(0)).alias("t")
     )
     coeff = per.select(
@@ -1459,27 +1470,15 @@ def dedup_clustering_coefficient(docs: DataFrame) -> DataFrame:
 
 
 DEDUP_CLUSTERING_COEFF_SQL = f"""
-WITH e AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_SQL})
-),
-tri AS (
-  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
-  FROM e e1 JOIN e e2 ON e1.doc_b = e2.doc_a
-  JOIN e e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
-),
+WITH {_TRIANGLE_CTES},
 tcnt AS (
-  SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM (
-    SELECT a AS v FROM tri UNION ALL SELECT b FROM tri
+  SELECT n, CAST(COUNT(*) AS BIGINT) AS t FROM (
+    SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
     UNION ALL SELECT c FROM tri
   ) GROUP BY 1
 ),
-deg AS (
-  SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM (
-    SELECT doc_a AS v FROM e UNION ALL SELECT doc_b AS v FROM e
-  ) GROUP BY 1
-),
 per AS (
-  SELECT d, COALESCE(t, 0) AS t FROM deg LEFT JOIN tcnt USING (v)
+  SELECT d, COALESCE(t, 0) AS t FROM deg LEFT JOIN tcnt USING (n)
 ),
 coeff AS (
   SELECT d, CASE WHEN d >= 2 THEN (2 * t * 1000000) // (d * (d - 1)) END
@@ -1696,10 +1695,8 @@ def dedup_kcore(docs: DataFrame) -> DataFrame:
     instead of silently trusted. The flag is a broadcast 1-row
     aggregate, not a shuffle.
     """
-    edges = _minhash_pairs(docs)  # pair set only (r12)
-    und = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
+    # pair set only (r12)
+    und = _undirected(_minhash_pairs(docs)).localCheckpoint(eager=False)
     for _ in range(KCORE_ROUNDS):
         deg = und.groupBy("doc_a").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= KCORE_K).select("doc_a")
@@ -1718,30 +1715,23 @@ def dedup_kcore(docs: DataFrame) -> DataFrame:
 
 
 def _kcore_sql() -> str:
-    ctes = [
-        f"pairs_full AS ({DEDUP_MINHASH_SQL})",
-        """und0 AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs_full
-  UNION
-  SELECT doc_b, doc_a FROM pairs_full
-)""",
-    ]
+    ctes = [f"und0 AS ({_und_sql(_MINHASH_PAIRS_SQL)})"]
     for i in range(1, KCORE_ROUNDS + 1):
         ctes.append(
             f"""k{i} AS (
-  SELECT a FROM und{i - 1} GROUP BY a HAVING COUNT(*) >= {KCORE_K})"""
+  SELECT doc_a FROM und{i - 1} GROUP BY doc_a HAVING COUNT(*) >= {KCORE_K})"""
         )
         ctes.append(
             f"""und{i} AS MATERIALIZED (
-  SELECT u.a, u.b FROM und{i - 1} u
-  JOIN k{i} ka ON ka.a = u.a
-  JOIN k{i} kb ON kb.a = u.b)"""
+  SELECT u.doc_a, u.doc_b FROM und{i - 1} u
+  JOIN k{i} ka ON ka.doc_a = u.doc_a
+  JOIN k{i} kb ON kb.doc_a = u.doc_b)"""
         )
     ctes.append(
         f"""core AS (
-  SELECT a AS doc_id, CAST(COUNT(*) AS BIGINT) AS degree
+  SELECT doc_a AS doc_id, CAST(COUNT(*) AS BIGINT) AS degree
   FROM und{KCORE_ROUNDS}
-  GROUP BY a)"""
+  GROUP BY doc_a)"""
     )
     return (
         "WITH "
@@ -1877,7 +1867,7 @@ def dedup_source_modularity(docs: DataFrame) -> DataFrame:
 
 
 DEDUP_SOURCE_MODULARITY_SQL = f"""
-WITH pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_SQL})),
+WITH pairs AS MATERIALIZED ({_MINHASH_PAIRS_SQL}),
 lab AS MATERIALIZED (
   SELECT p.doc_a, p.doc_b, sa.source AS src_a, sb.source AS src_b
   FROM pairs p
@@ -2227,13 +2217,8 @@ def dedup_label_propagation(docs: DataFrame) -> DataFrame:
     Output: (doc_id, community, n_members) for every node in at least
     one candidate pair.
     """
-    edges = _minhash_pairs(docs)  # pair set only (r12)
-    und = (
-        edges.union(
-            edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .localCheckpoint(eager=False)
-    )
+    # pair set only (r12)
+    und = _undirected(_minhash_pairs(docs)).localCheckpoint(eager=False)
     return label_propagation(und)
 
 
@@ -2264,15 +2249,13 @@ def label_propagation(und: DataFrame, rounds: int = LP_ROUNDS) -> DataFrame:
 
 def _label_propagation_sql(rounds: int = LP_ROUNDS) -> str:
     ctes = [
-        f"pairs_full AS ({DEDUP_MINHASH_SQL})",
-        "und AS (SELECT doc_a AS a, doc_b AS b FROM pairs_full "
-        "UNION ALL SELECT doc_b, doc_a FROM pairs_full)",
-        "lab0 AS (SELECT DISTINCT a AS v, a AS lab FROM und)",
+        f"und AS ({_und_sql(_MINHASH_PAIRS_SQL)})",
+        "lab0 AS (SELECT DISTINCT doc_a AS v, doc_a AS lab FROM und)",
     ]
     for r in range(1, rounds + 1):
         ctes.append(
-            f"cnt{r} AS (SELECT u.a AS v, l.lab, COUNT(*) AS c "
-            f"FROM und u JOIN lab{r - 1} l ON l.v = u.b GROUP BY 1, 2)"
+            f"cnt{r} AS (SELECT u.doc_a AS v, l.lab, COUNT(*) AS c "
+            f"FROM und u JOIN lab{r - 1} l ON l.v = u.doc_b GROUP BY 1, 2)"
         )
         ctes.append(
             f"lab{r} AS (SELECT v, lab FROM cnt{r} "
@@ -2631,73 +2614,6 @@ DEDUP_STRATEGY_COMPARISON_SQL = _strategy_comparison_sql()
 QUERY_SQL["dedup_strategy_comparison"] = DEDUP_STRATEGY_COMPARISON_SQL
 
 
-# --- weighted PageRank core --------------------------------------------------
-
-
-def pagerank_int_weighted(wedges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
-    """Integer-exact WEIGHTED PageRank over a symmetric weighted edge list
-    (doc_a, doc_b, w). The :func:`pagerank_int` discipline generalized:
-    per round each node's rank flows along its edges proportionally to
-    weight — contribution = (rank div total_out_weight) * w, an exact
-    integer function of the graph, so the iterative score keeps a full
-    value-hash oracle. Same localCheckpoint-ed edge+degree table, same
-    fixed-round structure.
-    """
-    deg = wedges.groupBy("doc_a").agg(F.sum("w").alias("deg"))
-    edges = wedges.join(deg, "doc_a").select(
-        "doc_a", "doc_b", "w", "deg"
-    ).localCheckpoint(eager=False)
-    nodes = edges.select(F.col("doc_a").alias("doc_id")).distinct()
-    ranks = nodes.withColumn("rank", F.lit(PR_SCALE).cast("long"))
-    base = 15 * PR_SCALE // 100
-    for _ in range(iters):
-        contribs = (
-            edges.join(ranks, edges.doc_a == ranks.doc_id)
-            .select(
-                F.col("doc_b").alias("doc_id"),
-                F.expr("(rank div deg) * w").alias("c"),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = nodes.join(contribs, "doc_id", "left").select(
-            "doc_id",
-            (
-                F.lit(base).cast("long")
-                + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
-            ).alias("rank"),
-        )
-    return ranks.select("doc_id", F.col("rank").alias("rank_u6"))
-
-
-def pagerank_weighted_sql(wedges_sql: str, iters: int = PR_ITERS) -> str:
-    """Oracle builder for :func:`pagerank_int_weighted` — wedges_sql must
-    yield (doc_a, doc_b, w), symmetric."""
-    base = 15 * PR_SCALE // 100
-    ctes = [
-        f"wund AS MATERIALIZED ({wedges_sql})",
-        "nodes AS MATERIALIZED (SELECT DISTINCT doc_a AS doc_id FROM wund)",
-        "deg AS MATERIALIZED (SELECT doc_a, SUM(w) AS deg FROM wund GROUP BY 1)",
-        f"r0 AS (SELECT doc_id, CAST({PR_SCALE} AS BIGINT) AS rank FROM nodes)",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""r{i} AS (
-  SELECT n.doc_id,
-         CAST({base} + (85 * COALESCE(CAST(s.s AS BIGINT), 0)) // 100 AS BIGINT) AS rank
-  FROM nodes n LEFT JOIN (
-    SELECT u.doc_b AS doc_id, SUM((r.rank // d.deg) * u.w) AS s
-    FROM wund u JOIN deg d ON u.doc_a = d.doc_a JOIN r{i - 1} r ON r.doc_id = u.doc_a
-    GROUP BY 1
-  ) s ON n.doc_id = s.doc_id)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT doc_id, rank AS rank_u6 FROM r{iters}"
-    )
-
-
 # --- local bridges: the chain links that glue clusters together -------------
 
 
@@ -2720,16 +2636,8 @@ def dedup_local_bridges(docs: DataFrame) -> DataFrame:
     Output: (doc_a, doc_b, est_jaccard) for every zero-embeddedness
     candidate edge.
     """
-    pairs = dedup_minhash_lsh(docs).select("doc_a", "doc_b", "est_jaccard")
-    und = (
-        pairs.select("doc_a", "doc_b")
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    pairs = dedup_minhash_lsh(docs)
+    und = _undirected(pairs.select("doc_a", "doc_b")).localCheckpoint(eager=False)
     # common-neighbor pairs: a -> n and b -> n with a < b
     x, y = und.alias("x"), und.alias("y")
     embedded = (
@@ -2747,13 +2655,8 @@ def dedup_local_bridges(docs: DataFrame) -> DataFrame:
 
 
 DEDUP_LOCAL_BRIDGES_SQL = f"""
-WITH pairs AS (
-  SELECT doc_a, doc_b, est_jaccard FROM ({DEDUP_MINHASH_SQL})
-),
-und AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL SELECT doc_b, doc_a FROM pairs
-),
+WITH pairs AS MATERIALIZED ({DEDUP_MINHASH_SQL}),
+und AS ({_und_sql("SELECT doc_a, doc_b FROM pairs")}),
 embedded AS (
   SELECT DISTINCT x.doc_a AS doc_a, y.doc_a AS doc_b
   FROM und x JOIN und y

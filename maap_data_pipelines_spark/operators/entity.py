@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import connected_components
+from .dedup import _undirected, connected_components
 
 ER_LEV_MAX = 2  # verify threshold: the noise model edits <= 1 char
 
@@ -134,10 +134,8 @@ def er_match_pairs(recs: DataFrame) -> DataFrame:
 def resolve_entities(recs: DataFrame) -> DataFrame:
     """Full ER: records -> (rec_id, entity_id, n_records, is_canonical)."""
     pairs = er_match_pairs(recs)
-    und = pairs.select(
-        F.col("rec_a").alias("doc_a"), F.col("rec_b").alias("doc_b")
-    ).unionByName(
-        pairs.select(F.col("rec_b").alias("doc_a"), F.col("rec_a").alias("doc_b"))
+    und = _undirected(
+        pairs.select(F.col("rec_a").alias("doc_a"), F.col("rec_b").alias("doc_b"))
     )
     labels, _rounds = connected_components(und)
     resolved = recs.select("rec_id").join(

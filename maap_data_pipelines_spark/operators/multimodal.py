@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from .dedup import _cc_sql, _components
+
 FEATURE_DIM = 16
 
 MEDIA_SCHEMA = (
@@ -1167,31 +1169,9 @@ def media_phash_clusters(media: DataFrame, max_iter: int = 15) -> DataFrame:
     so re-encoded families collapse to one canonical id regardless of
     how the pairwise edges happened to land.
     """
-    from .dedup import connected_components
-
-    edges = media_phash_dedup(media).select("doc_a", "doc_b")
-    und = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
-    labels, _ = connected_components(und, max_iter=max_iter)
-    return labels
+    return _components(
+        media_phash_dedup(media).select("doc_a", "doc_b"), max_iter=max_iter
+    )
 
 
-MEDIA_PHASH_CLUSTERS_SQL = f"""
-WITH pairs_full AS ({MEDIA_PHASH_DEDUP_SQL}),
-und AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs_full
-  UNION
-  SELECT doc_b, doc_a FROM pairs_full
-),
-reach AS (
-  WITH RECURSIVE r(node, lab) AS (
-    SELECT a, a FROM und
-    UNION
-    SELECT u.a, r.lab FROM und u JOIN r ON r.node = u.b
-  )
-  SELECT node, lab FROM r
-)
-SELECT node AS doc_id, MIN(lab) AS cluster_id
-FROM reach GROUP BY node
-"""
+MEDIA_PHASH_CLUSTERS_SQL = _cc_sql(MEDIA_PHASH_DEDUP_SQL)

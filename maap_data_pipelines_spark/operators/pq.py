@@ -37,7 +37,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
-from .ann import EMBED_DIM, IVF_TOPK, N_QUERIES, _recall, _recall_sql
+from .ann import EMBED_DIM, IVF_TOPK, N_QUERIES, _ivf_cells_sql, _recall, _recall_sql
 from .kmeans import _dist_sql, _qv_sql, quantize_udf
 
 PQ_S = 8  # subspaces
@@ -503,31 +503,12 @@ def ann_ivfpq_recall(emb: DataFrame) -> DataFrame:
 
 
 def _ivfpq_sql(nprobe: int = IVFPQ_NPROBE) -> str:
-    from .ann import IVF_K, cosine_sql
-
     return f"""
 {_pq_ctes()},
-cents AS (
-  SELECT vec_id AS centroid_id, embedding AS cemb FROM embeddings WHERE vec_id < {IVF_K}
-),
-cscored AS (
-  SELECT e.vec_id, c.centroid_id,
-         ROUND({cosine_sql('e.embedding', 'c.cemb')}, 6) AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-cells AS (
-  SELECT vec_id, centroid_id AS cell
-  FROM cscored
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) = 1
-),
-qcells AS (
-  SELECT vec_id AS query_id, centroid_id AS cell
-  FROM cscored WHERE vec_id < {N_QUERIES}
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) <= {nprobe}
-),
+{_ivf_cells_sql(nprobe)},
 allowed AS (
   SELECT q.query_id, c.vec_id
-  FROM cells c JOIN qcells q USING (cell)
+  FROM assigned c JOIN probes q USING (cell)
   WHERE c.vec_id <> q.query_id
 ),
 scored AS (

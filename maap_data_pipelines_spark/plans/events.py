@@ -26,6 +26,7 @@ from ..sources.catalog import read_table
 SESSION_GAP_MIN = 30
 SESSION_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 _HOUR_US = 3600 * 1_000_000
+_DAY_US = 24 * _HOUR_US
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,7 +658,7 @@ def events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined, identical in shape to a conditional-sum rollup.
     """
     ev = read_events(spark, sf_dir)
-    day_us = (F.col("ts_us") - F.col("ts_us") % (24 * _HOUR_US)).alias("day_us")
+    day_us = (F.col("ts_us") - F.col("ts_us") % _DAY_US).alias("day_us")
     piv = (
         ev.groupBy(F.col("user_id"), day_us)
         .pivot("event_type", list(EVENT_TYPES))
@@ -677,7 +678,7 @@ _PIVOT_COLS = ",\n       ".join(
 
 PIVOT_SQL = f"""
 SELECT user_id,
-       (epoch_us(ts) - epoch_us(ts) % {24 * _HOUR_US}) AS day_us,
+       (epoch_us(ts) - epoch_us(ts) % {_DAY_US}) AS day_us,
        {_PIVOT_COLS}
 FROM events
 GROUP BY 1, 2
@@ -692,7 +693,7 @@ def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows from genuine NULL keys. One Expand + one shuffle.
     """
     ev = read_events(spark, sf_dir)
-    day_us = (F.col("ts_us") - F.col("ts_us") % (24 * _HOUR_US)).alias("day_us")
+    day_us = (F.col("ts_us") - F.col("ts_us") % _DAY_US).alias("day_us")
     return (
         ev.select("event_type", day_us, "value")
         .cube("event_type", "day_us")
@@ -706,7 +707,7 @@ def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CUBE_SQL = f"""
 SELECT event_type,
-       (epoch_us(ts) - epoch_us(ts) % {24 * _HOUR_US}) AS day_us,
+       (epoch_us(ts) - epoch_us(ts) % {_DAY_US}) AS day_us,
        COUNT(*) AS n_events,
        CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
        CAST(GROUPING(event_type) * 2 + GROUPING(day_us) AS BIGINT) AS gid
@@ -762,9 +763,6 @@ FROM spans,
                             {_HOUR_US})) AS t(hour_us)
 GROUP BY 1
 """
-
-
-_DAY_US = 86_400_000_000
 
 
 def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1066,7 +1064,6 @@ def _cms_sql() -> str:
 CMS_TOPK_SQL = _cms_sql()
 
 
-_DAY_US = 86400 * 1_000_000
 HOLT_DEN = 4  # alpha = beta = 1/4, kept rational
 
 
@@ -1779,7 +1776,6 @@ GROUP BY event_type
 
 # --- sessions_campaign_overlap: interval-overlap join via day binning ------
 
-_DAY_US = 86_400_000_000
 _JAN1_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z, the events epoch
 
 # Static campaign dimension (id, start_us, end_us inclusive) — one source

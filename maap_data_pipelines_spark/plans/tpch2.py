@@ -1355,7 +1355,8 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means generalized the clustering tier): nodes are nations, edge
     weight = line items shipped from a supplier nation to a customer
     nation, symmetrized; rank is the integer-exact weighted PageRank
-    (operators/dedup.pagerank_int_weighted), so an iterative centrality
+    (operators/dedup.pagerank_int_weighted, the kernel dedup_pagerank
+    runs with unit weights), so an iterative centrality
     over a business graph keeps a full value-hash oracle. High-rank
     nations are the hubs whose disruption propagates — Q7's volume
     table answers "how much", this answers "how central".
@@ -1364,7 +1365,7 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins collapsing lineitem to a |nations|²-bounded weighted edge
     list; the PageRank rounds run on that tiny frame.
     """
-    from ..operators.dedup import pagerank_int_weighted
+    from ..operators.dedup import _undirected, pagerank_int_weighted
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -1388,11 +1389,8 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     und = (
-        raw.select(F.col("sn").alias("doc_a"), F.col("cn").alias("doc_b"), "w")
-        .union(
-            raw.select(
-                F.col("cn").alias("doc_a"), F.col("sn").alias("doc_b"), "w"
-            )
+        _undirected(
+            raw.select(F.col("sn").alias("doc_a"), F.col("cn").alias("doc_b"), "w")
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.sum("w").alias("w"))
@@ -1407,30 +1405,19 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trade_pagerank_sql() -> str:
-    from ..operators.dedup import pagerank_weighted_sql
+    from ..operators.dedup import _und_sql, pagerank_weighted_sql
 
-    wedges = """
-  SELECT doc_a, doc_b, SUM(w) AS w FROM (
-    SELECT sn AS doc_a, cn AS doc_b, w FROM (
-      SELECT s_nationkey AS sn, c_nationkey AS cn, COUNT(*) AS w
+    trade = """
+      SELECT s_nationkey AS doc_a, c_nationkey AS doc_b, COUNT(*) AS w
       FROM lineitem
       JOIN supplier ON l_suppkey = s_suppkey
       JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
       GROUP BY 1, 2
-    )
-    UNION ALL
-    SELECT cn, sn, w FROM (
-      SELECT s_nationkey AS sn, c_nationkey AS cn, COUNT(*) AS w
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      GROUP BY 1, 2
-    )
-  ) GROUP BY 1, 2
 """
-    pr = pagerank_weighted_sql(wedges)
+    pr = pagerank_weighted_sql(
+        f"SELECT doc_a, doc_b, SUM(w) AS w FROM ({_und_sql(trade, ', w')}) GROUP BY 1, 2"
+    )
     return f"""
 WITH pr AS ({pr})
 SELECT n_name AS nation, rank_u6

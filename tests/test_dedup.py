@@ -125,14 +125,16 @@ def test_connected_components_two_components(spark):
 
 def test_pagerank_int_path_graph_centrality(spark):
     """On the path a-b-c the middle node must outrank the ends; ranks are
-    exact integers so equality of symmetric positions is exact."""
-    from pyspark.sql import functions as F
+    exact integers so equality of symmetric positions is exact. Unit
+    weights: the plain PageRank dedup_pagerank runs."""
+    from maap_data_pipelines_spark.operators.dedup import (
+        PR_SCALE,
+        pagerank_int_weighted,
+    )
 
-    from maap_data_pipelines_spark.operators.dedup import PR_SCALE, pagerank_int
-
-    edges = [(1, 2), (2, 1), (2, 3), (3, 2)]
-    und = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    ranks = {r.doc_id: r.rank_u6 for r in pagerank_int(und).collect()}
+    edges = [(1, 2, 1), (2, 1, 1), (2, 3, 1), (3, 2, 1)]
+    und = spark.createDataFrame(edges, "doc_a long, doc_b long, w long")
+    ranks = {r.doc_id: r.rank_u6 for r in pagerank_int_weighted(und).collect()}
     assert set(ranks) == {1, 2, 3}
     assert ranks[1] == ranks[3]  # symmetry, bit-exact
     assert ranks[2] > ranks[1]  # centrality

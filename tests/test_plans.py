@@ -562,7 +562,8 @@ def test_platt_plan_runs_on_checkpointed_deciles(spark, sf_dir):
 # job-id delta around fn(spark, sf), as tests/test_pipelines.py counts).
 # Table reads take their schema and bare-scan gate counts from the
 # parquet footers, so a relational or event plan builds with no job; the
-# curation and dedup plans keep their eager checkpoints and loops. The
+# curation and candidate-graph plans (dedup, media pHash, entity
+# resolution) keep their eager checkpoints and fixpoint loops. The
 # PQ and k-means ANN keys train their quantizer at build time (the PQ
 # codebooks, the k-means centroids), one collect per round.
 BUILD_JOB_BUDGETS = {
@@ -581,6 +582,12 @@ BUILD_JOB_BUDGETS = {
     "events_cuped": 0,
     "events_cuped_stratified": 0,
     "events_diff_in_diff": 0,
+    "dedup_clusters": 20,
+    "dedup_rand_index": 40,
+    "dedup_kcore": 28,
+    "dedup_pagerank": 7,
+    "media_phash_clusters": 3,
+    "customer_entity_resolution": 18,
 }
 
 
