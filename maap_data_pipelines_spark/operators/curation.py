@@ -1049,8 +1049,10 @@ def dsir_importance(docs: DataFrame) -> DataFrame:
     )
 
 
-DSIR_IMPORTANCE_SQL = f"""
-WITH uni AS (
+# The DuckDB twin of _dsir_feats_scores: hashed unigram + bigram
+# features per doc (feats) and the per-bucket importance score (scores).
+_DSIR_SCORES_SQL = f"""
+uni AS (
   SELECT doc_id, source,
          ({md5_long_sql("unnest(string_split(lower(text), ' '))")})
            % {DSIR_BUCKETS} AS g
@@ -1079,7 +1081,11 @@ scores AS (
   LEFT JOIN tc ON tc.g = grid.g
   LEFT JOIN rc ON rc.g = grid.g
   CROSS JOIN nt CROSS JOIN nr
-),
+)
+"""
+
+DSIR_IMPORTANCE_SQL = f"""
+WITH {_DSIR_SCORES_SQL},
 per_doc AS (
   SELECT f.doc_id,
          CAST(COUNT(*) AS BIGINT) AS n_feats,
@@ -1177,36 +1183,7 @@ def dsir_auc(docs: DataFrame) -> DataFrame:
 
 
 DSIR_AUC_SQL = f"""
-WITH uni AS (
-  SELECT doc_id, source,
-         ({md5_long_sql("unnest(string_split(lower(text), ' '))")})
-           % {DSIR_BUCKETS} AS g
-  FROM documents
-),
-bw AS (
-  SELECT doc_id, source, string_split(lower(text), ' ') AS ws FROM documents
-),
-bi AS (
-  SELECT doc_id, source,
-         ({md5_long_sql("unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1]))")})
-           % {DSIR_BUCKETS} AS g
-  FROM bw
-),
-feats AS (SELECT * FROM uni UNION ALL SELECT * FROM bi),
-tc AS (SELECT g, COUNT(*) AS ct FROM feats WHERE source = '{DSIR_TARGET_SRC}' GROUP BY g),
-rc AS (SELECT g, COUNT(*) AS cr FROM feats WHERE source <> '{DSIR_TARGET_SRC}' GROUP BY g),
-nt AS (SELECT COUNT(*) AS nt FROM feats WHERE source = '{DSIR_TARGET_SRC}'),
-nr AS (SELECT COUNT(*) AS nr FROM feats WHERE source <> '{DSIR_TARGET_SRC}'),
-grid AS (SELECT unnest(generate_series(0, {DSIR_BUCKETS - 1})) AS g),
-scores AS (
-  SELECT grid.g,
-         (1000000 * (COALESCE(tc.ct, 0) + 1) * (nr.nr + {DSIR_BUCKETS}))
-           // ((COALESCE(rc.cr, 0) + 1) * (nt.nt + {DSIR_BUCKETS})) AS score
-  FROM grid
-  LEFT JOIN tc ON tc.g = grid.g
-  LEFT JOIN rc ON rc.g = grid.g
-  CROSS JOIN nt CROSS JOIN nr
-),
+WITH {_DSIR_SCORES_SQL},
 weights AS (
   SELECT f.doc_id,
          CAST(CASE WHEN f.source = '{DSIR_TARGET_SRC}' THEN 1 ELSE 0 END AS BIGINT)

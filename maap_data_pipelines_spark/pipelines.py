@@ -603,21 +603,13 @@ def run_discovery_spec(
 def apply_rollup_batch(table, batch_df: DataFrame, batch_id: int) -> bool:
     """Merge one micro-batch of raw events into an hourly rollup table.
 
-    Exactly-once without a streaming-state store: the applied batch id
-    rides the table's manifest ``meta``, and the manifest rename is
-    atomic — so "merge the aggregates" and "record the batch as applied"
-    are one transaction. A replayed batch (foreachBatch re-delivery
-    after a crash, or a restart replaying the last epoch) sees its own
-    id already recorded and returns without touching the table — the
-    guard additive merges need, since re-adding is NOT idempotent.
-    Returns True if the batch was applied, False if skipped as replay.
-
-    The guard key is NAMESPACED (``rollup_batch_id``) and table meta
-    merges across commits, so an unrelated ``commit()``/``merge_upsert``
-    on the same table cannot reset it. Single rollup-stream writer per
-    table. A batch id BELOW the recorded high-water mark means the
-    stream's checkpoint was deleted/recreated (ids restart at 0) — every
-    new batch would silently skip, so that case warns loudly.
+    Exactly-once without a streaming-state store: the merged aggregates
+    and the applied batch id publish in one manifest, behind the replay
+    guard ``VersionedTable.batch_applied`` under the NAMESPACED key
+    ``rollup_batch_id`` (table meta merges across commits, so an
+    unrelated ``commit()``/``merge_upsert`` cannot reset it). Returns
+    True if the batch was applied, False if skipped as replay. Single
+    rollup-stream writer per table.
     """
     meta = table.latest_meta()
     # Legacy fallback: tables committed before the guard key was
@@ -625,20 +617,7 @@ def apply_rollup_batch(table, batch_df: DataFrame, batch_id: int) -> bool:
     # replayed micro-batch after an upgrade would pass the guard and be
     # double-applied into the additive merge.
     legacy_used = "rollup_batch_id" not in meta and "batch_id" in meta
-    last = meta.get("rollup_batch_id", meta.get("batch_id"))
-    if last is not None and batch_id <= last:
-        if batch_id < last:
-            import warnings
-
-            warnings.warn(
-                f"apply_rollup_batch: batch_id {batch_id} < recorded "
-                f"high-water mark {last} — was the stream checkpoint "
-                "deleted? All batches will be skipped until ids pass "
-                f"{last}; clear the guard via table.commit(df, meta="
-                "{'rollup_batch_id': None}) — a None meta value deletes "
-                "the key — to resume (and expect a full backfill).",
-                stacklevel=2,
-            )
+    if table.batch_applied("batch_id" if legacy_used else "rollup_batch_id", batch_id):
         return False
     part = batch_df.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
@@ -868,13 +847,8 @@ def run_live_rollup_pipeline(
     stream = (
         reader.json(landing_dir) if fmt == "json" else reader.parquet(landing_dir)
     )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: apply_rollup_batch(table, b, i) and None
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sinks.start_available_now(
+        stream, lambda b, i: apply_rollup_batch(table, b, i) and None, checkpoint_dir
     )
 
 

@@ -50,3 +50,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def last_job_id(spark: SparkSession) -> int:
+    """Id of the newest Spark job, after the listener bus has drained.
+
+    Job counts (the test budgets, ``tools/profile_query.py``) are deltas
+    of this id around a call. Without the drain, the status tracker can
+    miss jobs the call just started. Only jobs outside a job group are
+    seen: a streaming query runs its micro-batches under its run id's
+    group.
+    """
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)

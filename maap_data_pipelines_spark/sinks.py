@@ -115,6 +115,29 @@ def write_zordered(
     )
 
 
+def start_available_now(
+    stream_df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+):
+    """Start ``stream_df`` draining through ``fn(batch_df, batch_id)``.
+
+    The one micro-batch starter of the package: ``foreachBatch`` with an
+    ``availableNow`` trigger, so one call drains everything the source
+    holds now and stops, the same code path for backfill and live tail.
+    ``checkpoint_dir`` carries the source offsets, so a restart resumes
+    rather than re-ingests. Empty micro-batches reach ``fn``; a sink that
+    must not commit on them checks ``batch_df.isEmpty()`` itself.
+    Returns the ``StreamingQuery``.
+    """
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def start_idempotent_stream_sink(
     stream_df: DataFrame, target_dir: str, checkpoint_dir: str
 ):
@@ -133,12 +156,7 @@ def start_idempotent_stream_sink(
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{target_dir}/batch_id={batch_id}")
 
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream_df, _write_batch, checkpoint_dir)
 
 
 def start_stream_upsert(
@@ -180,12 +198,7 @@ def start_stream_upsert(
         )
         table.merge_upsert(latest, key)
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream_df, _merge_batch, checkpoint_dir)
 
 
 def dry_run_transport(payload: list[str], endpoint: str) -> int:

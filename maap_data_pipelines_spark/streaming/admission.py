@@ -16,8 +16,8 @@ index (never a corpus self-join), one per-doc aggregate, one append.
 State lives in the INDEX (a table a deployment appends admitted docs
 to), not in Spark streaming state — so nothing here grows with stream
 lifetime, and a replayed micro-batch is idempotent at the sink level
-(same doc_id rows; pair with pipelines.apply_rollup_batch's batch-id
-guard for exactly-once sinks).
+(same doc_id rows; pair with the ``VersionedTable.batch_applied``
+batch-id guard for exactly-once sinks).
 """
 
 from __future__ import annotations
@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.dedup import lsh_admission_verdict, probe_bands
+from ..sinks import start_available_now
+from .rollup import _file_stream
 
 DOC_SCHEMA = StructType(
     [
@@ -98,15 +100,6 @@ def streaming_lsh_admission(
             .parquet(out_dir)
         )
 
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir, DOC_SCHEMA), _admit, checkpoint_dir
     )

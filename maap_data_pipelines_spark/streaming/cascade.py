@@ -76,8 +76,10 @@ from ..operators.dedup import (
     probe_bands,
 )
 from ..operators.text import quality_filter
+from ..sinks import start_available_now
 from ..table import VersionedTable
 from .admission import DOC_SCHEMA
+from .rollup import _file_stream
 
 #: meta key guarding the additive df merge (namespaced — table.py meta
 #: merges across commits, so unrelated writers cannot reset it)
@@ -420,8 +422,7 @@ def streaming_curation_cascade(
         # NOT idempotent (re-adding double-counts), so a replay whose id
         # does not exceed the recorded high-water mark skips the merge —
         # its verdicts above already read the versioned pre-batch snapshot.
-        last = dft.latest_meta().get(DF_BATCH_KEY)
-        if last is None or batch_id > last:
+        if not dft.batch_applied(DF_BATCH_KEY, batch_id):
             dft.merge_aggregate(
                 batch_sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")),
                 keys=["sh"],
@@ -429,15 +430,6 @@ def streaming_curation_cascade(
                 meta={DF_BATCH_KEY: batch_id},
             )
 
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir, DOC_SCHEMA), _one_batch, checkpoint_dir
     )

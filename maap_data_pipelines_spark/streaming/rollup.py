@@ -15,6 +15,13 @@ Design notes for a real cluster:
   stream; HLL is the standard streaming answer (documented deviation).
 * File-source trigger ``availableNow`` lets the same query run as an
   incremental batch (used by tests and backfills).
+
+The package's streams share four pieces, each written once: the reader
+:func:`_file_stream` (one file per micro-batch), the starter
+``sinks.start_available_now`` (foreachBatch, availableNow, checkpoint),
+the replay guard ``VersionedTable.batch_applied`` (batch id in the state
+table's manifest meta; warns when a deleted checkpoint restarts the ids)
+and the prior read :func:`_state_or_empty` (empty before the first commit).
 """
 
 from __future__ import annotations
@@ -30,6 +37,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sinks import start_available_now
+
 EVENT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -42,16 +51,37 @@ EVENT_SCHEMA = StructType(
 )
 
 
-def streaming_hourly_rollup(
-    spark: SparkSession, source_dir: str, fmt: str = "json"
+def _file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType = EVENT_SCHEMA,
+    fmt: str = "json",
 ) -> DataFrame:
-    """Streaming DataFrame: hourly tumbling window counts + exact cents."""
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
+    """Streaming read of ``source_dir``, one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
         .format(fmt)
         .option("maxFilesPerTrigger", 1)
         .load(source_dir)
     )
+
+
+def _state_or_empty(spark: SparkSession, table, schema: str) -> DataFrame:
+    """The state table's latest snapshot, or an empty frame of ``schema``
+    (the table's own schema) before its first commit."""
+    if table.latest_version() is None:
+        # LIMIT 0 plans as an empty LocalRelation, which the optimizer
+        # folds out of the joins and unions it feeds; an empty
+        # createDataFrame alone is an RDD scan it cannot see through
+        return spark.createDataFrame([], schema).limit(0)
+    return table.read(spark)
+
+
+def streaming_hourly_rollup(
+    spark: SparkSession, source_dir: str, fmt: str = "json"
+) -> DataFrame:
+    """Streaming DataFrame: hourly tumbling window counts + exact cents."""
+    stream = _file_stream(spark, source_dir, fmt=fmt)
     return (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -82,12 +112,7 @@ def streaming_sliding_trend(
     and live (stream) produces seamless window series. Distinct users are
     approximate here: exact distincts are unbounded streaming state.
     """
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format(fmt)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, fmt=fmt)
     return (
         stream.withWatermark("ts", "2 hours")
         .groupBy(
@@ -118,12 +143,7 @@ def streaming_sessionize(
     the gap-merge state machine natively, so no Python state handler is
     needed.
     """
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format(fmt)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, fmt=fmt)
     return (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.session_window(F.col("ts"), gap).alias("sw"), "user_id")
@@ -155,12 +175,7 @@ def streaming_dedup(
     through (they belong to batch reconciliation, e.g.
     ``dedup_incremental``).
     """
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format(fmt)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, fmt=fmt)
     content_hash = F.md5(
         F.concat_ws(
             "\x1f",
@@ -245,12 +260,7 @@ def streaming_click_attribution_outer(
 def _attribution_join(
     spark: SparkSession, source_dir: str, fmt: str, how: str
 ) -> DataFrame:
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format(fmt)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, fmt=fmt)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -314,12 +324,7 @@ def streaming_enriched_rollup(
     dimension so the planner can pick a shuffle-side strategy instead of
     forcing a broadcast that would OOM the driver.
     """
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format(fmt)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, fmt=fmt)
     dim_side = F.broadcast(dim) if broadcast_dim else dim
     return (
         stream.join(dim_side, "user_id")
@@ -350,19 +355,16 @@ def streaming_cms_merge(
     keys chosen AFTER ingestion (what Misra-Gries candidates cannot do).
 
     Exactly-once per the rollup-stream contract: the applied batch id
-    rides the table meta under a namespaced guard
-    (``pipelines.apply_rollup_batch`` pattern) — merge_aggregate is
-    additive, so a replayed batch must skip, not re-add.
+    rides the table meta under the namespaced guard
+    ``VersionedTable.batch_applied`` — merge_aggregate is additive, so a
+    replayed batch must skip, not re-add.
     tests pin stream-merged cells == one-shot batch cells bit-for-bit.
     """
     from ..operators.sketch import CMS_D, _cms_bucket_spark
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_df.isEmpty() or table.batch_applied("cms_batch_id", batch_id):
             return
-        last = table.latest_meta().get("cms_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replay: the additive merge must not double-count
         cells = (
             batch_df.select(F.col(key_col).alias("k"))
             .select(
@@ -387,17 +389,8 @@ def streaming_cms_merge(
             meta={"cms_batch_id": batch_id},
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -421,18 +414,13 @@ def streaming_gap_stats(
     (pinned); exactly-once via the namespaced applied-batch-id guard
     (additive state must skip replays).
     """
-    from pyspark.sql.window import Window
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = table.latest_meta().get("gap_batch_id")
-        if last is not None and batch_id <= last:
+        if batch_df.isEmpty() or table.batch_applied("gap_batch_id", batch_id):
             return
         ev = batch_df.select(
             "user_id", "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")
         )
-        w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
         gaps = ev.withColumn(
             "g", F.expr("(ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)) div 1000000")
         )
@@ -443,18 +431,15 @@ def streaming_gap_stats(
             F.min("ts_us").alias("first_ts"),
             F.max("ts_us").alias("last_ts_b"),
         )
-        if table.latest_version() is not None:
-            prior = table.read(spark).select(
-                "user_id",
-                F.col("n_gaps").alias("n_p"),
-                F.col("sg").alias("sg_p"),
-                F.col("sg2").alias("sg2_p"),
-                F.col("last_ts_us").alias("last_p"),
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "user_id long, n_p long, sg_p long, sg2_p long, last_p long"
-            )
+        prior = _state_or_empty(
+            spark, table, "user_id long, n_gaps long, sg long, sg2 long, last_ts_us long"
+        ).select(
+            "user_id",
+            F.col("n_gaps").alias("n_p"),
+            F.col("sg").alias("sg_p"),
+            F.col("sg2").alias("sg2_p"),
+            F.col("last_ts_us").alias("last_p"),
+        )
         j = internal.join(prior, "user_id", "left")
         bg = F.expr("(first_ts - last_p) div 1000000")  # boundary gap (s)
         has_prior = F.col("last_p").isNotNull()
@@ -481,17 +466,8 @@ def streaming_gap_stats(
         # applied-batch-id and merged rows become visible atomically)
         table.merge_upsert(merged, key="user_id", meta={"gap_batch_id": batch_id})
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -538,10 +514,7 @@ def streaming_gap_histogram(
     """
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = table.latest_meta().get("gaphist_batch_id")
-        if last is not None and batch_id <= last:
+        if batch_df.isEmpty() or table.batch_applied("gaphist_batch_id", batch_id):
             return
         ev = batch_df.select(
             "user_id",
@@ -559,21 +532,20 @@ def streaming_gap_histogram(
             F.min("ts_us").alias("first_ts"),
             F.max("ts_us").alias("last_ts_b"),
         )
-        if table.latest_version() is not None:
-            prior = table.read(spark)
-            cursors = prior.filter(F.col("kind") == "last").select(
-                F.col("user_id").alias("u_p"), F.col("last_ts_us").alias("last_p")
-            )
-            hist_prior = prior.filter(F.col("kind") == "hist").select(
-                F.col("g").alias("g_p"), F.col("cnt").alias("c_p")
-            )
-            late_prior = prior.filter(F.col("kind") == "late").select(
-                F.col("cnt").alias("l_p")
-            )
-        else:
-            cursors = spark.createDataFrame([], "u_p long, last_p long")
-            hist_prior = spark.createDataFrame([], "g_p long, c_p long")
-            late_prior = spark.createDataFrame([], "l_p long")
+        prior = _state_or_empty(
+            spark,
+            table,
+            "key string, kind string, g long, cnt long, user_id long, last_ts_us long",
+        )
+        cursors = prior.filter(F.col("kind") == "last").select(
+            F.col("user_id").alias("u_p"), F.col("last_ts_us").alias("last_p")
+        )
+        hist_prior = prior.filter(F.col("kind") == "hist").select(
+            F.col("g").alias("g_p"), F.col("cnt").alias("c_p")
+        )
+        late_prior = prior.filter(F.col("kind") == "late").select(
+            F.col("cnt").alias("l_p")
+        )
         # A late batch (events older than a user's persisted cursor)
         # makes the boundary gap NEGATIVE; folded in it would bucket to
         # negative minutes and silently corrupt the histogram the
@@ -651,17 +623,8 @@ def streaming_gap_histogram(
             meta={"gaphist_batch_id": batch_id},
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -702,18 +665,12 @@ def streaming_ab_state(
     from ..plans.events import ab_user_conversions
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = table.latest_meta().get("ab_batch_id")
-        if last is not None and batch_id <= last:
+        if batch_df.isEmpty() or table.batch_applied("ab_batch_id", batch_id):
             return
         flags = ab_user_conversions(batch_df).withColumnRenamed("conv", "conv_b")
-        if table.latest_version() is not None:
-            prior = table.read(spark).select(
-                "user_id", F.col("conv").alias("conv_p")
-            )
-        else:
-            prior = spark.createDataFrame([], "user_id long, conv_p long")
+        prior = _state_or_empty(spark, table, "user_id long, conv long").select(
+            "user_id", F.col("conv").alias("conv_p")
+        )
         merged = (
             flags.join(prior, "user_id", "left")
             .select(
@@ -725,17 +682,8 @@ def streaming_ab_state(
         )
         table.merge_upsert(merged, key="user_id", meta={"ab_batch_id": batch_id})
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -800,11 +748,8 @@ def streaming_theta_merge(
             .cast("long")
             .alias("h"),
         ).distinct()
-        try:
-            state = table.read(spark).select("event_type", "h")
-            allr = bs.union(state).distinct()
-        except ValueError:  # first batch: empty table
-            allr = bs
+        state = _state_or_empty(spark, table, "event_type string, h long")
+        allr = bs.union(state.select("event_type", "h")).distinct()
         sk = (
             allr.withColumn(
                 "rn",
@@ -819,17 +764,8 @@ def streaming_theta_merge(
         # snapshot's files (commit never touches existing data dirs)
         table.commit(sk, mode="overwrite", meta={"theta_batch_id": batch_id})
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -862,10 +798,7 @@ def streaming_markov_state(
     from pyspark.sql.window import Window
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = table.latest_meta().get("markov_batch_id")
-        if last is not None and batch_id <= last:
+        if batch_df.isEmpty() or table.batch_applied("markov_batch_id", batch_id):
             return
         ev = batch_df.withColumn(
             "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
@@ -886,65 +819,48 @@ def streaming_markov_state(
             )
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        try:
-            prior = table.read(spark)
-        except ValueError:
-            prior = None
-        pieces = [internal]
-        if prior is not None:
-            carry = prior.filter(F.col("dst").isNull()).select(
-                F.col("c").alias("user_id"), F.col("src").alias("last_type")
+        prior = _state_or_empty(spark, table, "src string, dst string, c long")
+        carry = prior.filter(F.col("dst").isNull())
+        firsts = seq.filter(F.col("rn") == 1).select(
+            "user_id", F.col("event_type").alias("first_type")
+        )
+        boundary = (
+            firsts.join(
+                carry.select(
+                    F.col("c").alias("user_id"), F.col("src").alias("last_type")
+                ),
+                "user_id",
             )
-            firsts = seq.filter(F.col("rn") == 1).select(
-                "user_id", F.col("event_type").alias("first_type")
+            .groupBy(
+                F.col("last_type").alias("src"), F.col("first_type").alias("dst")
             )
-            pieces.append(
-                firsts.join(carry, "user_id")
-                .groupBy(
-                    F.col("last_type").alias("src"),
-                    F.col("first_type").alias("dst"),
-                )
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            pieces.append(prior.filter(F.col("dst").isNotNull()))
-        acc = pieces[0]
-        for extra in pieces[1:]:
-            acc = acc.unionByName(extra)
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
         new_counts = (
-            acc.groupBy("src", "dst").agg(F.sum("c").alias("c"))
-            if len(pieces) > 1
-            else acc
+            internal.unionByName(boundary)
+            .unionByName(prior.filter(F.col("dst").isNotNull()))
+            .groupBy("src", "dst")
+            .agg(F.sum("c").alias("c"))
         )
         lasts = seq.filter(F.col("rn") == F.col("n_u")).select(
             F.col("event_type").alias("src"),
             F.lit(None).cast("string").alias("dst"),
             F.col("user_id").cast("long").alias("c"),
         )
-        carries = lasts
-        if prior is not None:
-            stale = prior.filter(F.col("dst").isNull()).join(
-                lasts.select(F.col("c").alias("uid")),
-                F.col("c") == F.col("uid"),
-                "left_anti",
-            )
-            carries = stale.unionByName(lasts)
+        stale = carry.join(
+            lasts.select(F.col("c").alias("uid")),
+            F.col("c") == F.col("uid"),
+            "left_anti",
+        )
+        carries = stale.unionByName(lasts)
         table.commit(
             new_counts.unionByName(carries),
             mode="overwrite",
             meta={"markov_batch_id": batch_id},
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -970,10 +886,7 @@ def streaming_cusum_state(
     """
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = table.latest_meta().get("cusum_batch_id")
-        if last is not None and batch_id <= last:
+        if batch_df.isEmpty() or table.batch_applied("cusum_batch_id", batch_id):
             return
         hourly = (
             batch_df.withColumn(
@@ -994,17 +907,8 @@ def streaming_cusum_state(
             meta={"cusum_batch_id": batch_id},
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 
@@ -1038,9 +942,10 @@ def streaming_cuped_state(
     the set of applied source files rides the same atomic manifest
     commit as the merged sums, and each micro-batch admits only rows
     from files not yet in that set. This is strictly stronger than the
-    ST18 batch-id guard — after a checkpoint loss, a restart over an
-    EXTENDED source directory re-numbers batches from 0, and an id
-    compare would silently drop the genuinely new files; the file set
+    batch-id guard the other sinks use (``VersionedTable.batch_applied``)
+    — after a checkpoint loss, a restart over an EXTENDED source
+    directory re-numbers batches from 0, and an id compare would drop
+    the genuinely new files (it warns, but skips them); the file set
     distinguishes replayed data (skipped) from new data (admitted).
     ``cuped_batch_id`` is still recorded (monotone max) for
     observability. The file list grows with the source directory — at
@@ -1082,17 +987,8 @@ def streaming_cuped_state(
             },
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format("json")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        _file_stream(spark, source_dir), _one_batch, checkpoint_dir
     )
 
 

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans.events import SESSION_GAP_US
-from .rollup import EVENT_SCHEMA
+from .rollup import EVENT_SCHEMA, _file_stream
 
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, "
@@ -109,14 +109,9 @@ def streaming_sessionize_stateful(
     spark: SparkSession, source_dir: str, fmt: str = "json"
 ) -> DataFrame:
     """Streaming DataFrame of CLOSED sessions with close provenance."""
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .format(fmt)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
     return (
-        stream.withWatermark("ts", "2 hours")
+        _file_stream(spark, source_dir, fmt=fmt)
+        .withWatermark("ts", "2 hours")
         .groupBy("user_id")
         .applyInPandasWithState(
             _sessionize_group,
@@ -151,8 +146,6 @@ def user_lifetime_totals(spark: SparkSession, source_dir: str) -> DataFrame:
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
     import pandas as pd
-
-    from .rollup import EVENT_SCHEMA
 
     class UserTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:

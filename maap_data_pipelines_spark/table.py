@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
@@ -76,6 +77,32 @@ class VersionedTable:
     def latest_meta(self) -> dict:
         v = self.latest_version()
         return {} if v is None else self._load(v).get("meta", {})
+
+    def batch_applied(self, key: str, batch_id: int) -> bool:
+        """Whether stream batch ``batch_id`` was already applied under the
+        meta guard ``key``: the replay guard of every micro-batch sink.
+
+        A sink commits its id under its own namespaced ``key`` in the
+        manifest that publishes the batch's rows, so a replayed batch
+        (re-delivery after a crash) finds it and must skip: re-adding is
+        not idempotent. An id BELOW the recorded mark means the stream's
+        checkpoint was deleted (ids restart at 0) and every new batch
+        will be skipped, so that case warns.
+        """
+        last = self.latest_meta().get(key)
+        if last is None or batch_id > last:
+            return False
+        if batch_id < last:
+            warnings.warn(
+                f"{key}: batch_id {batch_id} < recorded high-water mark "
+                f"{last} — was the stream checkpoint deleted? All batches "
+                f"will be skipped until ids pass {last}; clear the guard "
+                f"via table.commit(df, meta={{{key!r}: None}}) — a None "
+                "meta value deletes the key — to resume (and expect a "
+                "full backfill).",
+                stacklevel=3,
+            )
+        return True
 
     def meta_of(self, version: int) -> dict:
         """Meta of a specific retained version (time-travel companion to

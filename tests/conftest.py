@@ -9,16 +9,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-
-def last_job_id(spark) -> int:
-    """Id of the newest Spark job, after the listener bus has drained.
-
-    Job counts in the tests are deltas of this id around a call. Without
-    the drain, the status tracker can miss jobs the call just started.
-    """
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+from maap_data_pipelines_spark.session import last_job_id  # noqa: E402,F401
 
 
 @pytest.fixture(scope="session")

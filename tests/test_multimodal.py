@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -920,4 +922,68 @@ def test_phash_udf_matches_relational_form(spark):
     new = base.select("doc_id", _phash_udf(F.col("s")).alias("phash"))
     assert {r.doc_id: r.phash for r in new.collect()} == {
         r.doc_id: r.phash for r in old.collect()
+    }
+
+
+def test_media_phash_oracles_bite_on_crafted_documents(spark, sf_dir, tmp_path):
+    """The registered pHash keys return no rows on the shipped test data,
+    so their oracle parity compares two empty tables. On a corpus with
+    pairs both keys match their oracles: an identical pair (docs 1, 2), a
+    one-char edit (3 -> 4, Hamming 1) chained to a three-char edit
+    (4 -> 5, Hamming 3) whose ends are 4 bits apart and so join only
+    through doc 4, and one unrelated doc (6)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maap_data_pipelines_spark.operators.multimodal import (
+        MEDIA_PHASH_CLUSTERS_SQL,
+        MEDIA_PHASH_DEDUP_SQL,
+    )
+    from maap_data_pipelines_spark.oracle import compare
+    from maap_data_pipelines_spark.plans.multimodal import (
+        media_phash,
+        media_phash_clusters,
+    )
+    from maap_data_pipelines_spark.sources.catalog import TABLES
+
+    def edit(s, *at):
+        return "".join(" " if i in at else c for i, c in enumerate(s))
+
+    pair = (
+        "sphinx of black quartz judge my vow while five boxing wizards "
+        "jump quickly over the lazy dogs at dawn"
+    )
+    chain = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+        "kilo lima mike november oscar papa quebec romeo sierra tango"
+    )
+    texts = [pair, pair, chain, edit(chain, 0), edit(chain, 0, 2, 4, 6), "0123456789" * 12]
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": ["src0"] * len(texts),
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    sf = str(tmp_path)
+
+    pairs = media_phash(spark, sf)
+    assert compare(pairs, MEDIA_PHASH_DEDUP_SQL, sf) == []
+    assert {(r.doc_a, r.doc_b): r.hamming for r in pairs.collect()} == {
+        (1, 2): 0,
+        (3, 4): 1,
+        (4, 5): 3,
+    }
+    clusters = media_phash_clusters(spark, sf)
+    assert compare(clusters, MEDIA_PHASH_CLUSTERS_SQL, sf) == []
+    assert {r.doc_id: r.cluster_id for r in clusters.collect()} == {
+        1: 1, 2: 1, 3: 3, 4: 3, 5: 3,
     }

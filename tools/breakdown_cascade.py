@@ -18,9 +18,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from maap_data_pipelines_spark.operators import curation, dedup, text  # noqa: E402
 from maap_data_pipelines_spark.plans import llm  # noqa: E402
-from maap_data_pipelines_spark.session import get_spark  # noqa: E402
+from maap_data_pipelines_spark.session import get_spark, last_job_id  # noqa: E402
 from maap_data_pipelines_spark.sources.catalog import fan_out, read_table  # noqa: E402
-from profile_query import _last_job_id  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 
@@ -62,12 +61,12 @@ def main() -> int:
         walls, jobs = [], []
         for _ in range(reps):
             spark.catalog.clearCache()
-            n0 = _last_job_id(sc)
+            n0 = last_job_id(spark)
             t0 = time.time()
             sc.setJobDescription(f"breakdown:{name}")
             build().write.format("noop").mode("overwrite").save()
             walls.append(time.time() - t0)
-            jobs.append(_last_job_id(sc) - n0)
+            jobs.append(last_job_id(spark) - n0)
         walls.sort()
         med = walls[len(walls) // 2]
         print(

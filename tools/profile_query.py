@@ -43,7 +43,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from maap_data_pipelines_spark import registry  # noqa: E402
-from maap_data_pipelines_spark.session import get_spark  # noqa: E402
+from maap_data_pipelines_spark.session import get_spark, last_job_id  # noqa: E402
 
 
 class _Py4jCounter:
@@ -78,22 +78,16 @@ def _normalise_plan(text: str) -> str:
     return text
 
 
-def _last_job_id(sc) -> int:
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
-
-
 def profile(spark, fn, sf: str, py4j: _Py4jCounter) -> dict:
     """One build span and one execute span of a registered query."""
-    sc = spark.sparkContext
-    j0, c0, t0 = _last_job_id(sc), py4j.n, time.perf_counter()
+    j0, c0, t0 = last_job_id(spark), py4j.n, time.perf_counter()
     df = fn(spark, sf)
     t1 = time.perf_counter()
     c1 = py4j.n
-    j1 = _last_job_id(sc)
+    j1 = last_job_id(spark)
     df.toArrow()
     t2 = time.perf_counter()
-    j2 = _last_job_id(sc)
+    j2 = last_job_id(spark)
     return {
         "build_s": round(t1 - t0, 3),
         "build_jobs": j1 - j0,
