@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from .text import ngram_windows
+
 # Ordered merge table (highest priority first) — a frozen model artifact.
 MERGES: tuple[tuple[str, str], ...] = (
     ("t", "h"),
@@ -193,16 +195,8 @@ def train_bpe(docs: DataFrame, n_merges: int = TRAIN_MERGES) -> DataFrame:
     learned = []
     for rank in range(n_merges):
         pairs = (
-            vocab.select(
-                "n",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1).alias("a"),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1).alias("b"),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            vocab.select("n", F.explode(ngram_windows(F.col("syms"), 2)).alias("p"))
+            .groupBy(F.col("p.w0").alias("a"), F.col("p.w1").alias("b"))
             .agg(F.sum("n").alias("c"))
         )
         top = pairs.orderBy(F.desc("c"), "a", "b").limit(1).collect()

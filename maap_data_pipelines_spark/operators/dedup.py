@@ -40,6 +40,7 @@ from ..functions.joins import corpus_rows as _corpus_rows
 from ..functions.joins import materialize as _materialize
 from ..functions.joins import run_chains as _run_chains
 from ..functions.joins import scale_pin as _scale_pin
+from .text import ngram_lists_sql
 
 NUM_PERM = 64
 BANDS = 16
@@ -56,8 +57,11 @@ _COEFFS = minhash_coeffs(NUM_PERM)
 
 # --- shared shingle expressions -------------------------------------------
 # Spark SQL and DuckDB renderings of: 3-word shingles of split(text, ' ').
-# Spark `sequence(1, n)` DESCENDS when n < 1, so the empty case needs an
-# explicit guard; DuckDB `range(1, x)` is already empty for x <= 1.
+# The Spark side keeps its transform() lambda instead of text.ngram_windows:
+# on dedup_token_savings (sf0.1, local[4], 10 interleaved rounds) it took
+# 3.19 s median (2.94-4.36 s) against 3.62 s (3.09-4.38 s) for the window
+# kernel. Spark `sequence(1, n)` DESCENDS when n < 1, so the empty case
+# needs an explicit guard.
 
 _SPARK_SHINGLES = (
     "CASE WHEN size(w) < 3 THEN array() "
@@ -65,8 +69,7 @@ _SPARK_SHINGLES = (
     "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))) END"
 )
 _DUCK_SHINGLES = (
-    "list_transform(range(1, greatest(len(w) - 1, 1)), "
-    "i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2])"
+    f"list_transform({ngram_lists_sql('w', 3)}, g -> array_to_string(g, ' '))"
 )
 
 _DUCK_WORDS = "SELECT doc_id, string_split(text, ' ') AS w FROM documents"

@@ -23,9 +23,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_long, md5_long_sql
+from ..operators.curation import (
+    SPLIT_BUCKET_SQL,
+    SPLIT_NAME_SQL,
+    split_bucket,
+    split_name,
+)
 from ..operators.entity import ER_SQL, er_dirty_records, resolve_entities
 from ..functions.zorder import zorder_key, zorder_key_sql
 from ..operators.profile import profile_columns, profile_sql
+from ..operators.text import _LNM, words_col
 from ..sources.catalog import fan_out, read_table
 
 ORDERS_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority"]
@@ -74,10 +81,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-SPLIT_TRAIN_PCT = 80
-SPLIT_VAL_PCT = 10  # test gets the remainder
-
-
 def doc_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test assignment per document.
 
@@ -86,26 +89,16 @@ def doc_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (contamination-safe), unlike RNG sampling seeded per-partition.
     """
     docs = read_table(spark, sf_dir, "documents")
-    bucket = F.pmod(md5_long(F.concat(F.lit("split:"), F.col("doc_id"))), F.lit(100))
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-    )
+    bucket = split_bucket()
     return docs.select(
-        "doc_id", "source", bucket.alias("bucket"), split.alias("split")
+        "doc_id", "source", bucket.alias("bucket"), split_name(bucket).alias("split")
     )
 
-
-_split_hash = md5_long_sql("'split:' || doc_id")
-_BUCKET_SQL = f"(({_split_hash}) % 100 + 100) % 100"
 
 DOC_SPLIT_SQL = f"""
 SELECT doc_id, source,
-       {_BUCKET_SQL} AS bucket,
-       CASE WHEN {_BUCKET_SQL} < {SPLIT_TRAIN_PCT} THEN 'train'
-            WHEN {_BUCKET_SQL} < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-            ELSE 'test' END AS split
+       {SPLIT_BUCKET_SQL} AS bucket,
+       {SPLIT_NAME_SQL} AS split
 FROM documents
 """
 
@@ -3479,18 +3472,13 @@ def doc_split_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one exploded-token groupBy (term, split) — map-side
     combined, vocabulary-bounded — then a vocab-row reduce.
     """
-    from ..operators.text import words_col
-
     docs = read_table(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        md5_long(F.concat(F.lit("split:"), F.col("doc_id"))), F.lit(100)
-    )
-    split = F.when(bucket < SPLIT_TRAIN_PCT, "train").when(
-        bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val"
-    )
     toks = (
-        docs.select(split.alias("split"), F.explode(words_col(F.lower(F.col("text")))).alias("t"))
-        .filter(F.col("split").isNotNull())
+        docs.select(
+            split_name(split_bucket()).alias("split"),
+            F.explode(words_col(F.lower(F.col("text")))).alias("t"),
+        )
+        .filter(F.col("split") != "test")
         .groupBy("t")
         .agg(
             F.sum(F.when(F.col("split") == "train", 1).otherwise(0)).alias("a"),
@@ -3498,14 +3486,13 @@ def doc_split_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tot = toks.agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
-    lnm = "CAST(FLOOR(1000 * ln({})) AS BIGINT)"
     terms = toks.crossJoin(F.broadcast(tot)).select(
         "a",
         "b",
         F.when(
             F.col("a") > 0,
             F.expr(
-                f"a * ({lnm.format('2 * a * tb')} - {lnm.format('a * tb + b * ta')})"
+                f"a * ({_LNM.format('2 * a * tb')} - {_LNM.format('a * tb + b * ta')})"
             ),
         )
         .otherwise(F.lit(0))
@@ -3513,7 +3500,7 @@ def doc_split_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("b") > 0,
             F.expr(
-                f"b * ({lnm.format('2 * b * ta')} - {lnm.format('a * tb + b * ta')})"
+                f"b * ({_LNM.format('2 * b * ta')} - {_LNM.format('a * tb + b * ta')})"
             ),
         )
         .otherwise(F.lit(0))
@@ -3535,32 +3522,24 @@ def doc_split_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JS_BUCKET = _BUCKET_SQL
-_JS_LNM = "CAST(FLOOR(1000 * ln({})) AS BIGINT)"
-
 DOC_SPLIT_JS_SQL = f"""
-WITH assigned AS (
-  SELECT CASE WHEN {_JS_BUCKET} < {SPLIT_TRAIN_PCT} THEN 'train'
-              WHEN {_JS_BUCKET} < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-         END AS split, text
-  FROM documents
-),
+WITH assigned AS (SELECT {SPLIT_NAME_SQL} AS split, text FROM documents),
 toks AS (
   SELECT t,
          SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS a,
          SUM(CASE WHEN split = 'val' THEN 1 ELSE 0 END) AS b
   FROM (SELECT split, unnest(string_split(lower(text), ' ')) AS t
-        FROM assigned WHERE split IS NOT NULL)
+        FROM assigned WHERE split <> 'test')
   GROUP BY t
 ),
 tot AS (SELECT SUM(a) AS ta, SUM(b) AS tb FROM toks),
 terms AS (
   SELECT a, b,
-         CASE WHEN a > 0 THEN a * ({_JS_LNM.format("2 * a * tb")}
-                                 - {_JS_LNM.format("a * tb + b * ta")})
+         CASE WHEN a > 0 THEN a * ({_LNM.format("2 * a * tb")}
+                                 - {_LNM.format("a * tb + b * ta")})
               ELSE 0 END AS kl_p,
-         CASE WHEN b > 0 THEN b * ({_JS_LNM.format("2 * b * ta")}
-                                 - {_JS_LNM.format("a * tb + b * ta")})
+         CASE WHEN b > 0 THEN b * ({_LNM.format("2 * b * ta")}
+                                 - {_LNM.format("a * tb + b * ta")})
               ELSE 0 END AS kl_q
   FROM toks CROSS JOIN tot
 ),

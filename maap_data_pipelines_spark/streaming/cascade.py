@@ -66,7 +66,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
-from ..operators.curation import NOVELTY_NGRAM, _shingle_rows
 from ..operators.dedup import (
     CONTAIN_MIN,
     NGRAM_MAX_DF,
@@ -79,7 +78,7 @@ from ..operators.text import quality_filter
 from ..sinks import start_available_now
 from ..table import VersionedTable
 from .admission import DOC_SCHEMA
-from .rollup import _file_stream
+from .rollup import _empty_state, _file_stream
 
 #: meta key guarding the additive df merge (namespaced — table.py meta
 #: merges across commits, so unrelated writers cannot reset it)
@@ -112,7 +111,7 @@ def _read_state(
     With the filter, a replay sees exactly the pre-crash state and
     rewrites identical rows (the idempotency contract)."""
     if not _state_exists(spark, path):
-        return spark.createDataFrame([], schema)
+        return _empty_state(spark, schema)
     return (
         spark.read.parquet(path)
         .filter(F.col("batch_id") < batch_id)
@@ -273,12 +272,9 @@ def _cascade_verdicts(
     )
     contained = _containment_stage(postings, doc_sizes, batch_sh, df_prior)
 
-    # 5. stale — novelty vs state pioneer set + intra-batch pioneers
-    doc_g = (
-        _shingle_rows(docs, NOVELTY_NGRAM)
-        .select("doc_id", md5_long(F.col("shingle")).alias("g"))
-        .distinct()
-    )
+    # 5. stale — novelty vs state pioneer set + intra-batch pioneers;
+    # novelty's 3-gram hashes are the containment shingle hashes
+    doc_g = batch_sh.withColumnRenamed("sh", "g")
     # a gram pioneered in batch i re-appears in batch j's append: dedup
     # across partitions or the left join multiplies doc_g rows, inflating
     # n_shingles and deflating novelty for later docs
@@ -369,7 +365,7 @@ def streaming_curation_cascade(
         df_prior = (
             dft.read(spark, dfv)
             if dfv is not None
-            else spark.createDataFrame([], "sh long, df long")
+            else _empty_state(spark, "sh long, df long")
         )
 
         verdicts = _cascade_verdicts(
@@ -403,7 +399,7 @@ def streaming_curation_cascade(
             _shingles_df(docs)
             .select("doc_id", md5_long(F.col("s")).alias("sh"))
             .distinct()
-            .localCheckpoint()  # feeds postings, doc_sizes AND the df merge
+            .localCheckpoint()  # feeds postings, doc_sizes, grams AND the df merge
         )
         _append_state(batch_sh, f"{state_dir}/postings", batch_id)
         _append_state(
@@ -412,9 +408,7 @@ def streaming_curation_cascade(
             batch_id,
         )
         _append_state(
-            _shingle_rows(docs, NOVELTY_NGRAM)
-            .select(md5_long(F.col("shingle")).alias("g"))
-            .distinct(),
+            batch_sh.select(F.col("sh").alias("g")).distinct(),
             f"{state_dir}/grams",
             batch_id,
         )

@@ -66,14 +66,19 @@ def _file_stream(
     )
 
 
+def _empty_state(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty state frame of ``schema``, for reads before a first write."""
+    # LIMIT 0 plans as an empty LocalRelation, which the optimizer folds
+    # out of the joins and unions it feeds; an empty createDataFrame
+    # alone is an RDD scan it cannot see through
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def _state_or_empty(spark: SparkSession, table, schema: str) -> DataFrame:
     """The state table's latest snapshot, or an empty frame of ``schema``
     (the table's own schema) before its first commit."""
     if table.latest_version() is None:
-        # LIMIT 0 plans as an empty LocalRelation, which the optimizer
-        # folds out of the joins and unions it feeds; an empty
-        # createDataFrame alone is an RDD scan it cannot see through
-        return spark.createDataFrame([], schema).limit(0)
+        return _empty_state(spark, schema)
     return table.read(spark)
 
 

@@ -622,3 +622,72 @@ def test_novelty_shared_index_matches_standalone(spark, sf_dir):
         doc_ngram_novelty(docs, shd_docs=shd).collect(),
         key=key,
     ) == sorted(doc_ngram_novelty(docs).collect(), key=key)
+
+
+def test_short_documents_yield_no_ngrams(spark, sf_dir, tmp_path):
+    """Documents shorter than n words have no n-gram windows: the empty,
+    1-, 2- and 3-word docs run through every n-gram operator (n = 2, 3,
+    5, 10) without a ``slice`` length error, each operator matches its
+    oracle, and a doc appears only where it has at least one window.
+    The crafted corpus is written as ``documents.parquet`` beside the
+    other tables of ``sf_dir``."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from maap_data_pipelines_spark.oracle import compare
+    from maap_data_pipelines_spark.sources.catalog import TABLES, read_table
+
+    shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    short = {11: "", 22: "solo", 5: "two words", 6: "three word doc"}
+    texts = {}
+    for k in range(1, 34):
+        body = f"t{k} u{k} v{k} w{k} x{k} y{k}"
+        if k % 4 == 1 or k == 33:
+            body += " " + shared
+        texts[k] = short.get(k, f"{body} end{k} stop{k}")
+    texts[7] = "a b a b a b a b a b c"
+    ids = sorted(texts)
+    n_words = {k: len(texts[k].split(" ")) for k in ids}
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": [texts[k] for k in ids],
+                "lang": ["en"] * len(ids),
+                "source": ["src0"] * len(ids),
+                "n_chars": pa.array([len(texts[k]) for k in ids], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    sf = str(tmp_path)
+    docs = read_table(spark, sf, "documents")
+
+    for n in (2, 3, 5, 10):
+        got = dict(
+            curation._shingle_rows(docs, n).groupBy("doc_id").count().collect()
+        )
+        assert got == {k: n_words[k] - n + 1 for k in ids if n_words[k] >= n}, n
+
+    cases = [
+        (curation.decontaminate, curation.DECONTAMINATE_SQL, curation.DECON_NGRAM),
+        (curation.dup_ngram_mass, curation.DUP_NGRAM_MASS_SQL, curation.DUP_SPAN_NGRAM),
+        (curation.dup_span_removal, curation.DUP_SPAN_REMOVAL_SQL, curation.DUP_SPAN_NGRAM),
+        (curation.split_leakage, curation.SPLIT_LEAKAGE_SQL, curation.DECON_NGRAM),
+        (curation.doc_ngram_novelty, curation.DOC_NGRAM_NOVELTY_SQL, curation.NOVELTY_NGRAM),
+        (curation.repetition_stats, curation.REPETITION_STATS_SQL, 2),
+    ]
+    for op, sql, n in cases:
+        out = op(docs)
+        assert compare(out, sql, sf) == [], op.__name__
+        seen = {r.doc_id for r in out.select("doc_id").distinct().collect()}
+        assert seen, op.__name__  # the oracle comparison is not over nothing
+        assert not {k for k in seen if n_words[k] < n}, op.__name__
+    nov = curation.doc_ngram_novelty(docs).filter(F.col("doc_id") == 6).collect()
+    assert [r.n_shingles for r in nov] == [1]  # the 3-word doc's one 3-gram

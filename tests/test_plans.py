@@ -565,7 +565,9 @@ def test_platt_plan_runs_on_checkpointed_deciles(spark, sf_dir):
 # curation and candidate-graph plans (dedup, media pHash, entity
 # resolution) keep their eager checkpoints and fixpoint loops. The
 # PQ and k-means ANN keys train their quantizer at build time (the PQ
-# codebooks, the k-means centroids), one collect per round.
+# codebooks, the k-means centroids), one collect per round; so does the
+# BPE trainer (one argmax collect per merge), and the MMR pool's
+# eager=False checkpoints run their shuffle stages at build.
 BUILD_JOB_BUDGETS = {
     "q3_shipping_priority": 0,
     "events_sessionize": 0,
@@ -588,6 +590,26 @@ BUILD_JOB_BUDGETS = {
     "dedup_pagerank": 7,
     "media_phash_clusters": 3,
     "customer_entity_resolution": 18,
+    "decontaminate": 0,
+    "repetition_stats": 0,
+    "dup_ngram_mass": 0,
+    "dup_span_removal": 0,
+    "split_leakage": 0,
+    "doc_ngram_novelty": 0,
+    "dsir_importance": 0,
+    "dsir_auc": 0,
+    "bigram_topk": 0,
+    "doc_perplexity": 0,
+    "corpus_bigram_entropy": 0,
+    "bpe_train_merges": 17,
+    "bm25_topk": 0,
+    "bm25_proximity_rerank": 0,
+    "retrieval_ndcg": 0,
+    "retrieval_map": 0,
+    "retrieval_rrf_fusion": 0,
+    "retrieval_mmr_topk": 15,
+    "doc_split_assign": 0,
+    "doc_split_js_divergence": 0,
 }
 
 

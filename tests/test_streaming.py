@@ -1729,17 +1729,6 @@ def test_streaming_gap_histogram_late_batch_quarantine(spark, tmp_path):
     assert cur[0].last_ts_us == want_us
 
 
-def _own_nodes(scope):
-    """AST nodes of ``scope``, not descending into nested functions."""
-    stack = list(ast.iter_child_nodes(scope))
-    while stack:
-        node = stack.pop()
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        yield node
-        stack.extend(ast.iter_child_nodes(node))
-
-
 def test_stream_machinery_lives_in_one_helper_each():
     """The file-stream reader, the availableNow starter and the replay
     guard are each written once in the package (Spark-free source scan):
@@ -1747,51 +1736,28 @@ def test_stream_machinery_lives_in_one_helper_each():
     ``foreachBatch`` only in ``sinks.start_available_now``, and a
     ``batch_id`` comparison in a function that reads ``latest_meta()``
     only in ``VersionedTable.batch_applied``."""
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "maap_data_pipelines_spark",
-    )
+    from conftest import package_scopes
+
     found = {"maxFilesPerTrigger": set(), "foreachBatch": set(), "guard": set()}
-    for root, _, files in os.walk(pkg):
-        for name in sorted(files):
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
-            with open(path) as f:
-                tree = ast.parse(f.read())
-            scopes = [tree] + [
-                n
-                for n in ast.walk(tree)
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-            ]
-            for scope in scopes:
-                where = (rel, getattr(scope, "name", "<module>"))
-                nodes = list(_own_nodes(scope))
-                if any(
-                    isinstance(n, ast.Constant) and n.value == "maxFilesPerTrigger"
-                    for n in nodes
-                ):
-                    found["maxFilesPerTrigger"].add(where)
-                if any(
-                    isinstance(n, ast.Attribute) and n.attr == "foreachBatch"
-                    for n in nodes
-                ):
-                    found["foreachBatch"].add(where)
-                reads_meta = any(
-                    isinstance(n, ast.Attribute) and n.attr == "latest_meta"
-                    for n in nodes
-                )
-                compares_id = any(
-                    isinstance(n, ast.Compare)
-                    and any(
-                        isinstance(x, ast.Name) and x.id == "batch_id"
-                        for x in ast.walk(n)
-                    )
-                    for n in nodes
-                )
-                if reads_meta and compares_id:
-                    found["guard"].add(where)
+    for rel, scope, nodes in package_scopes():
+        where = (rel, scope)
+        if any(
+            isinstance(n, ast.Constant) and n.value == "maxFilesPerTrigger"
+            for n in nodes
+        ):
+            found["maxFilesPerTrigger"].add(where)
+        if any(isinstance(n, ast.Attribute) and n.attr == "foreachBatch" for n in nodes):
+            found["foreachBatch"].add(where)
+        reads_meta = any(
+            isinstance(n, ast.Attribute) and n.attr == "latest_meta" for n in nodes
+        )
+        compares_id = any(
+            isinstance(n, ast.Compare)
+            and any(isinstance(x, ast.Name) and x.id == "batch_id" for x in ast.walk(n))
+            for n in nodes
+        )
+        if reads_meta and compares_id:
+            found["guard"].add(where)
     assert found == {
         "maxFilesPerTrigger": {("streaming/rollup.py", "_file_stream")},
         "foreachBatch": {("sinks.py", "start_available_now")},

@@ -333,3 +333,48 @@ def test_anova_flat_on_uniform_sources_high_on_planted(spark, sf_dir):
     assert real.k >= 2 and real.n > 0
     assert real.ssb >= 0 and real.ssw > 0
     assert real.f_milli < 5_000  # uniform synthetic sources: flat
+
+
+def test_text_toolbox_lives_in_one_helper_each():
+    """The n-gram window kernel, the BM25 query-term frame and the split
+    hash are each written once per engine in the package (Spark-free
+    source scan): ``arrays_zip`` only in ``text.ngram_windows``;
+    ``BM25_QUERIES`` read by one function, ``text._bm25``, besides the
+    module-level DuckDB ``VALUES`` list; the ``split:`` salt once as a
+    Spark literal (``curation.split_bucket``) and once in SQL
+    (``curation``'s module-level ``SPLIT_BUCKET_SQL``)."""
+    import ast
+
+    from conftest import package_scopes
+
+    found = {"arrays_zip": set(), "BM25_QUERIES": set(), "split:": set()}
+    for rel, scope, nodes in package_scopes():
+        where = (rel, scope)
+        for n in nodes:
+            if (isinstance(n, ast.Attribute) and n.attr == "arrays_zip") or (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and "arrays_zip(" in n.value
+            ):
+                found["arrays_zip"].add(where)
+            if (
+                isinstance(n, ast.Name)
+                and n.id == "BM25_QUERIES"
+                and isinstance(n.ctx, ast.Load)
+            ):
+                found["BM25_QUERIES"].add(where)
+            if isinstance(n, ast.Constant) and (
+                n.value == "split:" or "'split:'" in str(n.value)
+            ):
+                found["split:"].add(where)
+    assert found == {
+        "arrays_zip": {("operators/text.py", "ngram_windows")},
+        "BM25_QUERIES": {
+            ("operators/text.py", "_bm25"),
+            ("operators/text.py", "<module>"),
+        },
+        "split:": {
+            ("operators/curation.py", "split_bucket"),
+            ("operators/curation.py", "<module>"),
+        },
+    }, found
