@@ -70,6 +70,15 @@ def extracted_dates_sql(filename_expr: str) -> str:
     return out
 
 
+def start_end_single_sql(dates: str) -> tuple[str, str, str]:
+    """:func:`start_end_single` as DuckDB SQL over the list expression ``dates``."""
+    return (
+        f"CASE WHEN len({dates}) > 1 THEN list_min({dates}) END",
+        f"CASE WHEN len({dates}) > 1 THEN list_max({dates}) END",
+        f"CASE WHEN len({dates}) = 1 THEN {dates}[1] END",
+    )
+
+
 def start_end_single(dates: Column) -> tuple[Column, Column, Column]:
     """(start, end, single) per the reference's multi/single-date rules."""
     many = F.size(dates) > 1

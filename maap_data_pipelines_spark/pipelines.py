@@ -51,8 +51,8 @@ def discover_from_event(
     Lambda (`lambdas/s3-discovery/handler.py:17-84`) and produces the same
     file objects as a DataFrame: identical defaulting (collection =
     prefix.rstrip('/'), upload/user_shared False, ingest True), the same
-    start-anchored ``re.match`` semantics on the full key (Spark ``rlike``
-    is a search, so the pattern is wrapped in ``^(?:...)``), the same
+    start-anchored Python ``re.match`` on the full key (run inside the
+    dir_discovery source, so a filtered key never leaves it), the same
     date-field and gdal_config_options propagation. ``root`` stands in for
     ``s3://bucket`` (no cloud SDKs here); ``remote_fileurl`` still renders
     the s3 URL the downstream expects.
@@ -69,13 +69,12 @@ def discover_from_event(
     bucket = event.get("bucket", "local")
     prefix = event.get("prefix", "")
     collection = event.get("collection", prefix.rstrip("/"))
-    listing = (
-        spark.read.format("dir_discovery").option("path", root).load()
-    )
+    reader = spark.read.format("dir_discovery").option("path", root)
+    if regex := event.get("filename_regex"):
+        reader = reader.option("filename_regex", regex)
+    listing = reader.load()
     if prefix:
         listing = listing.filter(F.col("key").startswith(prefix))
-    if regex := event.get("filename_regex"):
-        listing = listing.filter(F.col("key").rlike(f"^(?:{regex})"))
     cols = [
         F.lit(collection).alias("collection"),
         F.concat(F.lit(f"s3://{bucket}/"), F.col("key")).alias(
@@ -145,10 +144,13 @@ def discover_from_inventory_event(
         cols.append(
             F.concat(F.lit(f"{mt}="), F.col(mk)).alias("assets")
         )
-    for k, v in event.items():
-        if "asset" in k and k != "metadata_file_url_key":
-            cols.append(F.lit(str(v)).alias(k))
-    return inv.select(*cols)
+    return inv.select(*cols, *_asset_passthrough(event))
+
+
+def _asset_passthrough(event: dict) -> list[Column]:
+    """Every event key containing "asset", verbatim as a string literal
+    (the inventory and cmr-query Lambdas' enrichment rule)."""
+    return [F.lit(str(v)).alias(k) for k, v in event.items() if "asset" in k]
 
 
 _CMR_S3_REL = "http://esipfed.org/ns/fedsearch/1.1/s3#"
@@ -208,10 +210,8 @@ def discover_from_cmr_event(
         F.lit(event.get("mode")).cast("string").alias("mode"),
         F.lit(event.get("test_links")).cast("string").alias("test_links"),
         F.lit(event.get("reverse_coords")).cast("string").alias("reverse_coords"),
+        *_asset_passthrough(event),
     ]
-    for k, v in event.items():
-        if "asset" in k:
-            cols.append(F.lit(str(v)).alias(k))
     objs = picked.select(*cols)
 
     data_file_regex = event.get("data_file_regex")
@@ -226,12 +226,7 @@ def discover_from_cmr_event(
         "regexp_replace(remote_fileurl, concat('.*', product_id, '[-_.]?'), '')"
     )
     assets = with_pid.groupBy("product_id").agg(
-        F.concat_ws(
-            ";",
-            F.array_sort(
-                F.collect_list(F.concat(suffix, F.lit("="), F.col("remote_fileurl")))
-            ),
-        ).alias("assets")
+        F.concat_ws(";", stac.sorted_asset_list(suffix)).alias("assets")
     )
     # Build the pattern as a column expression: splicing data_file into the
     # SQL text via repr would break on quotes in the event payload.

@@ -37,7 +37,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dates import extracted_dates, extracted_dates_sql
+from ..functions.dates import (
+    expand_range,
+    extracted_dates,
+    extracted_dates_sql,
+    start_end_single,
+    start_end_single_sql,
+)
 from ..sources.catalog import fan_out, read_table
 
 SOURCE_BUCKET = "source-store"
@@ -262,27 +268,32 @@ def item_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches are exercised.
     """
     cat = asset_catalog(spark, sf_dir).filter(F.col("ext") != "hdr")
+    return cat.select("asset_id", _item_id().alias("item_id"))
+
+
+def _item_id() -> Column:
+    """The item id over catalog columns: the ``ID_REGEX`` groups joined
+    with '-' when asset_id % 3 == 0, else product_id, else the stem."""
     g1 = F.regexp_extract(F.col("remote_fileurl"), ID_REGEX, 1)
     g2 = F.regexp_extract(F.col("remote_fileurl"), ID_REGEX, 2)
-    from_regex = F.concat_ws("-", g1, g2)
-    return cat.select(
-        "asset_id",
-        F.when(F.col("asset_id") % 3 == 0, from_regex)
+    return (
+        F.when(F.col("asset_id") % 3 == 0, F.concat_ws("-", g1, g2))
         .when(F.col("product_id").isNotNull(), F.col("product_id"))
         .otherwise(F.col("stem"))
-        .alias("item_id"),
     )
 
 
-ITEM_ID_SQL = f"""
-WITH {CATALOG_SQL}
-SELECT asset_id,
-       CASE WHEN asset_id % 3 = 0
+# _item_id() in SQL
+_ITEM_ID_SQL = f"""CASE WHEN asset_id % 3 = 0
             THEN regexp_extract(remote_fileurl, '{ID_REGEX}', 1)
                  || '-' ||
                  regexp_extract(remote_fileurl, '{ID_REGEX}', 2)
             WHEN product_id IS NOT NULL THEN product_id
-            ELSE stem END AS item_id
+            ELSE stem END"""
+
+ITEM_ID_SQL = f"""
+WITH {CATALOG_SQL}
+SELECT asset_id, {_ITEM_ID_SQL} AS item_id
 FROM catalog
 WHERE ext != 'hdr'
 """
@@ -305,24 +316,26 @@ def extract_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than once un-inlined, so the regex cascade runs once per row instead
     # of once per consuming column (r11; see functions/dates.py).
     d = cat.select("asset_id", extracted_dates(F.col("remote_fileurl")).alias("dates"))
-    dates = F.col("dates")
-    many = F.size(dates) > 1
+    start, end, single = start_end_single(F.col("dates"))
     return d.select(
         "asset_id",
-        F.when(many, F.array_min(dates)).alias("start_date"),
-        F.when(many, F.array_max(dates)).alias("end_date"),
-        F.when(F.size(dates) == 1, F.element_at(dates, 1)).alias("single_date"),
+        start.alias("start_date"),
+        end.alias("end_date"),
+        single.alias("single_date"),
     )
 
+
+# (start, end, single) over a CTE's ``dates`` list column
+_START_SQL, _END_SQL, _SINGLE_SQL = start_end_single_sql("dates")
 
 EXTRACT_DATES_SQL = f"""
 WITH {CATALOG_SQL},
 d AS (SELECT asset_id, {extracted_dates_sql('remote_fileurl')} AS dates
       FROM catalog WHERE ext != 'hdr')
 SELECT asset_id,
-       CASE WHEN len(dates) > 1 THEN list_min(dates) END AS start_date,
-       CASE WHEN len(dates) > 1 THEN list_max(dates) END AS end_date,
-       CASE WHEN len(dates) = 1 THEN dates[1] END AS single_date
+       {_START_SQL} AS start_date,
+       {_END_SQL} AS end_date,
+       {_SINGLE_SQL} AS single_date
 FROM d
 """
 
@@ -341,22 +354,14 @@ def datetime_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = asset_catalog(spark, sf_dir).filter(F.col("ext") != "hdr")
     # dates aliased in its own projection — single evaluation per row (r11)
     cat = cat.withColumn("dates", extracted_dates(F.col("remote_fileurl")))
-    dates = F.col("dates")
-    single = F.when(F.size(dates) == 1, F.element_at(dates, 1))
+    _, _, single = start_end_single(F.col("dates"))
     interval = F.when(
         F.col("collection").isin("coll-0", "coll-1"), F.lit("month")
     ).when(F.col("collection").isin("coll-2", "coll-3"), F.lit("year"))
-    start = (
-        F.when(interval == "month", F.date_trunc("month", single).cast("date"))
-        .when(interval == "year", F.date_trunc("year", single).cast("date"))
-    )
-    end = (
-        F.when(interval == "month", F.last_day(single))
-        .when(
-            interval == "year",
-            F.make_date(F.year(single), F.lit(12), F.lit(31)),
-        )
-    )
+    month_start, month_end = expand_range(single, "month")
+    year_start, year_end = expand_range(single, "year")
+    start = F.when(interval == "month", month_start).when(interval == "year", year_start)
+    end = F.when(interval == "month", month_end).when(interval == "year", year_end)
     return cat.select(
         "asset_id",
         interval.alias("datetime_range"),
@@ -373,7 +378,7 @@ d AS (SELECT asset_id, collection, {extracted_dates_sql('remote_fileurl')} AS da
 s AS (SELECT asset_id,
              CASE WHEN collection IN ('coll-0', 'coll-1') THEN 'month'
                   WHEN collection IN ('coll-2', 'coll-3') THEN 'year' END AS datetime_range,
-             CASE WHEN len(dates) = 1 THEN dates[1] END AS single_date
+             {_SINGLE_SQL} AS single_date
       FROM d)
 SELECT asset_id, datetime_range, single_date,
        CASE WHEN datetime_range = 'month' THEN CAST(date_trunc('month', single_date) AS DATE)
@@ -394,13 +399,18 @@ def media_type_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix-keyed dict with a default role of 'data'.
     """
     cat = asset_catalog(spark, sf_dir)
-    mt = F.lit(None).cast("string")
-    for ext, typ in reversed(MEDIA_TYPES.items()):
-        mt = F.when(F.col("ext") == ext, typ).otherwise(mt)
     role = F.lit("data")
     for ext, r in ASSET_ROLES.items():
         role = F.when(F.col("ext") == ext, r).otherwise(role)
-    return cat.select("asset_id", "ext", mt.alias("media_type"), role.alias("role"))
+    return cat.select("asset_id", "ext", _media_type().alias("media_type"), role.alias("role"))
+
+
+def _media_type() -> Column:
+    """``MEDIA_TYPES`` looked up by ``ext`` (NULL for an unlisted ext)."""
+    mt = F.lit(None).cast("string")
+    for ext, typ in reversed(MEDIA_TYPES.items()):
+        mt = F.when(F.col("ext") == ext, typ).otherwise(mt)
+    return mt
 
 
 def _media_case() -> str:
@@ -440,11 +450,7 @@ def multi_asset_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("ext").isin("bin", "hdr"))
     assets = (
         with_pid.groupBy("pid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.concat(F.col("ext"), F.lit("="), F.col("remote_fileurl")))
-            ).alias("asset_list")
-        )
+        .agg(sorted_asset_list(F.col("ext")).alias("asset_list"))
         .select(
             "pid",
             F.size(F.col("asset_list")).cast("long").alias("n_assets"),
@@ -456,6 +462,15 @@ def multi_asset_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return data_files.join(assets, "pid").select(
         "asset_id", F.col("pid").alias("product_key"), "n_assets", "assets", "data_fileurl"
+    )
+
+
+def sorted_asset_list(key: Column) -> Column:
+    """Aggregate: the group's sorted ``key=remote_fileurl`` entries.
+    ``concat_ws(';', ...)`` over it is the one assets string every
+    discovery mode emits."""
+    return F.array_sort(
+        F.collect_list(F.concat(key, F.lit("="), F.col("remote_fileurl")))
     )
 
 
@@ -516,8 +531,8 @@ def _duck_lat(mult: int) -> str:
     return f"CAST((asset_id * {mult} % 1700) - 850 AS DOUBLE) / CAST(10 AS DOUBLE)"
 
 
-BBOX_SQL = f"""
-WITH {CATALOG_SQL}
+# bbox() over the ``catalog`` CTE, without its WITH clause
+_BBOX_SELECT_SQL = f"""
 SELECT asset_id,
        least({_duck_lon(7)}, {_duck_lon(11)}, {_duck_lon(13)}, {_duck_lon(17)}) AS min_x,
        least({_duck_lat(7)}, {_duck_lat(11)}, {_duck_lat(13)}, {_duck_lat(17)}) AS min_y,
@@ -525,6 +540,8 @@ SELECT asset_id,
        greatest({_duck_lat(7)}, {_duck_lat(11)}, {_duck_lat(13)}, {_duck_lat(17)}) AS max_y
 FROM catalog WHERE ext != 'hdr'
 """
+
+BBOX_SQL = f"WITH {CATALOG_SQL}{_BBOX_SELECT_SQL}"
 
 
 # --- 9. build_stac_items --------------------------------------------------
@@ -548,29 +565,17 @@ def stac_items_from_catalog(cat: DataFrame) -> DataFrame:
     cat = cat.filter(F.col("ext") != "hdr")
     # dates aliased in its own projection — single evaluation per row (r11)
     cat = cat.withColumn("dates", extracted_dates(F.col("remote_fileurl")))
-    dates = F.col("dates")
-    many = F.size(dates) > 1
-    single = F.when(F.size(dates) == 1, F.element_at(dates, 1))
+    start, end, single = start_end_single(F.col("dates"))
     fmt = "yyyy-MM-dd'T'HH:mm:ss'Z'"
-    mt = F.lit(None).cast("string")
-    for ext, typ in reversed(MEDIA_TYPES.items()):
-        mt = F.when(F.col("ext") == ext, typ).otherwise(mt)
-    g1 = F.regexp_extract(F.col("remote_fileurl"), ID_REGEX, 1)
-    g2 = F.regexp_extract(F.col("remote_fileurl"), ID_REGEX, 2)
-    iid = (
-        F.when(F.col("asset_id") % 3 == 0, F.concat_ws("-", g1, g2))
-        .when(F.col("product_id").isNotNull(), F.col("product_id"))
-        .otherwise(F.col("stem"))
-    )
     return cat.select(
         "asset_id",
-        iid.alias("item_id"),
+        _item_id().alias("item_id"),
         "collection",
-        F.date_format(F.when(many, F.array_min(dates)), fmt).alias("start_datetime"),
-        F.date_format(F.when(many, F.array_max(dates)), fmt).alias("end_datetime"),
+        F.date_format(start, fmt).alias("start_datetime"),
+        F.date_format(end, fmt).alias("end_datetime"),
         F.date_format(single, fmt).alias("datetime"),
         F.col("remote_fileurl").alias("asset_href"),
-        mt.alias("asset_media_type"),
+        _media_type().alias("asset_media_type"),
         "ingest",
     )
 
@@ -602,16 +607,11 @@ WITH {CATALOG_SQL},
 d AS (SELECT *, {extracted_dates_sql('remote_fileurl')} AS dates
       FROM catalog WHERE ext != 'hdr')
 SELECT asset_id,
-       CASE WHEN asset_id % 3 = 0
-            THEN regexp_extract(remote_fileurl, '{ID_REGEX}', 1)
-                 || '-' ||
-                 regexp_extract(remote_fileurl, '{ID_REGEX}', 2)
-            WHEN product_id IS NOT NULL THEN product_id
-            ELSE stem END AS item_id,
+       {_ITEM_ID_SQL} AS item_id,
        collection,
-       strftime(CASE WHEN len(dates) > 1 THEN list_min(dates) END, '%Y-%m-%dT%H:%M:%SZ') AS start_datetime,
-       strftime(CASE WHEN len(dates) > 1 THEN list_max(dates) END, '%Y-%m-%dT%H:%M:%SZ') AS end_datetime,
-       strftime(CASE WHEN len(dates) = 1 THEN dates[1] END, '%Y-%m-%dT%H:%M:%SZ') AS datetime,
+       strftime({_START_SQL}, '%Y-%m-%dT%H:%M:%SZ') AS start_datetime,
+       strftime({_END_SQL}, '%Y-%m-%dT%H:%M:%SZ') AS end_datetime,
+       strftime({_SINGLE_SQL}, '%Y-%m-%dT%H:%M:%SZ') AS datetime,
        remote_fileurl AS asset_href,
        {_media_case()} AS asset_media_type,
        ingest
@@ -639,20 +639,17 @@ def transfer_plan_from_catalog(cat: DataFrame) -> DataFrame:
     """transfer_plan's body over a caller-supplied catalog frame."""
     eligible = cat.filter(F.col("upload") & ~F.col("cogify"))
     bucket = F.when(F.col("user_shared"), USER_SHARED_BUCKET).otherwise(TARGET_BUCKET)
+    target_key = F.concat(
+        F.lit(f"{STAGING_DIR}/"), F.col("collection"), F.lit("/"), F.col("filename")
+    ).alias("target_key")
     planned = eligible.select(
         "asset_id",
         F.col("remote_fileurl").alias("source_url"),
-        F.concat(
-            F.lit(f"{STAGING_DIR}/"), F.col("collection"), F.lit("/"), F.col("filename")
-        ).alias("target_key"),
+        target_key,
         bucket.alias("target_bucket"),
         "ext",
     )
-    existing = cat.filter(F.col("asset_id") % 4 == 1).select(
-        F.concat(
-            F.lit(f"{STAGING_DIR}/"), F.col("collection"), F.lit("/"), F.col("filename")
-        ).alias("target_key")
-    )
+    existing = cat.filter(F.col("asset_id") % 4 == 1).select(target_key)
     return (
         planned.join(existing, "target_key", "left_anti")
         .select(
@@ -666,16 +663,18 @@ def transfer_plan_from_catalog(cat: DataFrame) -> DataFrame:
     )
 
 
+_TARGET_KEY_SQL = f"'{STAGING_DIR}/' || collection || '/' || filename"
+
 TRANSFER_PLAN_SQL = f"""
 WITH {CATALOG_SQL},
 planned AS (
   SELECT asset_id, ext, remote_fileurl AS source_url,
-         '{STAGING_DIR}/' || collection || '/' || filename AS target_key,
+         {_TARGET_KEY_SQL} AS target_key,
          CASE WHEN user_shared THEN '{USER_SHARED_BUCKET}' ELSE '{TARGET_BUCKET}' END AS target_bucket
   FROM catalog WHERE upload AND NOT cogify
 ),
 existing AS (
-  SELECT '{STAGING_DIR}/' || collection || '/' || filename AS target_key
+  SELECT {_TARGET_KEY_SQL} AS target_key
   FROM catalog WHERE asset_id % 4 = 1
 )
 SELECT asset_id, ext, source_url,
@@ -1054,14 +1053,7 @@ def _tile_rollup_sql() -> str:
     )
     return f"""
 WITH {CATALOG_SQL},
-boxes AS (
-  SELECT asset_id,
-         least({_duck_lon(7)}, {_duck_lon(11)}, {_duck_lon(13)}, {_duck_lon(17)}) AS min_x,
-         least({_duck_lat(7)}, {_duck_lat(11)}, {_duck_lat(13)}, {_duck_lat(17)}) AS min_y,
-         greatest({_duck_lon(7)}, {_duck_lon(11)}, {_duck_lon(13)}, {_duck_lon(17)}) AS max_x,
-         greatest({_duck_lat(7)}, {_duck_lat(11)}, {_duck_lat(13)}, {_duck_lat(17)}) AS max_y
-  FROM catalog WHERE ext != 'hdr'
-),
+boxes AS ({_BBOX_SELECT_SQL}),
 tiles AS (
   SELECT asset_id,
          CAST(FLOOR(((min_x + max_x) / 2.0 + 180.0) / 360.0 * {float(n)}) AS BIGINT) AS tile_x,
@@ -1109,6 +1101,28 @@ def _footprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _footprint_cells(fp: DataFrame, side: str) -> DataFrame:
+    """One row per (footprint, grid cell it touches), columns suffixed
+    ``_{side}`` except the cell key (gx, gy)."""
+
+    def cells(lo: str, hi: str) -> Column:
+        return F.expr(
+            f"sequence(({lo} + {_OV_SHIFT}) div {_OV_CELL},"
+            f" ({hi} + {_OV_SHIFT}) div {_OV_CELL})"
+        )
+
+    edges = ("xlo", "xhi", "ylo", "yhi")
+    box = [f"{c}_{side}" for c in edges]
+    return fp.select(
+        F.col("asset_id").alias(f"asset_{side}"),
+        *[F.col(c).alias(f"{c}_{side}") for c in edges],
+        cells("xlo", "xhi").alias("gxs"),
+        cells("ylo", "yhi").alias("gys"),
+    ).select(
+        f"asset_{side}", *box, F.explode("gxs").alias("gx"), F.col("gys")
+    ).select(f"asset_{side}", *box, "gx", F.explode("gys").alias("gy"))
+
+
 def assets_bbox_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All intersecting footprint pairs + overlap area, via grid partition.
 
@@ -1130,38 +1144,7 @@ def assets_bbox_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional to true intersections, never all pairs.
     """
     fp = _footprints(spark, sf_dir)
-    a = fp.select(
-        F.col("asset_id").alias("asset_a"),
-        F.col("xlo").alias("xlo_a"),
-        F.col("xhi").alias("xhi_a"),
-        F.col("ylo").alias("ylo_a"),
-        F.col("yhi").alias("yhi_a"),
-        F.expr(f"sequence((xlo + {_OV_SHIFT}) div {_OV_CELL},"
-               f" (xhi + {_OV_SHIFT}) div {_OV_CELL})").alias("gxs"),
-        F.expr(f"sequence((ylo + {_OV_SHIFT}) div {_OV_CELL},"
-               f" (yhi + {_OV_SHIFT}) div {_OV_CELL})").alias("gys"),
-    ).select(
-        "asset_a", "xlo_a", "xhi_a", "ylo_a", "yhi_a",
-        F.explode("gxs").alias("gx"),
-        F.col("gys"),
-    ).select("asset_a", "xlo_a", "xhi_a", "ylo_a", "yhi_a", "gx",
-             F.explode("gys").alias("gy"))
-    b = fp.select(
-        F.col("asset_id").alias("asset_b"),
-        F.col("xlo").alias("xlo_b"),
-        F.col("xhi").alias("xhi_b"),
-        F.col("ylo").alias("ylo_b"),
-        F.col("yhi").alias("yhi_b"),
-        F.expr(f"sequence((xlo + {_OV_SHIFT}) div {_OV_CELL},"
-               f" (xhi + {_OV_SHIFT}) div {_OV_CELL})").alias("gxs"),
-        F.expr(f"sequence((ylo + {_OV_SHIFT}) div {_OV_CELL},"
-               f" (yhi + {_OV_SHIFT}) div {_OV_CELL})").alias("gys"),
-    ).select(
-        "asset_b", "xlo_b", "xhi_b", "ylo_b", "yhi_b",
-        F.explode("gxs").alias("gx"),
-        F.col("gys"),
-    ).select("asset_b", "xlo_b", "xhi_b", "ylo_b", "yhi_b", "gx",
-             F.explode("gys").alias("gy"))
+    a, b = _footprint_cells(fp, "a"), _footprint_cells(fp, "b")
     ixlo = F.greatest(F.col("xlo_a"), F.col("xlo_b"))
     iylo = F.greatest(F.col("ylo_a"), F.col("ylo_b"))
     return (

@@ -292,16 +292,11 @@ def execute_transfer_plan(
     anti-joins away objects that now exist). No driver-side loop; copy
     parallelism == partition count.
 
-    Output: (asset_id, target_url, status).
+    Input: (asset_id, source_url, target_url), the columns
+    ``plans.stac.transfer_plan`` emits. Output: (asset_id, target_url,
+    status).
     """
-    target = (
-        F.col("target_url")
-        if "target_url" in plan.columns
-        else F.concat(
-            F.lit("s3://"), F.col("target_bucket"), F.lit("/"), F.col("target_key")
-        )
-    )
-    src = plan.select("asset_id", "source_url", target.alias("target_url"))
+    src = plan.select("asset_id", "source_url", "target_url")
     schema = "asset_id bigint, target_url string, status int"
 
     def _copy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

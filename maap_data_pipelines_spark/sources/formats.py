@@ -1,10 +1,11 @@
-"""Non-parquet discovery sources: CSV inventories, JSON granule dumps.
+"""Non-parquet sources: binary assets, quarantined JSON, XML metadata and
+tar/zip corpora.
 
-The reference consumes CSV inventories (inventory/handler.py: DictReader
-over a downloaded file) and CMR granule JSON (cmr-query/handler.py). At
-scale both are just datasets: a multi-GB inventory or a granule dump is
-read distributed with an explicit schema (never inferSchema on the hot
-path — it double-scans), filtered/projected before any shuffle.
+Each is read distributed, with an explicit schema where the format takes
+one (inference double-scans), and filtered/projected before any shuffle.
+The discovery inputs of the reference (CSV inventories, CMR granule JSON)
+are read by the ``pipelines`` discovery adapters that
+``dispatch_discovery`` routes to.
 """
 
 from __future__ import annotations
@@ -12,42 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
-
-INVENTORY_SCHEMA = StructType(
-    [
-        StructField("s3_path", StringType()),
-        StructField("metadata_path", StringType()),
-        StructField("collection", StringType()),
-    ]
-)
-
-
-def read_csv_inventory(
-    spark: SparkSession,
-    path: str,
-    file_url_key: str = "s3_path",
-    filename_regex: str | None = None,
-    schema: StructType = INVENTORY_SCHEMA,
-) -> DataFrame:
-    """CSV inventory -> file_obj rows (parity: inventory/handler.py:20-88).
-
-    product_id = stem of the LAST extension of the final path segment,
-    exactly os.path.splitext(filename)[0].split('/')[-1].
-    """
-    inv = spark.read.schema(schema).option("header", True).csv(path)
-    url = F.col(file_url_key)
-    if filename_regex:
-        # reference is re.match (start-anchored); rlike is a search
-        inv = inv.filter(url.rlike(f"^(?:{filename_regex})"))
-    stem = F.regexp_replace(
-        F.element_at(F.split(url, "/"), -1), r"\.[^.]*$", ""
-    )
-    return inv.select(
-        url.alias("remote_fileurl"),
-        F.col("collection"),
-        stem.alias("product_id"),
-        F.col("metadata_path").alias("metadata_fileurl"),
-    )
 
 
 def read_binary_assets(
@@ -116,22 +81,6 @@ def read_json_quarantined(
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     return (good, bad, df) if return_source else (good, bad)
-
-
-def read_json_granules(spark: SparkSession, path: str) -> DataFrame:
-    """CMR granule JSON-lines -> (granule_id, data_url, n_links).
-
-    Picks the s3# link as the data url, mirroring
-    cmr-query/handler.py:108-188's link selection.
-    """
-    g = spark.read.json(path)
-    links = F.col("links")
-    s3_links = F.filter(links, lambda l: l["rel"].endswith("s3#"))
-    return g.select(
-        F.col("id").alias("granule_id"),
-        F.element_at(s3_links, 1)["href"].alias("data_url"),
-        F.size(links).cast("long").alias("n_links"),
-    )
 
 
 def read_xml_metadata(

@@ -13,9 +13,9 @@ first-class `spark.read.format("dir_discovery")` scan:
   exactly how a 100 TB bucket must be walked;
 - `filename_regex` is applied inside each partition's reader with
   ``re.match`` against the RELATIVE KEY — the reference Lambda's
-  start-anchored full-key semantics, shared with read_csv_inventory and
-  discover_from_event — so filtered names never leave the source
-  (filter-at-source, the listing analogue of predicate pushdown);
+  start-anchored full-key semantics — so filtered names never leave the
+  source (filter-at-source, the listing analogue of predicate pushdown);
+  ``pipelines.discover_from_event`` passes its event's regex here;
 - emits (key, size_bytes, mtime_us) — the same fields the reference's
   file_obj carries — ready for the stac item pipeline.
 
@@ -82,9 +82,7 @@ class DirDiscoveryReader(DataSourceReader):
         for p in walker:
             rel_key = os.path.relpath(p, partition.root)
             # re.match on the relative key: the reference Lambda re.match-es
-            # the full object key, and the sibling adapters
-            # (read_csv_inventory, discover_from_event) use the same
-            # start-anchored full-key semantics.
+            # the full object key.
             if rx is not None and not rx.match(rel_key):
                 continue
             st = os.stat(p)

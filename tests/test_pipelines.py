@@ -104,6 +104,22 @@ def test_discover_from_event_reference_payload(spark, tmp_path):
     assert not rows2[0].upload and rows2[0].ingest
 
 
+def test_discover_from_event_runs_python_regex_at_source(spark, tmp_path):
+    """``filename_regex`` is matched by the dir_discovery source with
+    Python's ``re.match``: a ``(?P<name>...)`` group, which Java's regex
+    dialect rejects, filters the listing."""
+    from maap_data_pipelines_spark.pipelines import discover_from_event
+
+    root = tmp_path / "bucket"
+    (root / "pre").mkdir(parents=True)
+    (root / "pre" / "a.tif").write_bytes(b"x")
+    (root / "pre" / "a.tif.aux").write_bytes(b"x")
+    (root / "pre" / "b.nc").write_bytes(b"x")
+    event = {"prefix": "pre/", "filename_regex": r"pre/(?P<stem>\w+)\.tif$"}
+    rows = discover_from_event(spark, event, str(root)).collect()
+    assert [r.remote_fileurl for r in rows] == ["s3://local/pre/a.tif"]
+
+
 def test_discover_from_inventory_event(spark, tmp_path):
     from maap_data_pipelines_spark.pipelines import discover_from_inventory_event
 
@@ -135,6 +151,29 @@ def test_discover_from_inventory_event(spark, tmp_path):
     assert r.assets == "xml=s3://b/CCI_2020_tile1.xml"
     assert r.sample_asset_name == "cog_default"  # 'asset' key passthrough
 
+    # an alternation filter keeps both extensions; product_id drops only
+    # the last extension; an empty metadata cell gives NULL assets
+    csv2 = tmp_path / "inv2.csv"
+    csv2.write_text(
+        "s3_path,metadata_path\n"
+        "s3://b/x/granule_2020-01-01.tif,s3://b/x/granule_2020-01-01.xml\n"
+        "s3://b/y/other_20210203.nc,\n"
+        "s3://b/z/skipme.txt,\n"
+    )
+    event2 = {
+        "collection": "c1",
+        "filename_regex": r".*\.(tif|nc)$",
+        "metadata_file_url_key": "metadata_path",
+        "metadata_type": "xml",
+    }
+    rows2 = discover_from_inventory_event(spark, event2, str(csv2)).collect()
+    by_url = {r.remote_fileurl: r for r in rows2}
+    tif, nc = "s3://b/x/granule_2020-01-01.tif", "s3://b/y/other_20210203.nc"
+    assert set(by_url) == {tif, nc}  # .txt filtered out
+    assert by_url[tif].product_id == "granule_2020-01-01"
+    assert by_url[tif].assets == "xml=s3://b/x/granule_2020-01-01.xml"
+    assert by_url[nc].assets is None
+
 
 def test_discover_from_cmr_event_multi_asset(spark, tmp_path):
     import json as _json
@@ -150,6 +189,10 @@ def test_discover_from_cmr_event_multi_asset(spark, tmp_path):
         ]},
         {"id": "G2", "links": [{"rel": s3rel, "href": f"{base}_cov_1-1.hdr"}]},
         {"id": "G3", "links": [{"rel": "http://other", "href": "https://y"}]},
+        {"id": "G4", "links": [
+            {"rel": "http://esipfed.org/ns/fedsearch/1.1/metadata#", "href": "s3://b/g4.xml"},
+            {"rel": s3rel, "href": "s3://b/g4.tif"},
+        ]},
     ]
     dump = tmp_path / "granules.json"
     dump.write_text("\n".join(_json.dumps(g) for g in granules))
@@ -176,11 +219,14 @@ def test_discover_from_cmr_event_multi_asset(spark, tmp_path):
     assert r.asset_roles == "['data']"  # 'asset' key passthrough
     assert r.collection == "AfriSAR_UAVSAR_Ungeocoded_Covariance"
 
-    # without data_file_regex: one file_obj per granule with an s3 link
+    # without data_file_regex: one file_obj per granule with an s3 link,
+    # wherever that link sits in the granule's list (G4: second)
     plain = discover_from_cmr_event(
         spark, {"collection": "C"}, gdf
     ).collect()
-    assert {p.granule_id for p in plain} == {"G1", "G2"}
+    urls = {p.granule_id: p.remote_fileurl for p in plain}
+    assert set(urls) == {"G1", "G2", "G4"}
+    assert urls["G4"] == "s3://b/g4.tif"
 
 
 def test_job_name_parity():

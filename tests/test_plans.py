@@ -561,8 +561,8 @@ def test_platt_plan_runs_on_checkpointed_deciles(spark, sf_dir):
 # Spark jobs building each plan may start at the test sf (statusTracker
 # job-id delta around fn(spark, sf), as tests/test_pipelines.py counts).
 # Table reads take their schema and bare-scan gate counts from the
-# parquet footers, so a relational or event plan builds with no job; the
-# curation and candidate-graph plans (dedup, media pHash, entity
+# parquet footers, so a relational, event or STAC plan builds with no
+# job; the curation and candidate-graph plans (dedup, media pHash, entity
 # resolution) keep their eager checkpoints and fixpoint loops. The
 # PQ and k-means ANN keys train their quantizer at build time (the PQ
 # codebooks, the k-means centroids), one collect per round; so does the
@@ -610,6 +610,24 @@ BUILD_JOB_BUDGETS = {
     "retrieval_mmr_topk": 15,
     "doc_split_assign": 0,
     "doc_split_js_divergence": 0,
+    "assets_neighbor_join": 0,
+    "s3_discovery": 0,
+    "inventory_discovery": 0,
+    "item_id": 0,
+    "extract_dates": 0,
+    "datetime_range": 0,
+    "media_type_map": 0,
+    "multi_asset_group": 0,
+    "bbox": 0,
+    "build_stac_items": 0,
+    "stac_coverage_gaps": 0,
+    "transfer_plan": 0,
+    "stac_item_json": 0,
+    "catalog_summary": 0,
+    "cogify": 0,
+    "cmr_discovery": 0,
+    "assets_tile_rollup": 0,
+    "assets_bbox_overlap": 0,
 }
 
 

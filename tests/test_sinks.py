@@ -207,11 +207,11 @@ def test_execute_transfer_plan_real_local_copies(spark, tmp_path):
     dst_dir.mkdir()
     plan = spark.createDataFrame(
         [
-            (1, str(src_dir / "a.tif"), "tgt", "stage/a.tif"),
-            (2, str(src_dir / "b.tif"), "tgt", "stage/b.tif"),
-            (3, str(src_dir / "missing.tif"), "tgt", "stage/c.tif"),
+            (1, str(src_dir / "a.tif"), "s3://tgt/stage/a.tif"),
+            (2, str(src_dir / "b.tif"), "s3://tgt/stage/b.tif"),
+            (3, str(src_dir / "missing.tif"), "s3://tgt/stage/c.tif"),
         ],
-        "asset_id long, source_url string, target_bucket string, target_key string",
+        "asset_id long, source_url string, target_url string",
     )
 
     dst = str(dst_dir)

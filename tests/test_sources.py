@@ -1,50 +1,9 @@
-"""CSV inventory + JSON granule source readers."""
+"""Source readers: the dir_discovery DataSource, the non-parquet formats
+and the parquet footer path of ``read_table``."""
 
 from __future__ import annotations
 
-import json
-
 from conftest import last_job_id
-
-
-def test_read_csv_inventory(spark, tmp_path):
-    from maap_data_pipelines_spark.sources.formats import read_csv_inventory
-
-    p = tmp_path / "inv.csv"
-    p.write_text(
-        "s3_path,metadata_path,collection\n"
-        "s3://b/x/granule_2020-01-01.tif,s3://b/x/granule_2020-01-01.xml,c1\n"
-        "s3://b/y/other_20210203.nc,,c1\n"
-        "s3://b/z/skipme.txt,,c1\n"
-    )
-    out = read_csv_inventory(
-        spark, str(p), filename_regex=r".*\.(tif|nc)$"
-    ).collect()
-    by_url = {r.remote_fileurl: r for r in out}
-    assert len(by_url) == 2  # .txt filtered out
-    assert by_url["s3://b/x/granule_2020-01-01.tif"].product_id == "granule_2020-01-01"
-    assert by_url["s3://b/y/other_20210203.nc"].metadata_fileurl is None
-
-
-def test_read_json_granules(spark, tmp_path):
-    from maap_data_pipelines_spark.sources.formats import read_json_granules
-
-    p = tmp_path / "granules.json"
-    rows = [
-        {
-            "id": "G1",
-            "links": [
-                {"rel": "http://esipfed.org/ns/fedsearch/1.1/metadata#", "href": "s3://b/a.xml"},
-                {"rel": "http://esipfed.org/ns/fedsearch/1.1/s3#", "href": "s3://b/a.tif"},
-            ],
-        },
-        {"id": "G2", "links": [{"rel": "http://x/s3#", "href": "s3://b/b.tif"}]},
-    ]
-    p.write_text("\n".join(json.dumps(r) for r in rows))
-    out = {r.granule_id: r for r in read_json_granules(spark, str(p)).collect()}
-    assert out["G1"].data_url == "s3://b/a.tif"
-    assert out["G1"].n_links == 2
-    assert out["G2"].data_url == "s3://b/b.tif"
 
 
 def test_parquet_schema_evolution_mergeschema(spark, tmp_path):

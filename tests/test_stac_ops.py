@@ -194,3 +194,45 @@ def test_stac_items_materialized_shares(spark, sf_dir):
         assert sorted(map(key, shared.collect())) == sorted(
             map(key, standalone(spark, sf_dir).collect())
         ), standalone.__name__
+
+
+def test_stac_item_rules_live_in_one_helper_each():
+    """The STAC item rules are written once per engine in the package
+    (Spark-free source scan, reads counted per scope): ``ID_REGEX`` by
+    ``stac._item_id`` and the module-level ``_ITEM_ID_SQL`` (two groups
+    each); ``MEDIA_TYPES`` by ``stac._media_type`` and
+    ``stac._media_case``; ``array_min`` / ``list_min(`` only in
+    ``functions/dates.py``; the '='-joined ``collect_list`` assets
+    aggregate only in ``stac.sorted_asset_list`` (its SQL twin once, in
+    ``MULTI_ASSET_GROUP_SQL``)."""
+    import ast
+    from collections import Counter
+
+    from conftest import package_scopes
+
+    found = {k: Counter() for k in ("ID_REGEX", "MEDIA_TYPES", "min", "assets")}
+    for rel, scope, nodes in package_scopes():
+        where = (rel, scope)
+        for n in nodes:
+            text = n.value if isinstance(n, ast.Constant) and isinstance(n.value, str) else ""
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load) and n.id in (
+                "ID_REGEX",
+                "MEDIA_TYPES",
+            ):
+                found[n.id][where] += 1
+            if (isinstance(n, ast.Attribute) and n.attr == "array_min") or "list_min(" in text:
+                found["min"][rel] += 1
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "collect_list"
+                and any(isinstance(c, ast.Constant) and c.value == "=" for c in ast.walk(n))
+            ) or "|| '=' ||" in text:
+                found["assets"][where] += 1
+    stac = "plans/stac.py"
+    assert found == {
+        "ID_REGEX": {(stac, "_item_id"): 2, (stac, "<module>"): 2},
+        "MEDIA_TYPES": {(stac, "_media_type"): 1, (stac, "_media_case"): 1},
+        "min": {"functions/dates.py": 2},
+        "assets": {(stac, "sorted_asset_list"): 1, (stac, "<module>"): 1},
+    }, found

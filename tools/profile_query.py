@@ -17,7 +17,8 @@ order. Each run of a key prints one JSON line:
 ``--plan OUT_DIR`` also writes each key's formatted plan to
 ``OUT_DIR/<key>.txt`` with the per-session numbering normalised
 (expression ids ``#123``, ``plan_id=…``, ``_common_expr_…`` aliases,
-RDD numbers and object identity hashes), so the plan directories of two
+RDD numbers, object identity hashes and the Python call site of
+``applySchemaToPythonRDD``), so the plan directories of two
 commits compare with a plain ``diff -r``.
 
 Jobs are the statusTracker job-id delta around each phase, the same
@@ -68,6 +69,8 @@ _PLAN_NOISE = (
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(?<=\w)@[0-9a-f]+\b"), "@H"),
+    # the Python call site a createDataFrame frame was built from
+    (re.compile(r"(?<=applySchemaToPythonRDD at )\S+:\d+"), "SITE"),
 )
 
 
