@@ -117,7 +117,13 @@ def discover_from_inventory_event(
     inv = spark.read.option("header", True).csv(csv_path)
     url = F.col(event.get("file_url_key", "s3_path"))
     if regex := event.get("filename_regex"):
-        inv = inv.filter(url.rlike(f"^(?:{regex})"))
+        # Python's re.match, as the s3 mode's source applies it; compiled
+        # on the driver, so a bad pattern raises while the plan is built
+        rx = re.compile(regex)
+        keep = F.udf(
+            lambda u: u is not None and rx.match(u) is not None, "boolean"
+        )
+        inv = inv.filter(keep(url))
     stem = F.regexp_replace(
         F.element_at(F.split(url, "/"), -1), r"\.[^.]*$", ""
     )

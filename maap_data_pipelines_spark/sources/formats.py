@@ -10,6 +10,12 @@ are read by the ``pipelines`` discovery adapters that
 
 from __future__ import annotations
 
+import io
+import tarfile
+import zipfile
+import zlib
+from collections.abc import Callable, Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -112,6 +118,68 @@ ARCHIVE_MEMBER_SCHEMA = (
 )
 
 
+def _archive_members(
+    spark: SparkSession,
+    path: str,
+    glob: str | None,
+    max_member_bytes: int,
+    members: Callable[[bytes], Iterator[tuple[str, int, Callable[[], bytes]]]],
+    errors: tuple[type[BaseException], ...],
+) -> DataFrame:
+    """One row per archive member, the body of both corpus readers.
+
+    ``members(blob)`` yields ``(name, n_bytes, read)`` for each regular
+    member of one archive's bytes, ``read()`` returning its payload; an
+    exception in ``errors`` raised while opening or reading the archive
+    quarantines it as one ok=false row after the members already read.
+    """
+    import pandas as pd
+
+    reader = spark.read.format("binaryFile")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    blobs = reader.load(path).select("path", "content")
+    columns = ["archive", "member", "n_bytes", "ok", "err", "text"]
+
+    def _extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for arch, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    for name, n_bytes, read in members(bytes(content)):
+                        if n_bytes > max_member_bytes:
+                            err = "member exceeds max_member_bytes"
+                            rows.append((arch, name, n_bytes, False, err, None))
+                            continue
+                        raw = read()
+                        try:
+                            text, err = raw.decode("utf-8"), None
+                        except UnicodeDecodeError:
+                            text = raw.decode("utf-8", errors="replace")
+                            err = "lossy utf-8 decode"
+                        rows.append((arch, name, n_bytes, True, err, text))
+                except errors as e:
+                    err = f"{type(e).__name__}: {e}"[:200]
+                    rows.append((arch, None, None, False, err, None))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return blobs.mapInPandas(_extract, ARCHIVE_MEMBER_SCHEMA)
+
+
+def _tar_members(blob: bytes):
+    with tarfile.open(fileobj=io.BytesIO(blob), mode="r:*") as tf:
+        for m in tf:
+            if m.isreg():
+                yield m.name, int(m.size), lambda m=m: tf.extractfile(m).read()
+
+
+def _zip_members(blob: bytes):
+    with zipfile.ZipFile(io.BytesIO(blob)) as zf:
+        for info in zf.infolist():
+            if not info.is_dir():
+                yield info.filename, int(info.file_size), lambda i=info: zf.read(i)
+
+
 def read_tar_corpus(
     spark: SparkSession,
     path: str,
@@ -139,82 +207,14 @@ def read_tar_corpus(
     (they carry no corpus text). Deterministic: member order is the
     archive's own, and every field is a pure function of the bytes.
     """
-    import io
-    import tarfile
-    import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    blobs = reader.load(path).select("path", "content")
-
-    def _extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                arch = r["path"]
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(r["content"])), mode="r:*"
-                    ) as tf:
-                        for m in tf:
-                            if not m.isreg():
-                                continue
-                            if m.size > max_member_bytes:
-                                rows.append(
-                                    {
-                                        "archive": arch,
-                                        "member": m.name,
-                                        "n_bytes": int(m.size),
-                                        "ok": False,
-                                        "err": "member exceeds max_member_bytes",
-                                        "text": None,
-                                    }
-                                )
-                                continue
-                            raw = tf.extractfile(m).read()
-                            try:
-                                text, err = raw.decode("utf-8"), None
-                            except UnicodeDecodeError:
-                                text = raw.decode("utf-8", errors="replace")
-                                err = "lossy utf-8 decode"
-                            rows.append(
-                                {
-                                    "archive": arch,
-                                    "member": m.name,
-                                    "n_bytes": int(m.size),
-                                    "ok": True,
-                                    "err": err,
-                                    "text": text,
-                                }
-                            )
-                # zlib.error: gzip members with a corrupt (non-truncated)
-                # DEFLATE stream raise it directly from the decompressor,
-                # not wrapped in TarError/OSError — without it here one
-                # bad .tar.gz fails the whole executor task instead of
-                # quarantining (ADVICE r10).
-                except (tarfile.TarError, EOFError, OSError, zlib.error) as e:
-                    rows.append(
-                        {
-                            "archive": arch,
-                            "member": None,
-                            "n_bytes": None,
-                            "ok": False,
-                            "err": f"{type(e).__name__}: {e}"[:200],
-                            "text": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "archive", "member", "n_bytes", "ok", "err", "text",
-                ],
-            )
-
-    return blobs.mapInPandas(_extract, ARCHIVE_MEMBER_SCHEMA)
+    # zlib.error: gzip members with a corrupt (non-truncated) DEFLATE
+    # stream raise it directly from the decompressor, not wrapped in
+    # TarError/OSError — without it here one bad .tar.gz fails the whole
+    # executor task instead of quarantining.
+    return _archive_members(
+        spark, path, glob, max_member_bytes, _tar_members,
+        (tarfile.TarError, EOFError, OSError, zlib.error),
+    )
 
 
 def read_zip_corpus(
@@ -239,80 +239,7 @@ def read_zip_corpus(
     of failing the task. CRC mismatches surface as BadZipFile from
     zipfile's read path and quarantine the same way.
     """
-    import io
-    import zipfile
-    import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    blobs = reader.load(path).select("path", "content")
-
-    def _extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                arch = r["path"]
-                try:
-                    with zipfile.ZipFile(
-                        io.BytesIO(bytes(r["content"]))
-                    ) as zf:
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            if info.file_size > max_member_bytes:
-                                rows.append(
-                                    {
-                                        "archive": arch,
-                                        "member": info.filename,
-                                        "n_bytes": int(info.file_size),
-                                        "ok": False,
-                                        "err": "member exceeds max_member_bytes",
-                                        "text": None,
-                                    }
-                                )
-                                continue
-                            raw = zf.read(info)
-                            try:
-                                text, err = raw.decode("utf-8"), None
-                            except UnicodeDecodeError:
-                                text = raw.decode("utf-8", errors="replace")
-                                err = "lossy utf-8 decode"
-                            rows.append(
-                                {
-                                    "archive": arch,
-                                    "member": info.filename,
-                                    "n_bytes": int(info.file_size),
-                                    "ok": True,
-                                    "err": err,
-                                    "text": text,
-                                }
-                            )
-                except (
-                    zipfile.BadZipFile,
-                    zipfile.LargeZipFile,
-                    EOFError,
-                    OSError,
-                    zlib.error,
-                ) as e:
-                    rows.append(
-                        {
-                            "archive": arch,
-                            "member": None,
-                            "n_bytes": None,
-                            "ok": False,
-                            "err": f"{type(e).__name__}: {e}"[:200],
-                            "text": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "archive", "member", "n_bytes", "ok", "err", "text",
-                ],
-            )
-
-    return blobs.mapInPandas(_extract, ARCHIVE_MEMBER_SCHEMA)
+    return _archive_members(
+        spark, path, glob, max_member_bytes, _zip_members,
+        (zipfile.BadZipFile, zipfile.LargeZipFile, EOFError, OSError, zlib.error),
+    )

@@ -10,7 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-from maap_data_pipelines_spark.session import last_job_id  # noqa: E402,F401
+from maap_data_pipelines_spark.session import codegen_compiles, last_job_id  # noqa: E402,F401
 
 
 def _own_nodes(scope):

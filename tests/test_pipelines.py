@@ -175,6 +175,36 @@ def test_discover_from_inventory_event(spark, tmp_path):
     assert by_url[nc].assets is None
 
 
+def test_discover_from_inventory_event_runs_python_regex(spark, tmp_path):
+    """The inventory mode matches ``filename_regex`` with Python's
+    ``re.match``, as the s3 mode does: a ``(?P<name>...)`` group, which
+    Java's regex dialect rejects, filters the rows, and a pattern Python
+    cannot compile raises while the frame is built."""
+    import re
+
+    import pytest
+
+    from maap_data_pipelines_spark.pipelines import discover_from_inventory_event
+
+    csv = tmp_path / "inv.csv"
+    csv.write_text(
+        "s3_path\n"
+        "s3://b/a.tif\n"
+        "s3://b/a.tif.aux\n"
+        "s3://b/sub/c.tif\n"
+        "s3://b/d.nc\n"
+    )
+    event = {"collection": "c", "filename_regex": r"s3://b/(?P<stem>\w+)\.tif$"}
+    rows = discover_from_inventory_event(spark, event, str(csv)).collect()
+    assert [(r.remote_fileurl, r.product_id) for r in rows] == [
+        ("s3://b/a.tif", "a")
+    ]
+    with pytest.raises(re.error):
+        discover_from_inventory_event(
+            spark, {**event, "filename_regex": "("}, str(csv)
+        )
+
+
 def test_discover_from_cmr_event_multi_asset(spark, tmp_path):
     import json as _json
 

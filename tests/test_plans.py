@@ -11,7 +11,7 @@ import json
 import re
 from pathlib import Path
 
-from conftest import last_job_id
+from conftest import codegen_compiles, last_job_id
 from maap_data_pipelines_spark import registry
 
 _ROOT = Path(__file__).resolve().parent.parent
@@ -641,3 +641,27 @@ def test_build_job_budgets(spark, sf_dir):
         if jobs > budget:
             over[key] = (jobs, budget)
     assert not over, over
+
+
+# The perfbench ``query_mix`` keys, re-run in one session as the bench
+# re-runs them. Every class a warm pass needs is in the codegen cache
+# (``session.get_spark``: a cache sized past the working set, and class
+# names without AQE's completion-order stage ids), so the third pass
+# compiles nothing.
+_QUERY_MIX_KEYS = (
+    "curation_yield_report",
+    "dedup_token_savings",
+    "q3_shipping_priority",
+    "events_sessionize",
+)
+
+
+def test_warm_rerun_compiles_nothing(spark, sf_dir):
+    qs = registry.queries()
+    compiled = []
+    for _ in range(3):
+        before = codegen_compiles(spark)
+        for key in _QUERY_MIX_KEYS:
+            qs[key](spark, sf_dir).collect()
+        compiled.append(codegen_compiles(spark) - before)
+    assert compiled[2] == 0, compiled

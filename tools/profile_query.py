@@ -12,7 +12,10 @@ order. Each run of a key prints one JSON line:
   checkpoints, gate counts, schema inference) and driver-to-JVM py4j
   commands sent (every ``Column`` built one call at a time is one or more
   round trips);
-* ``exec_s`` / ``exec_jobs`` — executing it with ``toArrow()``.
+* ``exec_s`` / ``exec_jobs`` — executing it with ``toArrow()``;
+* ``build_compiles`` / ``exec_compiles`` — generated classes Janino
+  compiled in each phase (``session.codegen_compiles``: codegen-cache
+  misses; a warm re-run of a key reads 0).
 
 ``--plan OUT_DIR`` also writes each key's formatted plan to
 ``OUT_DIR/<key>.txt`` with the per-session numbering normalised
@@ -44,7 +47,11 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from maap_data_pipelines_spark import registry  # noqa: E402
-from maap_data_pipelines_spark.session import get_spark, last_job_id  # noqa: E402
+from maap_data_pipelines_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+    last_job_id,
+)
 
 
 class _Py4jCounter:
@@ -83,20 +90,23 @@ def _normalise_plan(text: str) -> str:
 
 def profile(spark, fn, sf: str, py4j: _Py4jCounter) -> dict:
     """One build span and one execute span of a registered query."""
-    j0, c0, t0 = last_job_id(spark), py4j.n, time.perf_counter()
+    k0, j0 = codegen_compiles(spark), last_job_id(spark)
+    c0, t0 = py4j.n, time.perf_counter()
     df = fn(spark, sf)
     t1 = time.perf_counter()
     c1 = py4j.n
-    j1 = last_job_id(spark)
+    j1, k1 = last_job_id(spark), codegen_compiles(spark)
     df.toArrow()
     t2 = time.perf_counter()
-    j2 = last_job_id(spark)
+    j2, k2 = last_job_id(spark), codegen_compiles(spark)
     return {
         "build_s": round(t1 - t0, 3),
         "build_jobs": j1 - j0,
         "build_py4j": c1 - c0,
+        "build_compiles": k1 - k0,
         "exec_s": round(t2 - t1, 3),
         "exec_jobs": j2 - j1,
+        "exec_compiles": k2 - k1,
     }
 
 
@@ -140,7 +150,8 @@ def main() -> int:
                 totals["errors"] += 1
                 continue
             totals["zero_job_builds"] += rec["build_jobs"] == 0
-            for k in ("build_s", "build_jobs", "build_py4j", "exec_s", "exec_jobs"):
+            for k in ("build_s", "build_jobs", "build_py4j", "build_compiles",
+                      "exec_s", "exec_jobs", "exec_compiles"):
                 totals[k] = round(totals.get(k, 0) + rec[k], 3)
     print(json.dumps({"totals": totals}), flush=True)
     return 0
